@@ -481,3 +481,249 @@ def test_hard_kill_resume_end_to_end(spark, tmp_path):
         return sorted(tuple(str(x) for x in r) for r in df.collect())
 
     assert _all_rows(killed_out) == _all_rows(clean_out)
+
+
+def _pending_buckets(runner, shapes):
+    done = runner.completed()
+    return [
+        runner._bucket(runner._resolve_token(s.shape_id))
+        for s in shapes
+        if s.shape_id not in done
+    ]
+
+
+class _FailingWriteEngine(ValidationEngine):
+    """Its violations relation raises inside the write's tasks when a
+    row of `fail_shape` reaches it — a failure before the job commits."""
+
+    def __init__(self, spark, fail_shape, **kw):
+        super().__init__(spark, **kw)
+        self.fail_shape = fail_shape
+
+    def validate(self, df, shapes, key_cols, **kw):
+        from pyspark.sql import functions as F
+
+        rep = super().validate(df, shapes, key_cols, **kw)
+        rep.violations = rep.violations.where(
+            F.when(
+                F.col("shape_id") == self.fail_shape,
+                F.raise_error(F.lit("injected write failure")),
+            ).otherwise(F.lit(True))
+        )
+        return rep
+
+
+def test_kill_inside_fused_write_resumes_identical(spark, tdf, tmp_path):
+    """Kill point (a): the fused write fails before its job commits —
+    no manifest of that pass is published, and the resume equals an
+    uninterrupted run."""
+    shapes = transcript_shapes()
+    keys = ["conv_id", "turn_idx"]
+    ref_rows = _rows(
+        CheckpointedRunner(_engine(spark), str(tmp_path / "full")).run(tdf, shapes, keys)
+    )
+
+    out = str(tmp_path / "partial")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        CheckpointedRunner(_engine(spark), out).run(tdf, shapes, keys, fail_after=2)
+    failing = _FailingWriteEngine(
+        spark,
+        "http://xpshacl.org/spark#TurnSeqShape",  # pending, has violations
+        dims={"roles": roles_dim(spark), "tools": tools_dim(spark)},
+    )
+    runner = CheckpointedRunner(failing, out)
+    with pytest.raises(Exception, match="injected write failure"):
+        runner.run(tdf, shapes, keys)
+    assert len(runner.completed()) == 2
+
+    resumed = CheckpointedRunner(_engine(spark), out).run(tdf, shapes, keys)
+    assert _rows(resumed) == ref_rows
+    assert len(runner.completed()) == len(shapes)
+
+
+def test_kill_after_write_before_publish_resumes_identical(spark, tdf, tmp_path):
+    """Kill point (b): the write committed every bucket but no manifest
+    was published — all shapes re-run and their buckets are replaced."""
+    shapes = transcript_shapes()
+    keys = ["conv_id", "turn_idx"]
+    ref_rows = _rows(
+        CheckpointedRunner(_engine(spark), str(tmp_path / "full")).run(tdf, shapes, keys)
+    )
+
+    out = str(tmp_path / "partial")
+    runner = CheckpointedRunner(_engine(spark), out)
+    with pytest.raises(RuntimeError, match="simulated failure after 0"):
+        runner.run(tdf, shapes, keys, fail_after=0)
+    assert runner.completed() == {}
+    assert all(os.path.isdir(b) for b in _pending_buckets(runner, shapes))
+
+    resumed = CheckpointedRunner(_engine(spark), out).run(tdf, shapes, keys)
+    assert _rows(resumed) == ref_rows
+
+
+def test_stale_rows_in_pending_bucket_do_not_survive(spark, tdf, tmp_path):
+    """Kill point (d): rows a killed run left in a pending shape's
+    bucket — including a shape that has no violations, which the
+    partitioned write gives no partition to replace — are gone after
+    the resume."""
+    import glob
+    import shutil
+
+    shapes = transcript_shapes()
+    keys = ["conv_id", "turn_idx"]
+    full = CheckpointedRunner(_engine(spark), str(tmp_path / "full"))
+    ref_rows = _rows(full.run(tdf, shapes, keys))
+    counts = {sid: rec["n_violations"] for sid, rec in full.completed().items()}
+    assert 0 in counts.values()  # the suite has a conforming shape here
+
+    out = str(tmp_path / "partial")
+    runner = CheckpointedRunner(_engine(spark), out)
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        runner.run(tdf, shapes, keys, fail_after=2)
+    stale = glob.glob(
+        os.path.join(list(runner.completed().values())[0]["output_path"], "*.parquet")
+    )
+    assert stale
+    pending = _pending_buckets(runner, shapes)
+    for bucket in pending:
+        os.makedirs(bucket, exist_ok=True)
+        shutil.copy(stale[0], os.path.join(bucket, "part-stale.parquet"))
+
+    resumed = CheckpointedRunner(_engine(spark), out).run(tdf, shapes, keys)
+    assert _rows(resumed) == ref_rows
+    for bucket in pending:
+        assert not os.path.exists(os.path.join(bucket, "part-stale.parquet"))
+
+
+def test_fused_run_job_count_and_exact_counts(spark, tdf, tmp_path):
+    """The whole suite checkpoints in one compile and one write: at most
+    8 Spark jobs, and each manifest's n_violations (observed on the
+    write, never read back) equals the rows in its bucket."""
+    from pyspark.sql import types as T
+
+    sc = spark.sparkContext
+    group = f"ckpt-jobs-{tmp_path.name}"
+    runner = CheckpointedRunner(_engine(spark), str(tmp_path / "out"))
+    sc.setJobGroup(group, "fused checkpoint run")
+    try:
+        runner.run(tdf, transcript_shapes(), ["conv_id", "turn_idx"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+
+    done = runner.completed()
+    assert len(done) == len(transcript_shapes())
+    for rec in done.values():
+        schema = T.StructType.fromJson(json.loads(rec["schema"]))
+        n = spark.read.schema(schema).parquet(rec["output_path"]).count()
+        assert rec["n_violations"] == n
+
+
+def test_all_shapes_conform(spark, tmp_path):
+    """A suite where every shape conforms: the write produces no
+    partition at all, yet every shape gets an empty bucket and a
+    manifest, and report() / a resume / --replay read an empty relation
+    with the recorded schema."""
+    from xpshacl_spark import runner as cli
+    from xpshacl_spark.shapes import MinInclusive, NotNull, Shape
+
+    inp = str(tmp_path / "in.parquet")
+    spark.createDataFrame(
+        [(1, 5, "a"), (2, 7, "b")], "id long, v long, s string"
+    ).write.parquet(inp)
+    shapes = [
+        Shape("pos", (MinInclusive("v", 0),)),
+        Shape("present", (NotNull("s"),)),
+    ]
+    out = str(tmp_path / "out")
+    runner = CheckpointedRunner(ValidationEngine(spark), out)
+    rep = runner.run(spark.read.parquet(inp), shapes, ["id"])
+    assert rep.violations.count() == 0
+    compiled = ValidationEngine(spark).validate(
+        spark.read.parquet(inp), shapes, ["id"]
+    ).violations
+    assert [(f.name, f.dataType) for f in rep.violations.schema] == [
+        (f.name, f.dataType) for f in compiled.schema
+    ]
+    done = runner.completed()
+    assert sorted(done) == ["pos", "present"]
+    for rec in done.values():
+        assert rec["n_violations"] == 0
+        assert os.listdir(rec["output_path"]) == []
+
+    again = CheckpointedRunner(ValidationEngine(spark), out)
+    assert again.run(spark.read.parquet(inp), shapes, ["id"]).violations.count() == 0
+    assert again.completed() == done
+
+    rc = cli.main(
+        ["--replay", out, "--output", str(tmp_path / "replayed"), "--key-cols", "id"]
+    )
+    assert rc == 0
+
+
+def test_report_infers_schema_for_manifests_without_one(spark, tdf, tmp_path):
+    """Manifests published before the schema was recorded still read:
+    report() falls back to inferring it from the bucket files."""
+    shapes = transcript_shapes()[:2]
+    keys = ["conv_id", "turn_idx"]
+    runner = CheckpointedRunner(_engine(spark), str(tmp_path / "out"))
+    ref_rows = _rows(runner.run(tdf, shapes, keys))
+    assert all(rec["n_violations"] > 0 for rec in runner.completed().values())
+    for fn in os.listdir(runner.manifest_dir):
+        path = os.path.join(runner.manifest_dir, fn)
+        with open(path) as f:
+            rec = json.load(f)
+        del rec["schema"]
+        with open(path, "w") as f:
+            json.dump(rec, f)
+    assert _rows(runner.report(keys)) == ref_rows
+
+
+def test_incremental_groups_shapes_into_one_write(spark, tmp_path):
+    """Shapes sharing a new-file set ride one validate and one write;
+    each still lands in its own delta_<id> subdirectory (a conforming
+    one as an empty directory), and the relation equals a full run's."""
+    from xpshacl_spark.shapes import MaxLength, MinInclusive, NotNull, Shape
+
+    inp = str(tmp_path / "in.parquet")
+    out = str(tmp_path / "out")
+    shapes = [
+        Shape("row", (MinInclusive("turn_idx", 0), NotNull("text"))),
+        Shape("len", (MaxLength("text", 10**6),)),  # conforms
+    ]
+    keys = ["conv_id", "turn_idx"]
+    transcripts(spark, n_convs=30, seed=1).coalesce(1).write.mode(
+        "append"
+    ).parquet(inp)
+    runner = CheckpointedRunner(ValidationEngine(spark), out)
+    runner.run(spark.read.parquet(inp), shapes, keys)
+    transcripts(spark, n_convs=20, seed=2).coalesce(1).write.mode(
+        "append"
+    ).parquet(inp)
+
+    sc = spark.sparkContext
+    group = f"ckpt-inc-{tmp_path.name}"
+    sc.setJobGroup(group, "incremental checkpoint run")
+    try:
+        rep = runner.run_incremental(inp, shapes, keys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # two footer reads of the input plus ONE write; a per-shape loop
+    # would run a write and a read-back count for each shape
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    done = runner.completed()
+    ids = {rec["deltas"][0]["delta_id"] for rec in done.values()}
+    assert len(ids) == 1
+    delta = f"delta_{ids.pop()}"
+    assert os.path.isdir(os.path.join(done["row"]["output_path"], delta))
+    assert os.listdir(os.path.join(done["len"]["output_path"], delta)) == []
+    assert done["len"]["n_violations"] == 0
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    full = ValidationEngine(spark).validate(
+        spark.read.parquet(inp), shapes, key_cols=keys
+    )
+    assert sorted(map(repr, rep.violations.collect())) == sorted(
+        map(repr, full.violations.collect())
+    )
+    assert n_jobs <= 3, n_jobs

@@ -149,6 +149,35 @@ def test_cache_persistence_roundtrip(sig, tmp_path):
     assert c2.size() == 9
 
 
+def test_cache_kill_mid_save_keeps_previous(sig, tmp_path, monkeypatch):
+    """A save that dies halfway through writing leaves the previous
+    cache file loadable and no temporary file behind."""
+    import os
+
+    import pandas as pd
+
+    p = str(tmp_path / "cache.parquet")
+    c = ExplanationCache(p)
+    c.add_violation(sig, {"natural_language_explanation": "old"}, "en")
+    c.save()
+
+    def torn_write(self, path, **kw):
+        with open(path, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise KeyboardInterrupt("killed mid-save")
+
+    c.add_violation(sig, {"natural_language_explanation": "new"}, "de")
+    monkeypatch.setattr(pd.DataFrame, "to_parquet", torn_write)
+    with pytest.raises(KeyboardInterrupt):
+        c.save()
+    monkeypatch.undo()
+
+    back = ExplanationCache(p)
+    assert back.get_explanation(sig, "en")["natural_language_explanation"] == "old"
+    assert not back.has_violation(sig, "de")
+    assert os.listdir(tmp_path) == ["cache.parquet"]
+
+
 # ---------------------------------------------------------------------------
 # justification trees (reference: tests/test_justification_tree_builder.py)
 # ---------------------------------------------------------------------------

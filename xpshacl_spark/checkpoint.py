@@ -3,17 +3,21 @@
 The reference's report-replay mode (/root/reference/src/main.py:75-114)
 is its only resume seam; the north rule asks for real checkpointing:
 per-shape completion records with lineage + metrics, and resume that
-skips completed work and reproduces byte-identical output.
+skips completed work and reproduces the same violations relation.
 
-Design: the unit of checkpointing is the SHAPE. Each shape's violations
-are written to `<out>/violations/shape_bucket=<token>/` (an overwrite of
-that directory is idempotent), and only after a successful write is the
-manifest entry `<out>/manifest/<token>.json` created — so a kill at any
-point leaves either no entry (shape re-runs, overwrite is clean) or a
-complete entry (shape is skipped). Per-entry metrics record input
-lineage (source files), partition counts, violation counts, and wall
-time. Shapes can be grouped into batches to amortize input scans while
-keeping the same guarantee at batch granularity.
+Design: the unit of checkpointing is the SHAPE, the unit of work is ONE
+fused write. A run compiles every pending (not yet checkpointed) shape
+into one plan with one `validate`, and writes it once, partitioned by a
+`shape_bucket` column, to `<out>/violations/shape_bucket=<token>/`.
+Per-shape violation counts come from an Observation on that write, so
+nothing is read back. Only after the write commits is each shape's
+manifest entry `<out>/manifest/<token>.json` published, one atomic
+rename at a time. A kill at any point leaves every shape either without
+an entry (it is pending: the next run deletes its bucket and writes it
+again) or with a complete entry (it is skipped). Per-entry metrics
+record input lineage (source files), partition count, violation count,
+the violations schema and `wall_sec`, the wall time of the shared
+compile-and-write the shape rode in.
 """
 
 from __future__ import annotations
@@ -22,11 +26,15 @@ import hashlib
 import json
 import os
 import re
+import shutil
 import time
+import uuid
+from itertools import chain
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from xpshacl_spark.compiler import ValidationEngine, ValidationReport
 from xpshacl_spark.shapes import Shape
@@ -113,15 +121,16 @@ class CheckpointedRunner:
                     return legacy
         return token
 
+    def _bucket(self, token: str) -> str:
+        return os.path.join(self.violations_dir, f"shape_bucket={token}")
+
     def _prune_orphan_deltas(self, token: str, recorded: set[str]) -> None:
         """Delete delta_* subdirs of a shape bucket that the manifest
         does not record — leftovers of a run killed between the delta
         write and its manifest publish. Their files will be re-covered
         by the next delta; leaving them would double-count violations in
         report() (which reads the bucket recursively)."""
-        import shutil
-
-        bucket = os.path.join(self.violations_dir, f"shape_bucket={token}")
+        bucket = self._bucket(token)
         if not os.path.isdir(bucket):
             return
         for fn in os.listdir(bucket):
@@ -141,6 +150,45 @@ class CheckpointedRunner:
             json.dump(rec, f, indent=2, sort_keys=True)
         os.replace(tmp, path)  # atomic publish
 
+    # -- the one write path ----------------------------------------------
+
+    def _write_buckets(
+        self, violations: DataFrame, tokens: dict[str, str], dest: str
+    ) -> dict[str, int]:
+        """Write `violations` once, partitioned as
+        `<dest>/shape_bucket=<tokens[shape_id]>/`, and return the
+        per-shape row counts observed on that write (no read-back job).
+
+        Dynamic partition overwrite replaces only the buckets this write
+        produces and stages its files under a per-job `.spark-staging-*`
+        directory until the job commits, so a killed write never leaves
+        task files inside a bucket. A shape without rows gets no
+        partition from the writer; its bucket is created empty here so
+        every shape has one."""
+        sids = list(tokens)
+        obs = Observation(f"checkpoint_{uuid.uuid4().hex}")
+        bucket = F.create_map(*(F.lit(x) for x in chain(*tokens.items())))[
+            F.col("shape_id")
+        ]
+        (
+            violations.observe(
+                obs,
+                *(
+                    F.count_if(F.col("shape_id") == sid).alias(f"n{i}")
+                    for i, sid in enumerate(sids)
+                ),
+            )
+            .withColumn("shape_bucket", bucket)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shape_bucket")
+            .parquet(dest)
+        )
+        observed = obs.get
+        for token in tokens.values():
+            os.makedirs(os.path.join(dest, f"shape_bucket={token}"), exist_ok=True)
+        return {sid: int(observed[f"n{i}"]) for i, sid in enumerate(sids)}
+
     # -- run/resume --------------------------------------------------------
 
     def run(
@@ -150,10 +198,20 @@ class CheckpointedRunner:
         key_cols: Sequence[str],
         fail_after: Optional[int] = None,
     ) -> ValidationReport:
-        """Evaluate shapes, skipping those already checkpointed.
+        """Evaluate every shape not yet checkpointed in one fused pass.
 
-        fail_after=k raises after k shapes complete (test hook for the
-        kill/resume invariant).
+        Already-checkpointed shapes are skipped (after a lineage check:
+        a checkpoint of a different input raises). The pending shapes are
+        compiled with ONE `validate`, written with ONE partitioned write
+        (see `_write_buckets`), and then each gets its manifest published
+        atomically. Every pending shape's bucket is deleted before the
+        write, so rows a killed run left there cannot survive into the
+        relation. A manifest's `wall_sec` is the wall time of the shared
+        compile-and-write the shape rode in.
+
+        fail_after=k raises once k manifests of this run are published
+        (k=0: after the write commits, before any publish) — the test
+        hook for the kill/resume invariant.
         """
         done = self.completed()
         try:
@@ -164,50 +222,62 @@ class CheckpointedRunner:
             lineage = sorted(df.inputFiles()) or None
         except Exception:
             lineage = None
-        n_input_parts = df.rdd.getNumPartitions()
-        completed_now = 0
 
+        pending: list[Shape] = []
         for shape in shapes:
             rec = done.get(shape.shape_id)
-            if rec is not None:
-                recorded = rec.get("input_files")
-                if recorded and lineage and sorted(recorded) != lineage:
-                    # skipping here would serve the OLD run's violations
-                    # as if they covered the new input
-                    raise ValueError(
-                        f"shape {shape.shape_id!r} is checkpointed against "
-                        f"different input lineage ({len(recorded)} recorded "
-                        f"vs {len(lineage)} current files); use "
-                        "run_incremental() for appended files, or a fresh "
-                        "output_dir for a changed input"
-                    )
+            if rec is None:
+                pending.append(shape)
                 continue
-            t0 = time.monotonic()
-            rep = self.engine.validate(df, [shape], key_cols=key_cols)
-            token = self._resolve_token(shape.shape_id)
-            out_path = os.path.join(self.violations_dir, f"shape_bucket={token}")
-            # the write is the checkpoint: resume-level determinism is at
-            # the RELATION level (same rows), not file bytes — asserted by
-            # the kill/resume pytest invariant
-            rep.violations.write.mode("overwrite").parquet(out_path)
-            n = self.spark.read.parquet(out_path).count()
+            recorded = rec.get("input_files")
+            if recorded and lineage and sorted(recorded) != lineage:
+                # skipping here would serve the OLD run's violations
+                # as if they covered the new input
+                raise ValueError(
+                    f"shape {shape.shape_id!r} is checkpointed against "
+                    f"different input lineage ({len(recorded)} recorded "
+                    f"vs {len(lineage)} current files); use "
+                    "run_incremental() for appended files, or a fresh "
+                    "output_dir for a changed input"
+                )
+        if not pending:
+            return self.report(key_cols)
+
+        tokens = {s.shape_id: self._resolve_token(s.shape_id) for s in pending}
+        for token in tokens.values():
+            shutil.rmtree(self._bucket(token), ignore_errors=True)
+        t0 = time.monotonic()
+        rep = self.engine.validate(df, pending, key_cols=key_cols)
+        # the write is the checkpoint: resume-level determinism is at
+        # the RELATION level (same rows), not file bytes — asserted by
+        # the kill/resume pytest invariant
+        counts = self._write_buckets(rep.violations, tokens, self.violations_dir)
+        wall = round(time.monotonic() - t0, 3)
+        n_input_parts = df.rdd.getNumPartitions()
+        schema = rep.violations.schema.json()
+
+        def _maybe_fail(published: int) -> None:
+            if fail_after is not None and published >= fail_after:
+                raise RuntimeError(f"simulated failure after {fail_after} shapes")
+
+        _maybe_fail(0)
+        for published, (sid, token) in enumerate(tokens.items(), 1):
             self._write_manifest(
                 {
                     "run_id": self.run_id,
-                    "shape_id": shape.shape_id,
+                    "shape_id": sid,
                     "status": "completed",
-                    "n_violations": n,
+                    "n_violations": counts[sid],
                     "n_input_partitions": n_input_parts,
                     "input_files": lineage,
-                    "wall_sec": round(time.monotonic() - t0, 3),
-                    "output_path": out_path,
+                    "schema": schema,
+                    "wall_sec": wall,
+                    "output_path": self._bucket(token),
                     "finished_unix": time.time(),
                 },
                 token=token,
             )
-            completed_now += 1
-            if fail_after is not None and completed_now >= fail_after:
-                raise RuntimeError(f"simulated failure after {fail_after} shapes")
+            _maybe_fail(published)
 
         return self.report(key_cols)
 
@@ -228,13 +298,16 @@ class CheckpointedRunner:
         force=True (legitimate when the table layout guarantees group
         locality per file, e.g. writes bucketed by conv_id).
 
-        Each delta writes to its own subdirectory of the shape bucket
-        (overwrite-idempotent per delta; a kill re-runs just the delta)
-        and the manifest entry's lineage/metrics are extended — so
-        `report()` still assembles the complete relation.
+        Shapes are grouped by their new-file set (normally one group).
+        Each group is compiled with one `validate` and written with the
+        same fused write as `run()`, into `<out>/_staging`; each shape's
+        bucket is then moved into its own delta subdirectory
+        `shape_bucket=<token>/delta_<id>/` and the manifest entry's
+        lineage/metrics are extended — so `report()` still assembles the
+        complete relation.
 
         Crash safety: the manifest is the source of truth. A kill
-        between a delta write and its manifest publish leaves an ORPHAN
+        between a delta move and its manifest publish leaves an ORPHAN
         delta directory whose files the retry will re-cover (the retry's
         new-file set, and hence its delta_id, may differ if more files
         landed meanwhile) — so before writing, any delta_* subdirectory
@@ -254,10 +327,9 @@ class CheckpointedRunner:
                     f"group-per-file locality): {bad}"
                 )
 
-        import hashlib
-
         current = sorted(self.spark.read.parquet(input_path).inputFiles())
         done = self.completed()
+        groups: dict[tuple[str, ...], list[Shape]] = {}
         for shape in shapes:
             rec = done.get(shape.shape_id)
             if rec is not None and not rec.get("input_files"):
@@ -269,75 +341,99 @@ class CheckpointedRunner:
                     "file-backed input or use a fresh output_dir"
                 )
             seen = set(rec.get("input_files", [])) if rec else set()
-            new = [f for f in current if f not in seen]
-            if not new:
-                continue
-            token = self._resolve_token(shape.shape_id)
-            self._prune_orphan_deltas(
-                token, {d["delta_id"] for d in (rec or {}).get("deltas", [])}
-            )
+            new = tuple(f for f in current if f not in seen)
+            if new:
+                groups.setdefault(new, []).append(shape)
+
+        staging = os.path.join(self.output_dir, "_staging")
+        for new, group in groups.items():
+            tokens = {s.shape_id: self._resolve_token(s.shape_id) for s in group}
+            for sid, token in tokens.items():
+                self._prune_orphan_deltas(
+                    token,
+                    {d["delta_id"] for d in done.get(sid, {}).get("deltas", [])},
+                )
             t0 = time.monotonic()
             # basePath keeps hive-style partition columns that a plain
             # leaf-file read would drop (shapes may reference them)
             delta_df = (
                 self.spark.read.option("basePath", input_path).parquet(*new)
             )
-            rep = self.engine.validate(delta_df, [shape], key_cols=key_cols)
+            rep = self.engine.validate(delta_df, group, key_cols=key_cols)
             delta_id = hashlib.md5("|".join(new).encode()).hexdigest()[:12]
-            # plain subdir name (no '='): the shape bucket must not look
-            # like a partitioned layout — report() reads it with
-            # recursiveFileLookup, which skips partition discovery
-            out_path = os.path.join(
-                self.violations_dir, f"shape_bucket={token}", f"delta_{delta_id}"
-            )
-            rep.violations.write.mode("overwrite").parquet(out_path)
-            n = self.spark.read.parquet(out_path).count()
-            deltas = (rec.get("deltas", []) if rec else []) + [
-                {
-                    "delta_id": delta_id,
-                    "n_files": len(new),
-                    "n_violations": n,
-                    "wall_sec": round(time.monotonic() - t0, 3),
-                }
-            ]
-            self._write_manifest(
-                {
-                    "run_id": self.run_id,
-                    "shape_id": shape.shape_id,
-                    "status": "completed",
-                    "n_violations": (rec["n_violations"] if rec else 0) + n,
-                    "n_input_partitions": delta_df.rdd.getNumPartitions(),
-                    "input_files": sorted(seen | set(new)),
-                    "deltas": deltas,
-                    # cumulative across deltas (per-delta time is in
-                    # the deltas list), plus the initial full run if any
-                    "wall_sec": round(
-                        (rec.get("wall_sec", 0.0) if rec else 0.0)
-                        + (time.monotonic() - t0),
-                        3,
-                    ),
-                    "output_path": os.path.join(
-                        self.violations_dir, f"shape_bucket={token}"
-                    ),
-                    "finished_unix": time.time(),
-                },
-                token=token,
-            )
+            # a killed run may have left buckets here, and a shape with
+            # no rows this time gets no partition that would replace its
+            shutil.rmtree(staging, ignore_errors=True)
+            counts = self._write_buckets(rep.violations, tokens, staging)
+            for token in tokens.values():
+                # plain subdir name (no '='): the shape bucket must not
+                # look like a partitioned layout — report() reads it with
+                # recursiveFileLookup, which skips partition discovery
+                out_path = os.path.join(self._bucket(token), f"delta_{delta_id}")
+                os.makedirs(self._bucket(token), exist_ok=True)
+                os.replace(
+                    os.path.join(staging, f"shape_bucket={token}"), out_path
+                )
+            wall = time.monotonic() - t0
+            n_input_parts = delta_df.rdd.getNumPartitions()
+            schema = rep.violations.schema.json()
+            for sid, token in tokens.items():
+                rec = done.get(sid)
+                n = counts[sid]
+                deltas = (rec.get("deltas", []) if rec else []) + [
+                    {
+                        "delta_id": delta_id,
+                        "n_files": len(new),
+                        "n_violations": n,
+                        "wall_sec": round(wall, 3),
+                    }
+                ]
+                self._write_manifest(
+                    {
+                        "run_id": self.run_id,
+                        "shape_id": sid,
+                        "status": "completed",
+                        "n_violations": (rec["n_violations"] if rec else 0) + n,
+                        "n_input_partitions": n_input_parts,
+                        "input_files": sorted(
+                            set(rec["input_files"] if rec else ()) | set(new)
+                        ),
+                        "deltas": deltas,
+                        "schema": schema,
+                        # cumulative across deltas (per-delta time is in
+                        # the deltas list), plus the initial full run if any
+                        "wall_sec": round(
+                            (rec.get("wall_sec", 0.0) if rec else 0.0) + wall, 3
+                        ),
+                        "output_path": self._bucket(token),
+                        "finished_unix": time.time(),
+                    },
+                    token=token,
+                )
+        shutil.rmtree(staging, ignore_errors=True)
         return self.report(key_cols)
 
     def report(self, key_cols: Sequence[str]) -> ValidationReport:
-        """Assemble the full violations relation from checkpointed parts."""
+        """Assemble the full violations relation from checkpointed parts.
+
+        The violations schema recorded in the manifests is used for the
+        read, so buckets of conforming shapes (empty directories) need no
+        file to infer it from and the read runs no inference job.
+        Manifests written before the schema was recorded fall back to
+        inference."""
         done = self.completed()
         if not done:
             raise RuntimeError("no completed shapes in checkpoint")
         paths = [rec["output_path"] for rec in done.values()]
+        schemas = {rec.get("schema") for rec in done.values()}
+        reader = self.spark.read.option("mergeSchema", "false")
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schemas.pop())))
         df = (
-            self.spark.read.option("mergeSchema", "false")
             # full-run files sit at the bucket root and incremental
             # deltas in delta_* subdirs; recursive lookup reads both and
             # disables partition discovery over the subdir names
-            .option("recursiveFileLookup", "true")
-            .parquet(*paths)
+            reader.option("recursiveFileLookup", "true").parquet(*paths)
         )
         metrics = {
             "n_shapes_completed": len(done),

@@ -62,11 +62,22 @@ class ExplanationCache:
     # -- persistence ----------------------------------------------------
 
     def save(self) -> None:
-        """Single serialize per run (violation_kg.py:59-66 / main.py:213-216)."""
+        """Single serialize per run (violation_kg.py:59-66 / main.py:213-216).
+
+        Written to a temporary file in the same directory and renamed
+        over `path`, so a kill mid-save leaves the previous cache
+        loadable instead of a torn file."""
         if not self.path:
             return
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        self._df.to_parquet(self.path, index=False)
+        tmp = f"{self.path}.{os.getpid()}.tmp"
+        try:
+            self._df.to_parquet(tmp, index=False)
+            os.replace(tmp, self.path)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     def load(self) -> None:
         if self.path and os.path.exists(self.path):

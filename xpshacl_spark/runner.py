@@ -16,7 +16,7 @@ locally: `python -m xpshacl_spark.runner ...`):
   --cache PATH           explanation cache parquet
   --languages en,de      explanation languages
   --replay DIR           skip validation; run explanation stages over an
-                         existing violations output (reference report-
+                         existing checkpointed --output (reference report-
                          replay mode, /root/reference/src/main.py:75-114)
   --input-report F.ttl   skip validation; replay a STANDARD SHACL
                          validation-report Turtle file (pyshacl/rdflib
@@ -244,10 +244,10 @@ def main(argv=None) -> int:
         )
     elif args.replay:
         df = None
-        violations = spark.read.option("recursiveFileLookup", "true").parquet(
-            f"{args.replay}/violations"
-        )
-        report = ValidationReport(violations, key_cols)
+        # the checkpoint's own reader: only shapes with a published
+        # manifest, with the recorded schema (conforming shapes leave
+        # empty buckets, nothing to infer a schema from)
+        report = CheckpointedRunner(engine, args.replay).report(key_cols)
     elif args.incremental:
         if not args.input:
             ap.error("--input is required with --incremental")
