@@ -20,11 +20,17 @@ def test_zip_contents_and_determinism(tmp_path):
         "xpshacl_spark/__init__.py",
         "xpshacl_spark/compiler.py",
         "xpshacl_spark/runner.py",
-        "xpshacl_spark/operators/dedup.py",
+        "xpshacl_spark/operators/profile.py",
         "xpshacl_spark/explain/signature.py",
     ):
         assert required in names, required
     assert not any(n.endswith((".pyc", ".pyo")) or "__pycache__" in n for n in names)
+    # no stale copy of a removed LLM-corpus operator module is packaged
+    for gone in (
+        "dedup", "multimodal", "text", "sample", "similarity",
+        "jpeg", "sessions", "packing", "ranges", "bucketing",
+    ):
+        assert f"xpshacl_spark/operators/{gone}.py" not in names, gone
 
 
 def test_zip_is_importable_via_zipimport(tmp_path):

@@ -4,7 +4,9 @@ The embedded fixture mirrors /root/reference/data/example_shapes.ttl
 (the reference README's worked example, README.md:174-216: resource1's
 hasAge=-20 violates sh:minInclusive 0); the data fixture is the flat
 tabular projection of data/example_data.ttl. When the reference files
-are present on disk, the same assertions run against them directly.
+are present on disk, the same assertions run against them directly;
+otherwise the file-level tests read tests/fixtures/, built from the
+same worked example.
 """
 
 import os
@@ -23,6 +25,15 @@ from xpshacl_spark.shapes_io import load_shapes
 from xpshacl_spark.shapes_ttl import import_ttl, shapes_from_ttl
 
 REF_TTL = "/root/reference/data/example_shapes.ttl"
+FIXTURE_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
+
+
+def example_file(name):
+    """The reference's data/<name> when it is on disk, else the in-repo
+    fixture built from the same README worked example."""
+    ref = os.path.join(os.path.dirname(REF_TTL), name)
+    return ref if os.path.exists(ref) else os.path.join(FIXTURE_DIR, name)
+
 
 EXAMPLE_SHAPES_TTL = """\
 @prefix sh: <http://www.w3.org/ns/shacl#> .
@@ -259,7 +270,7 @@ def test_rdf_data_table_from_reference_file(spark):
     the README worked example (README.md:174-216) — 4 violations."""
     from xpshacl_spark.rdf_data import align_to_shapes, read_rdf_table
 
-    df = read_rdf_table(spark, "/root/reference/data/example_data.ttl")
+    df = read_rdf_table(spark, example_file("example_data.ttl"))
     assert dict(df.dtypes) == {
         "id": "string", "rdf_type": "string", "hasAge": "bigint",
         "hasName": "string",
@@ -268,7 +279,7 @@ def test_rdf_data_table_from_reference_file(spark):
     assert rows["resource1"]["hasAge"] == -20
     assert rows["resource3"]["hasName"] == "Example Org"
 
-    shapes = load_shapes("/root/reference/data/example_shapes.ttl")
+    shapes = load_shapes(example_file("example_shapes.ttl"))
     # the graph has no foundedOn triple at all; alignment adds the
     # absent-everywhere column so SHACL absence semantics apply
     df = align_to_shapes(df, shapes)

@@ -1,11 +1,16 @@
-"""Fused single-pass column profiler (north-rule requirement).
+"""Column profilers (north-rule requirement).
 
-One `df.agg()` carries, per profiled column: row count, null count,
-min, max, HyperLogLog distinct (approx_count_distinct) and optional
-fixed-bin histogram counts — a single job, single scan, map-side
-partial aggregation, no Python in the hot path (SURVEY.md §4 custom
-item 1). The reference has no profiler; this feeds the Drift checks
-and the baseline_profile fixture (FIXTURES.md §3).
+`profile` is the fused single-pass form: one `df.agg()` carries, per
+profiled column, row count, null count, min, max, HyperLogLog distinct
+(approx_count_distinct) and optional fixed-bin histogram counts — a
+single job, single scan, map-side partial aggregation, no Python in the
+hot path (SURVEY.md §4 custom item 1). The reference has no profiler;
+this feeds the Drift checks and the baseline_profile fixture
+(FIXTURES.md §3).
+
+The relation-valued profilers below are NOT all single-pass:
+`profile_relation` scans its input once per profiled column plus once
+(see its docstring), inside one action.
 """
 
 from __future__ import annotations
@@ -123,6 +128,20 @@ def profile_relation(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     plans as a plain two-level aggregation with no row replication —
     and the independent subtrees' stages run concurrently inside the
     one action. Values are identical either way.
+
+    Cost and caveats of that choice:
+
+    * the input is scanned len(columns)+1 times (one fused agg plus one
+      scan per exact distinct), so the cost grows linearly with the
+      number of profiled columns. The rewrite was measured as a win
+      only at 3 columns of a 16-column table (lineitem); a many-column
+      profile of a narrow table may be slower than the single-scan
+      Expand form;
+    * each scan re-reads `df`, so one output row is a single snapshot
+      only when `df` is deterministic. For a non-deterministic input
+      (sampling, rand-derived columns, a source table that changes
+      underneath) cache or checkpoint `df` first, or e.g. n_distinct can
+      exceed n_rows.
     """
     aggs = [F.count(F.lit(1)).alias("_total")]
     for i, c in enumerate(columns):

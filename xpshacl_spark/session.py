@@ -12,6 +12,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_cores() -> int:
+    """Cores this process may run on (its CPU affinity set, which a
+    container or taskset narrows below the machine's CPU count)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API off Linux
+        return os.cpu_count() or 1
+
+
+def _host_driver_memory() -> str:
+    """Half of physical memory in whole gigabytes, at least 1g and at
+    most 24g."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, phys // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "xpshacl_spark",
     master: str | None = None,
@@ -20,12 +36,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
+    Defaults fit the host: local[<cores this process may use>] and half
+    of physical memory (capped at 24g) as the driver heap.
     Env overrides: SPARK_GRAFT_CPUS (core count for local[N]),
     SPARK_GRAFT_MASTER, SPARK_GRAFT_DRIVER_MEM.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or _host_cores()
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # match parallelism in local mode instead of the 200 default;
@@ -33,7 +51,11 @@ def get_spark(
         # partition size and AQE coalescing handles the rest.
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
         shuffle_partitions = 32 if n == "*" else max(8, int(n))
-    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_memory = (
+        driver_memory
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _host_driver_memory()
+    )
 
     builder = (
         SparkSession.builder.master(master)
