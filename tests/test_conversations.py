@@ -1,5 +1,5 @@
 """Conversation assembly: ordered transcript rebuild, duration, and
-conversation-level dedup semantics + plan shape; per-turn text parity."""
+conversation-level dedup semantics + plan shape."""
 
 import os
 import sys
@@ -7,8 +7,6 @@ import sys
 sys.path.insert(0, os.path.abspath(os.path.join(os.path.dirname(__file__), "..")))
 
 import datetime
-
-from pyspark.sql import functions as F
 
 from xpshacl_spark.operators.conversations import (
     assemble_conversations,
@@ -122,50 +120,3 @@ def test_null_order_cols_sort_last_matching_sql(spark):
         " t(conv_id, turn_idx, role, text) GROUP BY conv_id"
     )
     assert duckdb.sql(sql).fetchone()[0] == out.transcript
-
-
-def test_text_parity_invariant(spark):
-    """input_hint invariant: per-turn text equality under the stable
-    (conv_id, turn_idx) key — identical generators agree; a mutated or
-    missing turn is reported with its key and kind."""
-    from xpshacl_spark.datagen import transcripts
-    from xpshacl_spark.operators.parity import (
-        assert_text_parity,
-        text_parity_violations,
-    )
-
-    a = transcripts(spark, n_convs=30, seed=11)
-    b = transcripts(spark, n_convs=30, seed=11)
-    assert_text_parity(a, b, ["conv_id", "turn_idx"])
-
-    mutated = b.withColumn(
-        "text",
-        F.when(
-            (F.col("conv_id") == "conv-00000001") & (F.col("turn_idx") == 0),
-            F.lit("tampered"),
-        ).otherwise(F.col("text")),
-    ).where(~((F.col("conv_id") == "conv-00000002") & (F.col("turn_idx") == 0)))
-    bad = text_parity_violations(a, mutated, ["conv_id", "turn_idx"]).collect()
-    kinds = {(r.conv_id, r.turn_idx): r.mismatch_kind for r in bad}
-    assert kinds[("conv-00000001", 0)] == "text_mismatch"
-    assert kinds[("conv-00000002", 0)] == "missing_in_b"
-    assert len(kinds) == 2
-
-
-def test_conversation_null_role_keeps_turn(spark):
-    """A NULL-role turn must still appear in the transcript (empty role
-    renders as ': text'), so conversations differing only by that turn
-    are NOT collapsed into duplicates."""
-    from xpshacl_spark.operators.conversations import assemble_conversations
-
-    rows = [
-        ("a", 1, "u", "x"), ("a", 2, None, "secret"),
-        ("b", 1, "u", "x"),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {r.conv_id: r for r in assemble_conversations(
-        df, ["conv_id"], ["turn_idx"], "role", "text").collect()}
-    assert out["a"].transcript == "u: x\n: secret"
-    assert out["a"].transcript_md5 != out["b"].transcript_md5

@@ -817,6 +817,24 @@ def test_kg_ttl_path_with_space_is_read_as_file(sig, tmp_path):
     assert back.has_violation(sig, "en")
 
 
+def test_simhash_pairs_with_fingerprints_handle(spark):
+    """The cache-handle variant returns the persisted fingerprint df;
+    unpersisting it must leave no storage entries behind."""
+    from xpshacl_spark.operators.dedup import simhash_pairs_with_fingerprints
+
+    df = spark.createDataFrame(
+        [(i, "alpha beta gamma delta " + ("x" if i % 2 else "y"))
+         for i in range(8)],
+        "doc_id long, text string",
+    )
+    pairs, fp = simhash_pairs_with_fingerprints(df, "doc_id", "text", bits=16)
+    n = pairs.count()
+    assert n >= 1
+    assert fp.storageLevel.useMemory
+    fp.unpersist(blocking=True)
+    assert not fp.storageLevel.useMemory
+
+
 def test_llm_unrouted_model_v1_gateway_stays_openai_style(mock_llm_server):
     """An unrouted model name (no gpt/gemini/claude substring) behind a
     /v1 base_url (vLLM / LiteLLM) must default to OpenAI style — the

@@ -11,8 +11,6 @@ import zlib
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from xpshacl_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     _block_mean,
@@ -284,89 +282,6 @@ def test_image_pair_join_is_blocked_not_cartesian(spark):
     fps.unpersist()
     assert "CartesianProduct" not in plan
     assert "seg_idx" in plan and "seg_val" in plan
-
-
-def test_image_dedup_end_to_end_with_dsir_tail(spark):
-    """v5 cross-family composition: image near-dup pairs feed the SAME
-    clustering/survivor machinery text dedup uses, and the survivors'
-    captions feed DSIR selection — proving the families compose without
-    adapters. Cross-stage invariants only; each operator carries its
-    own oracle elsewhere."""
-    from xpshacl_spark.operators.dedup import (
-        dedup_keep_ids,
-        duplicate_clusters,
-    )
-    from xpshacl_spark.operators.sample import dsir_select, dsir_weights
-
-    # two near-dup families + one singleton + one junk payload:
-    #  0,1,2 = copies/nudges of ascending gradient A; 3,4 = copies of
-    #  the DESCENDING gradient B (every left>right bit flips vs A —
-    #  a tilt would not do: row-uniform offsets cancel in the
-    #  horizontal comparisons); 5 = singleton; 6 = junk (NULL
-    #  fingerprint)
-    desc = [[(255 - v, 255 - v, 255 - v) for (v, _, _) in row]
-            for row in gradient(16, 12)]
-    desc_noise = [r[:] for r in desc]
-    desc_noise[7][7] = (30, 30, 30)
-    payloads = [
-        ppm_bytes(gradient(16, 12)),
-        ppm_bytes(gradient(16, 12)),
-        ppm_bytes(gradient(16, 12, noise={(2, 3): 35})),
-        ppm_bytes(desc),
-        ppm_bytes(desc_noise),
-        ppm_bytes([[((x * 53 + y * 17) % 256,) * 3 for x in range(16)]
-                   for y in range(12)]),
-        b"junk",
-    ]
-    media = media_df(spark, payloads)
-    pairs = image_near_dup_pairs(media, max_hamming=6).select(
-        F.col("media_a").alias("id_a"), F.col("media_b").alias("id_b")
-    )
-    clusters = duplicate_clusters(pairs)
-    keepers = {
-        r["cluster_id"]: (r["keep_id"], r["n_members"])
-        for r in dedup_keep_ids(clusters).collect()
-    }
-    # family A collapses to min id 0; family B to 3; the singleton and
-    # the junk payload never enter the pair graph
-    assert keepers[0] == (0, 3)
-    assert keepers[3] == (3, 2)
-    clustered = {r["id"] for r in clusters.collect()}
-    assert 5 not in clustered and 6 not in clustered
-
-    # survivors = keepers + isolated docs (standard anti-join rewrite)
-    losers = clusters.join(
-        dedup_keep_ids(clusters).select(F.col("keep_id").alias("id")),
-        "id",
-        "left_anti",
-    ).select("id")
-    survivors = media.join(
-        losers.withColumnRenamed("id", "media_id"), "media_id", "left_anti"
-    ).select("media_id")
-    surv_ids = {r["media_id"] for r in survivors.collect()}
-    assert surv_ids == {0, 3, 5, 6}
-
-    # DSIR tail over the survivors' captions: select 2 of 4, selection
-    # must be inside the survivor set and deterministic across reruns
-    captions = spark.createDataFrame(
-        [(0, "sunset gradient photo"), (3, "tilted gradient photo"),
-         (5, "textured checker pattern"), (6, "broken payload")],
-        "media_id long, text string",
-    )
-    target = spark.createDataFrame(
-        [(99, "gradient photo collection")], "doc_id long, text string"
-    )
-    pool = captions.join(
-        survivors.withColumnRenamed("media_id", "media_id"), "media_id"
-    )
-    w = dsir_weights(pool, target, id_col="media_id", buckets=128)
-    picked = sorted(
-        r["media_id"] for r in dsir_select(w, 2, id_col="media_id").collect()
-    )
-    picked2 = sorted(
-        r["media_id"] for r in dsir_select(w, 2, id_col="media_id").collect()
-    )
-    assert picked == picked2 and set(picked) <= surv_ids
 
 
 # ---------------------------------------------------------------------------

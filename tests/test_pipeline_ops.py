@@ -295,55 +295,6 @@ def test_profile_relation(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_hash_sample_rate_and_determinism(spark):
-    from xpshacl_spark.operators.sample import hash_sample
-
-    df = spark.range(0, 4000).select(F.col("id").alias("k"))
-    s1 = {r.k for r in hash_sample(df, ["k"], 0.25).collect()}
-    # deterministic: identical on re-run and under a different partitioning
-    s2 = {r.k for r in hash_sample(df.repartition(7), ["k"], 0.25).collect()}
-    assert s1 == s2
-    assert abs(len(s1) / 4000 - 0.25) < 0.03
-    # monotone: a larger rate strictly contains a smaller one
-    s3 = {r.k for r in hash_sample(df, ["k"], 0.5).collect()}
-    assert s1 <= s3
-
-
-def test_stratified_sample_rates(spark):
-    from xpshacl_spark.operators.sample import stratified_sample
-
-    rows = [(i, "a" if i % 2 == 0 else "b") for i in range(2000)]
-    df = spark.createDataFrame(rows, "k long, s string")
-    out = stratified_sample(df, "s", {"a": 1.0, "b": 0.1}, key_cols=["k"])
-    got = {r.s: r["count"] for r in out.groupBy("s").count().collect()}
-    assert got["a"] == 1000
-    assert abs(got.get("b", 0) / 1000 - 0.1) < 0.04
-
-
-def test_rate_one_is_keep_all():
-    """rate 1.0 must be a true keep-all: the 'g' threshold sorts above
-    EVERY 8-hex-char bucket, including the ~1-in-2^32 'ffffffff' keys a
-    'ffffffff' threshold with strict '<' would drop (ADVICE r01)."""
-    from xpshacl_spark.operators.sample import rate_threshold
-
-    assert rate_threshold(1.0) == "g"
-    assert "ffffffff" < rate_threshold(1.0)  # the worst-case bucket passes
-    assert rate_threshold(0.5) == format(int(0.5 * 16**8), "08x")
-    # rates below 1 are unchanged and still sort below the keep-all cut
-    assert rate_threshold(0.999999999) < rate_threshold(1.0)
-
-
-def test_split_train_eval_disjoint_exhaustive(spark):
-    from xpshacl_spark.operators.sample import split_train_eval
-
-    df = spark.range(0, 1000).select(F.col("id").alias("k"))
-    train, ev = split_train_eval(df, ["k"], eval_rate=0.2)
-    t = {r.k for r in train.collect()}
-    e = {r.k for r in ev.collect()}
-    assert t.isdisjoint(e)
-    assert len(t) + len(e) == 1000
-
-
 # ---------------------------------------------------------------------------
 # IVF ANN
 # ---------------------------------------------------------------------------
@@ -506,129 +457,6 @@ def test_text_parity_invariant(spark):
     assert len(kinds) == 2
 
 
-def test_sessionize_boundaries(spark):
-    from xpshacl_spark.operators.sessions import session_summary, sessionize
-
-    rows = [
-        (1, "u", "2025-01-01 00:00:00"),
-        (2, "u", "2025-01-01 00:20:00"),   # 1200s gap -> same session
-        (3, "u", "2025-01-01 01:00:00"),   # 2400s gap -> new session
-        (4, "v", "2025-01-01 00:00:00"),
-    ]
-    df = spark.createDataFrame(rows, "event_id long, user_id string, ts_s string").select(
-        "event_id", "user_id", F.col("ts_s").cast("timestamp").alias("ts")
-    )
-    s = {r.event_id: r.session_idx
-         for r in sessionize(df, ["user_id"], "ts", ["event_id"], 1800).collect()}
-    assert s == {1: 1, 2: 1, 3: 2, 4: 1}
-    summ = {(r.user_id, r.session_idx): r.n_events
-            for r in session_summary(df, ["user_id"], "ts", ["event_id"], 1800).collect()}
-    assert summ == {("u", 1): 2, ("u", 2): 1, ("v", 1): 1}
-
-
-def test_asof_lookup_strictly_prior(spark):
-    from xpshacl_spark.operators.sessions import asof_lookup
-
-    rows = [
-        (1, "u", "2025-01-01 00:00:00", "error", 7.0),
-        (2, "u", "2025-01-01 00:01:00", "click", 1.0),
-        (3, "u", "2025-01-01 00:02:00", "error", 9.0),
-        (4, "u", "2025-01-01 00:03:00", "click", 1.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id string, ts_s string, event_type string, value double"
-    ).select("event_id", "user_id", F.col("ts_s").cast("timestamp").alias("ts"),
-             "event_type", "value")
-    out = asof_lookup(
-        df, ["user_id"], "ts", ["event_id"],
-        F.when(F.col("event_type") == "error", F.col("value")), "last_err",
-    )
-    got = {r.event_id: r.last_err for r in out.collect()}
-    # strictly prior: the error row itself does NOT see its own value
-    assert got == {1: None, 2: 7.0, 3: 7.0, 4: 9.0}
-
-
-def test_interval_join_containment(spark):
-    from xpshacl_spark.operators.ranges import interval_join
-
-    pts = spark.createDataFrame(
-        [(1, "u", "2025-01-01 00:30:00"),
-         (2, "u", "2025-01-01 05:00:00"),   # no covering interval
-         (3, "v", "2025-01-01 00:30:00")],  # right key, wrong user
-        "pid long, k string, ts_s string",
-    ).select("pid", "k", F.col("ts_s").cast("timestamp").alias("ts"))
-    iv = spark.createDataFrame(
-        [("u", 10, "2025-01-01 00:00:00", "2025-01-01 02:30:00"),
-         ("u", 11, "2025-01-01 00:30:00", "2025-01-01 00:45:00")],
-        "k string, iid long, a_s string, b_s string",
-    ).select("k", "iid",
-             F.col("a_s").cast("timestamp").alias("a"),
-             F.col("b_s").cast("timestamp").alias("b"))
-    got = {(r.pid, r.iid) for r in
-           interval_join(pts, iv, "ts", "a", "b", keys=["k"]).collect()}
-    # pid 1 is inside BOTH overlapping u-intervals, each matched once
-    assert got == {(1, 10), (1, 11)}
-
-
-def test_interval_join_multi_unit_bin_width(spark):
-    """Multi-count bin widths ('2 hours', '30 minutes') must return the
-    exact BETWEEN-join result — the arithmetic epoch bucketing aligns
-    point bins with interval bins for ANY width, including interval
-    tails past the last trunc-aligned bin (ADVICE r01 item 1: the
-    date_trunc formulation silently dropped these matches)."""
-    import itertools
-
-    from pyspark.sql import functions as F
-
-    from xpshacl_spark.operators.ranges import interval_join
-
-    pts = spark.createDataFrame(
-        [(i, "u", f"2025-01-01 {h:02d}:{m:02d}:00")
-         for i, (h, m) in enumerate(itertools.product(range(9), (0, 17, 30, 59)))],
-        "pid long, k string, ts_s string",
-    ).select("pid", "k", F.col("ts_s").cast("timestamp").alias("ts"))
-    iv = spark.createDataFrame(
-        [("u", 1, "2025-01-01 00:30:00", "2025-01-01 03:45:00"),
-         ("u", 2, "2025-01-01 02:10:00", "2025-01-01 02:20:00"),
-         ("u", 3, "2025-01-01 05:59:00", "2025-01-01 08:01:00")],
-        "k string, iid long, a_s string, b_s string",
-    ).select("k", "iid",
-             F.col("a_s").cast("timestamp").alias("a"),
-             F.col("b_s").cast("timestamp").alias("b"))
-    expected = {
-        (r.pid, r.iid)
-        for r in pts.join(iv, "k")
-        .where(F.col("ts").between(F.col("a"), F.col("b")))
-        .collect()
-    }
-    assert expected  # non-vacuous: tails and mid-bin starts are exercised
-    for width in ("2 hours", "30 minutes", "90 seconds", "1 hour"):
-        got = {(r.pid, r.iid) for r in
-               interval_join(pts, iv, "ts", "a", "b", keys=["k"],
-                             bin_width=width).collect()}
-        assert got == expected, width
-
-
-def test_asof_join_inclusive_and_null(spark):
-    from xpshacl_spark.operators.sessions import asof_join
-
-    left = spark.createDataFrame(
-        [(1, "u", "2025-01-01 00:00:30"),
-         (2, "u", "2025-01-01 00:01:00"),   # equal ts: inclusive match
-         (3, "u", "2025-01-01 00:00:05"),   # before any right row -> NULL
-         (4, "w", "2025-01-01 09:00:00")],  # key with no right rows
-        "pid long, k string, ts_s string",
-    ).select("pid", "k", F.col("ts_s").cast("timestamp").alias("ts"))
-    right = spark.createDataFrame(
-        [("u", "2025-01-01 00:00:10", 1.0),
-         ("u", "2025-01-01 00:01:00", 2.0)],
-        "k string, ts_s string, v double",
-    ).select("k", F.col("ts_s").cast("timestamp").alias("ts"), "v")
-    out = asof_join(left, right, ["k"], "ts", "ts", "v", alias="av")
-    got = {r.pid: r.av for r in out.collect()}
-    assert got == {1: 1.0, 2: 2.0, 3: None, 4: None}
-
-
 def test_pii_flags(spark):
     df = spark.createDataFrame(
         [
@@ -669,43 +497,6 @@ def test_repetition_stats(spark):
     assert got[4]["n_words"] == 0 and got[4]["dup_word_frac"] == 0.0
 
 
-def test_pack_sequences_matches_global_prefix(spark):
-    from xpshacl_spark.operators.packing import pack_sequences
-
-    rows = [(i, f"doc {i}", (i * 7) % 13 + 1) for i in range(101)]
-    df = spark.createDataFrame(rows, "doc_id int, text string, n int")
-    got = {
-        r.doc_id: (r.pack_id, r.pack_offset)
-        for r in pack_sequences(df, "doc_id", "n", budget=20, n_partitions=7).collect()
-    }
-    # reference: plain python exclusive prefix sum in id order
-    run = 0
-    for i, _, n in rows:
-        assert got[i] == (run // 20, run % 20), i
-        run += n
-    assert len(got) == 101
-
-
-def test_pack_sequences_excludes_null_ids_and_tokens(spark):
-    from xpshacl_spark.operators.packing import pack_sequences
-
-    df = spark.createDataFrame(
-        [(1, 5), (None, 5), (3, None), (4, 5)], "doc_id int, n int"
-    )
-    out = pack_sequences(df, "doc_id", "n", budget=8, n_partitions=2).collect()
-    assert {r.doc_id for r in out} == {1, 4}
-    got = {r.doc_id: (r.pack_id, r.pack_offset) for r in out}
-    assert got[1] == (0, 0) and got[4] == (0, 5)
-
-
-def test_pack_sequences_bad_budget(spark):
-    from xpshacl_spark.operators.packing import pack_sequences
-
-    df = spark.createDataFrame([(1, 2)], "doc_id int, n int")
-    with pytest.raises(ValueError):
-        pack_sequences(df, "doc_id", "n", budget=0)
-
-
 def test_lsh_plan_tradeoffs():
     from xpshacl_spark.operators.dedup import lsh_plan
 
@@ -722,15 +513,6 @@ def test_lsh_plan_tradeoffs():
     assert lo["p_at_threshold"] == 1.0 - (1.0 - 0.3**r) ** b
     with pytest.raises(ValueError):
         lsh_plan(0.0)
-
-
-def test_pack_sequences_empty_preserves_id_type(spark):
-    from xpshacl_spark.operators.packing import pack_sequences
-
-    df = spark.createDataFrame([], "doc_id string, n int")
-    out = pack_sequences(df, "doc_id", "n", budget=8)
-    assert dict(out.dtypes)["doc_id"] == "string"
-    assert out.count() == 0
 
 
 def test_unigram_logprob(spark):
@@ -890,30 +672,6 @@ def test_synth_ppm_media_roundtrip(spark):
         assert row.mean_pixel == round((r_ + g_ + b_) / 3.0, 6)
 
 
-def test_cap_per_group_deterministic_and_salted(spark):
-    from xpshacl_spark.operators.sample import cap_per_group
-
-    rows = [(i, f"src{i % 3}") for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    kept = cap_per_group(df, ["source"], ["doc_id"], cap=4)
-    by_src = {}
-    for r in kept.collect():
-        by_src.setdefault(r.source, set()).add(r.doc_id)
-    assert all(len(v) == 4 for v in by_src.values())
-    # partitioning-independent: same selection after a repartition
-    kept2 = {(r.source, r.doc_id)
-             for r in cap_per_group(df.repartition(7), ["source"], ["doc_id"], cap=4).collect()}
-    assert kept2 == {(s, d) for s, v in by_src.items() for d in v}
-    # exact two-phase salted form is value-identical to the plain window
-    salted = {(r.source, r.doc_id)
-              for r in cap_per_group(df, ["source"], ["doc_id"], cap=4, salt=5).collect()}
-    assert salted == kept2
-    # cap larger than the group keeps everything
-    assert cap_per_group(df, ["source"], ["doc_id"], cap=100).count() == 60
-    with pytest.raises(ValueError):
-        cap_per_group(df, ["source"], ["doc_id"], cap=0)
-
-
 def test_duplicate_span_stats(spark):
     from xpshacl_spark.operators.dedup import duplicate_span_stats
 
@@ -975,27 +733,6 @@ def test_duplicate_clusters_string_ids(spark):
     got2 = {r.id: r.cluster_id
             for r in duplicate_clusters(pairs, local_contract=False).collect()}
     assert got2 == expect
-
-
-def test_budget_mix(spark):
-    from xpshacl_spark.operators.sample import budget_mix
-
-    rows = [(i, "a" if i < 40 else "b", 10) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, w int")
-    # stratum a: total 400, budget 100 -> rate .25; b: total 200, budget
-    # 10000 -> kept whole; unknown strata -> default 0
-    out = budget_mix(df, "source", "w", {"a": 100.0, "b": 10000.0}, ["doc_id"])
-    got = out.groupBy("source").count().collect()
-    by = {r.source: r["count"] for r in got}
-    assert by["b"] == 20              # under budget: kept whole
-    assert 2 <= by.get("a", 0) <= 18  # ~25% of 40, hash-dependent
-    # deterministic across partitionings
-    out2 = budget_mix(df.repartition(7), "source", "w",
-                      {"a": 100.0, "b": 10000.0}, ["doc_id"])
-    assert {r.doc_id for r in out.collect()} == {r.doc_id for r in out2.collect()}
-    # stratum with no budget entry -> dropped entirely
-    out3 = budget_mix(df, "source", "w", {"b": 1.0e9}, ["doc_id"])
-    assert {r.source for r in out3.collect()} == {"b"}
 
 
 def test_incremental_exact_dedup(spark):
@@ -1088,41 +825,6 @@ def test_simhash_null_text_and_duplicate_ids(spark):
     pairs = {(r.id_a, r.id_b): r.hamming
              for r in simhash_pairs(df, "doc_id", "text", bits=16, max_hamming=0).collect()}
     assert pairs.get((2, 3)) == 0  # the two NULL docs pair at hamming 0
-
-
-def test_temperature_mix(spark):
-    """temperature_mix: alpha<1 flattens the mixture (the small stratum
-    keeps a HIGHER fraction than the big one), an over-budgeted stratum
-    is kept whole (never up-sampled), membership is
-    partitioning-independent, and rates follow the sqrt-share formula."""
-    import math
-
-    from xpshacl_spark.operators.sample import temperature_mix
-
-    # 'big' has 100x the weight of 'small'
-    rows = [(i, "big", 100.0) for i in range(400)] + [
-        (1000 + i, "small", 4.0) for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, source string, w double")
-    out = temperature_mix(df, "source", "w", ["doc_id"], budget=8000.0, alpha=0.5)
-    kept = out.groupBy("source").count().collect()
-    frac = {r["source"]: r["count"] / (400 if r["source"] == "big" else 100) for r in kept}
-    # sqrt shares: sqrt(40000)=200, sqrt(400)=20 -> big gets 10/11 of
-    # budget but holds 100/101 of the weight: its keep RATE is lower
-    assert frac["small"] > frac["big"]
-    t_big, t_small = 40000.0, 400.0
-    s = math.sqrt(t_big) + math.sqrt(t_small)
-    exp_big = min(1.0, (8000.0 * math.sqrt(t_big) / s) / t_big)
-    assert frac["big"] == pytest.approx(exp_big, abs=0.08)  # hash sampling noise
-
-    # generous budget: every stratum kept whole, partitioning-stable
-    whole = temperature_mix(df, "source", "w", ["doc_id"], budget=1.0e9)
-    assert whole.count() == 500
-    a = {r["doc_id"] for r in out.collect()}
-    b = {r["doc_id"] for r in temperature_mix(
-        df.repartition(7), "source", "w", ["doc_id"], budget=8000.0, alpha=0.5
-    ).collect()}
-    assert a == b
 
 
 def test_exact_dup_spans_islands_and_within_doc(spark):
@@ -1342,24 +1044,6 @@ def test_conversation_null_role_keeps_turn(spark):
         df, ["conv_id"], ["turn_idx"], "role", "text").collect()}
     assert out["a"].transcript == "u: x\n: secret"
     assert out["a"].transcript_md5 != out["b"].transcript_md5
-
-
-def test_asof_join_null_value_in_matched_row_surfaces(spark):
-    """DuckDB/ANSI ASOF parity: the MATCHED row's value is returned
-    even when it is NULL — a stale older non-null reading must not be
-    resurrected over a fresher NULL."""
-    from xpshacl_spark.operators.sessions import asof_join
-
-    left = spark.createDataFrame(
-        [(1, "u", "2025-01-01 00:00:03")], "pid long, k string, ts_s string"
-    ).select("pid", "k", F.col("ts_s").cast("timestamp").alias("ts"))
-    right = spark.createDataFrame(
-        [("u", "2025-01-01 00:00:01", 5.0),
-         ("u", "2025-01-01 00:00:02", None)],
-        "k string, ts_s string, v double",
-    ).select("k", F.col("ts_s").cast("timestamp").alias("ts"), "v")
-    out = asof_join(left, right, ["k"], "ts", "ts", "v", alias="av").collect()
-    assert out[0].av is None  # matched t=2 row, value NULL
 
 
 def test_incremental_dedup_null_rows_bypass_window(spark):
@@ -1812,72 +1496,6 @@ def test_real_decode_png_all_filters_and_color_types(spark):
         assert (got[mid].format, got[mid].width, got[mid].height) == ("png", w, h), mid
         assert abs(got[mid].mean_pixel - mean) < 1e-9, (mid, got[mid].mean_pixel, mean)
     assert got[99].format is None and got[99].width is None
-
-
-def test_corpus_prep_v3_new_stage_composition(spark):
-    """Integration of the r05 cleanup stages as a pipeline: Gopher hard
-    gate -> corpus-wide paragraph dedup -> intra-doc line dedup ->
-    exact dedup on the rewritten text -> sequence packing. Asserts the
-    cross-stage invariants a real pipeline relies on rather than
-    re-proving each operator (each has its own oracle)."""
-    from xpshacl_spark.operators.dedup import (
-        dedup_lines_in_doc,
-        dedup_paragraphs,
-        incremental_exact_dedup,
-    )
-    from xpshacl_spark.operators.packing import pack_sequences
-    from xpshacl_spark.operators.text import gopher_quality_flags, token_count
-
-    body = (
-        "the quick brown fox likes to jump over all of the lazy dogs and "
-        "that same fox will have done it again with style tomorrow morning "
-    ) * 3
-    boiler = "subscribe to the newsletter of this site and have fun with that"
-    docs = spark.createDataFrame(
-        [
-            (1, boiler + "\n\n" + body + "\nrepeat line\nrepeat line"),
-            (2, boiler + "\n\n" + body + " extra tail words here"),
-            (3, "too short"),  # fails the Gopher word-count floor
-            (4, boiler + "\n\n" + body + "\nrepeat line\nrepeat line"),  # = doc 1
-        ],
-        "doc_id long, text string",
-    )
-    gated = gopher_quality_flags(docs, "text").where("gopher_pass").select(
-        "doc_id", "text"
-    )
-    assert {r.doc_id for r in gated.select("doc_id").collect()} == {1, 2, 4}
-
-    paras = dedup_paragraphs(gated, "doc_id", "text")
-    by_id = {r.doc_id: r for r in paras.collect()}
-    # boilerplate paragraph survives only in doc 1 (min id)
-    assert by_id[1].dedup_text.startswith(boiler)
-    assert not by_id[2].dedup_text.startswith(boiler)
-    # doc 4's body is identical to doc 1's: every paragraph stripped
-    assert by_id[4].n_kept_paras == 0
-
-    lines = dedup_lines_in_doc(
-        paras.select("doc_id", F.col("dedup_text").alias("text")), "text"
-    ).select("doc_id", F.col("dedup_text").alias("text"))
-    t1 = {r.doc_id: r.text for r in lines.collect()}
-    assert t1[1].count("repeat line") == 1  # intra-doc line dedup
-
-    # exact dedup on the REWRITTEN text: docs 1 and 4 no longer collide
-    # (4 was already emptied by paragraph dedup)
-    survivors, _delta = incremental_exact_dedup(lines, "doc_id", "text")
-    kept_ids = {r.doc_id for r in survivors.select("doc_id").collect()}
-    assert 1 in kept_ids and 2 in kept_ids
-
-    packed = pack_sequences(
-        survivors.select("doc_id", token_count("text").alias("n_tokens"))
-        .where("n_tokens > 0"),
-        "doc_id",
-        "n_tokens",
-        budget=64,
-    )
-    rows = packed.collect()
-    # packing integrity: offsets within budget, ids preserved
-    assert all(0 <= r.pack_offset < 64 for r in rows)
-    assert {r.doc_id for r in rows} <= kept_ids
 
 
 def test_png_decoder_rejects_zlib_bomb_bounded():

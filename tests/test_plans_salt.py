@@ -115,6 +115,42 @@ def test_salted_aggregation_exact(spark):
     assert a == b and len(a) > 0
 
 
+def test_text_analyze_single_scan_no_shuffle(spark, tmp_path):
+    """The fused text profile is one parquet scan that tokenizes once
+    (exactly one split(... \\s+ ...) in the plan). The only exchange
+    allowed is the narrow-input round-robin rebalance (r6) — never a
+    keyed shuffle."""
+    from xpshacl_spark.operators.text import analyze
+
+    p = str(tmp_path / "d.parquet")
+    spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "el rapido zorro")],
+        "doc_id long, text string",
+    ).write.parquet(p)
+    out = analyze(spark.read.parquet(p), "text")
+    plan = _plan(out)
+    assert "hashpartitioning" not in plan
+    assert plan.count("Exchange") <= 1  # the narrow-input rebalance only
+    assert plan.count("FileScan parquet") == 1
+    # one tokenization per row: the whitespace split appears once
+    assert plan.count("split(trim(text") == 1
+
+
+def test_ivf_probe_is_broadcast_hash_join(spark):
+    """IVF nprobe=1 probing joins corpus cells against the (small)
+    query set with a broadcast hash join — the corpus never shuffles."""
+    from xpshacl_spark.operators.similarity import ivf_ann_topk
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, 0.5, 0.0]) for i in range(50)],
+        "vec_id long, embedding array<float>",
+    )
+    out = ivf_ann_topk(
+        vecs, vecs.where(F.col("vec_id") < 2), k=5, n_cells=3, nprobe=1, dim=4
+    )
+    assert "BroadcastHashJoin" in _plan(out)  # equi-join on cell, nprobe=1
+
+
 def test_auto_salt_detects_skew_and_stays_exact(spark):
     """salt_partitions='auto': a pathological hot key triggers explicit
     two-phase salting; a uniform key does not; and the salted relation
@@ -145,6 +181,28 @@ def test_auto_salt_detects_skew_and_stays_exact(spark):
     assert rep_uniform.metrics["auto_salt"]["conv_id"] == 0  # no salting
 
 
+def test_vocabulary_topk_is_distributed(spark):
+    """vocabulary must plan the top-k as TakeOrderedAndProject (per-task
+    k-row heaps) — the only unpartitioned Window sorts the <=k-row
+    RESULT of the limit, never the full distinct-token relation. At web
+    scale the token relation has billions of rows; a global rank window
+    over it is a one-task straggler (VERDICT r01 item 1)."""
+    from xpshacl_spark.operators.text import vocabulary
+
+    df = spark.createDataFrame(
+        [(i, "the quick brown fox a b") for i in range(20)],
+        "doc_id long, text string",
+    )
+    plan = _plan(vocabulary(df, "text", k=5))
+    assert "TakeOrderedAndProject" in plan
+    # plan prints parent-first: Window must consume the limited relation
+    assert plan.index("Window") < plan.index("TakeOrderedAndProject")
+    # nothing below the limit funnels into a single partition
+    below_limit = plan[plan.index("TakeOrderedAndProject"):]
+    assert "Window" not in below_limit
+    assert "Exchange SinglePartition" not in below_limit
+
+
 def test_top_values_per_column_topk_is_distributed(spark):
     """top_values must take each column's top-k BEFORE the union (one
     TakeOrderedAndProject per column); the rank window only ever sees
@@ -160,6 +218,79 @@ def test_top_values_per_column_topk_is_distributed(spark):
     assert plan.count("TakeOrderedAndProject") == 2
     below_first_limit = plan[plan.index("TakeOrderedAndProject"):]
     assert "Window" not in below_first_limit
+
+
+def test_repetition_stats_single_scan_no_join(spark, tmp_path):
+    """repetition_stats derives n_words/n_distinct from the same
+    (doc, word) counts relation as the modal word — the corpus is read
+    ONCE, with no join back (a second scan of a 100 TB text column
+    would double the job's IO)."""
+    from xpshacl_spark.operators.text import repetition_stats
+
+    p = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, "a b a") for i in range(10)], "doc_id long, text string"
+    ).write.mode("overwrite").parquet(p)
+    plan = _plan(repetition_stats(spark.read.parquet(p)))
+    assert plan.count("Scan parquet") == 1
+    assert "Join" not in plan
+
+
+def test_stop_shingle_prune_is_agg_anti_join_no_sort(spark):
+    """The stop-shingle doc-frequency cap must be the agg + left-anti
+    form: groupBy(shingle).count() is map-side combined (a hot shingle
+    pre-reduces per partition before the shuffle) and the over-cap hot
+    set anti-joins away — AQE's runtime stats broadcast it when it is
+    genuinely tiny (asserted on the executed adaptive plan) without
+    forcing a driver collect in the pathological low-cap case. The old
+    window form shuffled the whole (doc, shingle) relation by shingle
+    WITH a per-partition sort just to drop hot keys; pin that neither
+    the Window operator nor a Sort under the prune ever reappears."""
+    from xpshacl_spark.operators.dedup import (
+        _maybe_prune_stop_shingles,
+        shingles,
+    )
+
+    df = spark.createDataFrame(
+        [(i, "common words here plus doc %d tail" % i) for i in range(30)],
+        "doc_id long, text string",
+    )
+    pruned = _maybe_prune_stop_shingles(shingles(df, "doc_id", "text"), 5)
+    # correctness first (also finalizes the adaptive plan): every
+    # surviving shingle's doc-frequency <= cap
+    top = (
+        pruned.groupBy("shingle").count().agg(F.max("count")).collect()[0][0]
+    )
+    assert top is not None and top <= 5
+    pruned.collect()
+    # AdaptiveSparkPlan's string carries BOTH the final and the initial
+    # (pre-AQE, sort-merge) plan; assert on the final section only
+    plan = _plan(pruned).split("== Initial Plan ==")[0]
+    assert "LeftAnti" in plan
+    assert "BroadcastHashJoin" in plan, plan  # AQE broadcast of tiny hot set
+    assert "Window" not in plan
+    assert "Sort" not in plan
+
+
+def test_duplicate_span_stats_no_pairwise_fanout(spark):
+    """duplicate_span_stats joins each (doc, span) row to the span's
+    corpus doc-frequency — exactly ONE row per (doc, span), never a
+    span-keyed self-join (which would be k^2 per hot span). Pin: no
+    self-join of the shingle relation (the only joins are span->dfreq
+    and the left join back to the doc spine, so <= 2 joins and one
+    count-style aggregate per side)."""
+    from xpshacl_spark.operators.dedup import duplicate_span_stats
+
+    df = spark.createDataFrame(
+        [(i, "one two three four five six seven") for i in range(20)],
+        "doc_id long, text string",
+    )
+    out = duplicate_span_stats(df, "doc_id", "text", n=5)
+    plan = _plan(out)
+    # span->dfreq equi-join + doc-spine left join: exactly 2 joins
+    joins = plan.count("Join")
+    assert joins == 2, plan
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):
@@ -270,6 +401,279 @@ def test_sequence_checks_share_one_window(spark):
     plan = _plan(rep.violations)
     assert plan.count("Window") == 1
     assert plan.count("Exchange") == 1
+
+
+def test_exact_dup_spans_keyed_never_pairwise(spark):
+    """exact_dup_spans must stay keyed end-to-end: ONE gram-count
+    aggregate, ONE occurrence equi-join back, and the interval-merge
+    islands as TWO stacked window nodes (lag, then running sum of
+    gap-open flags) sharing ONE (doc_id, pos) sort/exchange — never a
+    gram-keyed self-join (k^2 rows per hot gram), never a cartesian."""
+    from xpshacl_spark.operators.dedup import exact_dup_spans
+
+    df = spark.createDataFrame(
+        [(i, "a b c d e f g h i j k l") for i in range(10)],
+        "doc_id long, text string",
+    )
+    plan = _plan(exact_dup_spans(df, "doc_id", "text", n=8))
+    assert plan.count("Join") == 1, plan
+    assert plan.count("Window") == 2, plan
+    # the two windows share one sort: exactly one sort on (doc_id, pos)
+    assert plan.count("Sort [doc_id") == 1, plan
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_ngram_repetition_single_scan_no_join(spark):
+    """ngram_repetition_stats computes every n in ONE pass: one text
+    scan into one Arrow-batched mapInPandas stage (r6 shape — JVM
+    normalization, Python tuple-gram Counter, Spark-side rounding),
+    with NO join, NO window, and NO occurrence-sized gram shuffle."""
+    from xpshacl_spark.operators.text import ngram_repetition_stats
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "")], "doc_id long, text string"
+    )
+    plan = _plan(ngram_repetition_stats(df, ns=(2, 3, 4)))
+    assert "Join" not in plan, plan
+    assert "Window" not in plan, plan
+    assert "CartesianProduct" not in plan
+    assert "MapInPandas" in plan, plan
+    # the only aggregate-free exchange allowed is the narrow-input
+    # rebalance; no (doc, n, gram) count aggregation remains
+    assert "HashAggregate" not in plan, plan
+
+
+def test_shingles_rebalances_narrow_input_only(spark):
+    """Explosion-heavy shingling widens a 1-split input with ONE
+    round-robin exchange (measured 3.6x on a single-split corpus at
+    sf0.1) and leaves an already-wide input untouched — the structural
+    no-op that makes the rebalance safe at cluster scale."""
+    from xpshacl_spark.operators.dedup import shingles
+
+    narrow = spark.createDataFrame(
+        [(1, "a b c d")], "doc_id long, text string"
+    ).coalesce(1)
+    plan_narrow = _plan(shingles(narrow, "doc_id", "text"))
+    assert "ROUND_ROBIN" in plan_narrow or "RoundRobin" in plan_narrow, plan_narrow
+
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    wide = spark.createDataFrame(
+        [(i, "a b c d") for i in range(64)], "doc_id long, text string"
+    ).repartition(target)
+    plan_wide = _plan(shingles(wide, "doc_id", "text"))
+    # exactly the one repartition WE added upstream; shingles adds none
+    assert plan_wide.count("ROUND_ROBIN") + plan_wide.count("RoundRobin") <= 1
+
+
+def test_nb_production_shape_single_corpus_explode(spark, tmp_path):
+    """q_nb_quality's production shape: the distinct-(doc, word)
+    relation is materialized once (that write is the ONLY corpus-text
+    explode); the scoring plan over the read-back table must contain NO
+    Generate at all — versus the convenience form, whose one lazy plan
+    explodes the corpus text twice."""
+    from xpshacl_spark.operators.text import (
+        nb_quality_scores,
+        nb_quality_scores_from_words,
+        nb_words,
+    )
+
+    p = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(i, f"w{i % 3} common text", i % 2 == 0) for i in range(20)],
+        "doc_id long, text string, is_ref boolean",
+    ).write.parquet(p)
+    d = spark.read.parquet(p)
+
+    convenience = _plan(nb_quality_scores(d, "doc_id", "text", "is_ref"))
+    assert convenience.count("Generate") == 2  # the two-explode bound
+
+    words = nb_words(d, "doc_id", "text", "is_ref")
+    assert _plan(words).count("Generate") == 1  # the single explode
+    spark.sql("DROP TABLE IF EXISTS nb_words_pin")
+    words.write.mode("overwrite").saveAsTable("nb_words_pin")
+    prod = _plan(
+        nb_quality_scores_from_words(
+            d, spark.table("nb_words_pin"), "doc_id", "is_ref"
+        )
+    )
+    assert "Generate" not in prod, prod
+    spark.sql("DROP TABLE IF EXISTS nb_words_pin")
+
+
+def test_rebalance_noop_on_wide_bare_scan(spark, tmp_path):
+    """rebalance_if_narrow must be a STRUCTURAL no-op on a bare scan
+    that already has >= shuffle.partitions splits (the cluster-scale
+    case): no extra Exchange may appear — else the guard would silently
+    tax every 100-TB scan with a full round-robin shuffle."""
+    from xpshacl_spark.operators.text import rebalance_if_narrow
+
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = str(tmp_path / "wide.parquet")
+    (
+        spark.range(target * 4)
+        .selectExpr("id as doc_id", "'a b c' as text")
+        .repartition(target * 2)
+        .write.parquet(p)
+    )
+    # tiny files get bin-packed into few scan splits by default; force
+    # one-file-per-split so the scan arrives cluster-wide WITHOUT any
+    # upstream Exchange (the case the probe must leave untouched)
+    saved = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    saved_open = spark.conf.get("spark.sql.files.openCostInBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        wide = spark.read.parquet(p)
+        assert wide.rdd.getNumPartitions() >= target  # bare scan, no Exchange
+        out = rebalance_if_narrow(wide)
+        assert out is wide  # identity, not just exchange-free
+        assert "Exchange" not in _plan(out)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", saved)
+        spark.conf.set("spark.sql.files.openCostInBytes", saved_open)
+
+
+def test_rebalance_degrades_to_noop_on_non_numeric_conf(spark, monkeypatch):
+    """Platforms running AQE auto-tuning set shuffle.partitions to a
+    non-numeric value ("auto"); the rebalance guard must return the
+    input unchanged there, not raise ValueError. (Local Spark refuses
+    conf.set("...", "auto"), so the conf getter is patched instead.)"""
+    from xpshacl_spark.operators.text import rebalance_if_narrow
+
+    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    monkeypatch.setattr(
+        type(spark.conf), "get", lambda self, key, default=None: "auto"
+    )
+    assert rebalance_if_narrow(df) is df
+
+
+def test_dedup_lines_in_doc_is_zero_shuffle_scan(spark, tmp_path):
+    """Intra-doc line dedup is per-row expression work: one codegen'd
+    scan, no Exchange, no Generate (array_distinct does the dedup
+    in-row — an explode/re-agg shape here would be a 100-TB regression),
+    and the filter still pushes to the parquet scan."""
+    from xpshacl_spark.operators.dedup import dedup_lines_in_doc
+
+    p = str(tmp_path / "docs_lines")
+    spark.createDataFrame(
+        [(i, "a\nb\na") for i in range(10)], "doc_id long, text string"
+    ).write.parquet(p)
+    d = spark.read.parquet(p).where("doc_id >= 2")
+
+    out = dedup_lines_in_doc(d, "text")
+    plan = _plan(out)
+    assert "Exchange" not in plan, plan
+    assert "Generate" not in plan, plan
+    assert "PushedFilters: [IsNotNull(doc_id), GreaterThanOrEqual(doc_id,2" in plan
+
+
+def test_gopher_quality_flags_is_zero_shuffle_scan(spark, tmp_path):
+    """All seven Gopher rules are per-row higher-order expressions: one
+    scan, no Exchange, no Generate, filter pushed to parquet."""
+    from xpshacl_spark.operators.text import gopher_quality_flags
+
+    p = str(tmp_path / "docs_gopher")
+    spark.createDataFrame(
+        [(i, "the fox and that dog") for i in range(10)],
+        "doc_id long, text string",
+    ).write.parquet(p)
+    d = spark.read.parquet(p).where("doc_id >= 3")
+
+    plan = _plan(gopher_quality_flags(d, "text"))
+    assert "Exchange" not in plan, plan
+    assert "Generate" not in plan, plan
+    assert "PushedFilters: [IsNotNull(doc_id), GreaterThanOrEqual(doc_id,3" in plan
+
+
+def test_c4_clean_is_zero_shuffle_scan(spark, tmp_path):
+    """The C4 line rewrite + page gate are per-row higher-order
+    expressions: one scan, no Exchange, no Generate, filter pushed."""
+    from xpshacl_spark.operators.text import c4_clean
+
+    p = str(tmp_path / "docs_c4")
+    spark.createDataFrame(
+        [(i, "The fox runs fast.\nshort") for i in range(10)],
+        "doc_id long, text string",
+    ).write.parquet(p)
+    d = spark.read.parquet(p).where("doc_id >= 3")
+
+    plan = _plan(c4_clean(d, "text", badwords=("bad",)))
+    assert "Exchange" not in plan, plan
+    assert "Generate" not in plan, plan
+    assert "PushedFilters: [IsNotNull(doc_id), GreaterThanOrEqual(doc_id,3" in plan
+
+
+def test_dedup_by_url_is_single_shuffle_window(spark, tmp_path):
+    """dedup_by_url shuffles the corpus ONCE (window over the url key),
+    with no join and no second Exchange — the groupBy+rejoin shape it
+    documents against would shuffle twice."""
+    from xpshacl_spark.operators.dedup import dedup_by_url
+
+    p = str(tmp_path / "docs_url")
+    spark.createDataFrame(
+        [(i, f"https://example.com/{i % 3}") for i in range(12)],
+        "doc_id long, url string",
+    ).write.parquet(p)
+    d = spark.read.parquet(p).where("doc_id >= 1")
+
+    plan = _plan(dedup_by_url(d, "doc_id", "url"))
+    assert plan.count("Exchange") - plan.count("ReusedExchange") == 1, plan
+    assert "Join" not in plan, plan
+    assert "PushedFilters: [IsNotNull(doc_id), GreaterThanOrEqual(doc_id,1" in plan
+
+
+def test_video_near_dup_join_is_bucketed_not_cartesian(spark):
+    """video_near_dup_pairs must be an equi-join on the frame-hash key
+    (the inverted-index probe) — never a cartesian/nested-loop product
+    — and the shared count a plain hash aggregate, no Window."""
+    from xpshacl_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        video_near_dup_pairs,
+    )
+
+    media = spark.createDataFrame(
+        [(0, "video", bytearray(b"x"), {})], MEDIA_SCHEMA
+    )
+    plan = _plan(video_near_dup_pairs(media, min_shared=2))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "dhash" in plan, plan
+    assert "Window" not in plan, plan
+
+
+def test_media_near_dup_dispatch_plan_shape(spark):
+    """media_near_dup_pairs: a plan-level union of two kind-pruned
+    branches, each a segment/hash equi-join — no cartesian anywhere."""
+    from xpshacl_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        media_near_dup_pairs,
+    )
+
+    media = spark.createDataFrame(
+        [(0, "image", bytearray(b"x"), {})], MEDIA_SCHEMA
+    )
+    plan = _plan(media_near_dup_pairs(media))
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "Union" in plan, plan
+    assert "seg_idx" in plan and "seg_val" in plan, plan
+
+
+def test_simhash_is_zero_agg_arrow_pass(spark):
+    """r06 simhash plan: one MapInPandas over the per-row word arrays —
+    no explode, no HashAggregate, and the only Exchange allowed is the
+    narrow-input round-robin rebalance (never a keyed shuffle)."""
+    from xpshacl_spark.operators.dedup import simhash
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i} common text") for i in range(10)],
+        "doc_id long, text string",
+    )
+    plan = _plan(simhash(docs, "doc_id", "text", bits=63))
+    assert "MapInPandas" in plan, plan
+    assert "HashAggregate" not in plan, plan
+    assert "Generate" not in plan, plan
+    assert "hashpartitioning" not in plan, plan
 
 
 def test_unique_rides_window_exchange(spark):

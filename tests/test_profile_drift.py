@@ -5,12 +5,7 @@ from pyspark.sql import functions as F
 
 from xpshacl_spark.compiler import ValidationEngine
 from xpshacl_spark.operators.drift import ks_statistic, psi_statistic
-from xpshacl_spark.operators.profile import (
-    HistSpec,
-    ProfileSpec,
-    profile,
-    profile_relation,
-)
+from xpshacl_spark.operators.profile import HistSpec, ProfileSpec, profile
 from xpshacl_spark.shapes import Drift, Shape
 
 
@@ -390,32 +385,3 @@ def test_mutual_information_relation(spark):
     # as ReusedExchange — the fact table is scanned once
     assert plan.count("ReusedExchange") == 3
     assert "Window" not in plan
-
-
-def test_profile_relation(spark):
-    df = spark.createDataFrame(
-        [(1.0,), (2.0,), (None,), (2.0,)], "x double"
-    )
-    r = profile_relation(df, ["x"]).collect()[0]
-    assert (r.n_rows, r.n_nulls, r.min_value, r.max_value, r.n_distinct) == (
-        4, 1, 1.0, 2.0, 2,
-    )
-
-
-def test_top_values(spark):
-    from xpshacl_spark.operators.profile import top_values
-
-    df = spark.createDataFrame(
-        [("x",)] * 5 + [("y",)] * 3 + [("z",)] * 3 + [(None,)],
-        "c string",
-    )
-    rows = sorted(top_values(df, ["c"], k=2).collect(), key=lambda r: r.rank)
-    assert [(r.value, r.n, r.rank) for r in rows] == [("x", 5, 1), ("y", 3, 2)]
-
-
-def test_quantiles_relation_exact(spark):
-    from xpshacl_spark.operators.profile import quantiles_relation
-
-    df = spark.createDataFrame([(float(x),) for x in range(1, 6)], "x double")
-    got = {r.q: r.quantile for r in quantiles_relation(df, ["x"], (0.25, 0.5)).collect()}
-    assert got[0.25] == 2.0 and got[0.5] == 3.0

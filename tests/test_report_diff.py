@@ -1,4 +1,4 @@
-"""Cross-run violation diff (report_diff.py)."""
+"""Cross-run violation diff (report_diff.py) + BPE merge candidates."""
 
 import os
 import sys
@@ -80,3 +80,26 @@ def test_violation_diff_is_single_exchange_agg(spark):
     assert plan.count("Exchange") == 1
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_bpe_merge_candidates_exact(spark):
+    from xpshacl_spark.operators.text import bpe_merge_candidates
+
+    df = spark.createDataFrame(
+        [("abab ab",), ("Ab! cd",), ("x",)], "text string"
+    )
+    # normalized tokens: [abab, ab], [ab, cd], [x -> dropped (len 1)]
+    # pairs: abab -> ab, ba, ab; ab -> ab; ab -> ab; cd -> cd
+    out = [(r.pair, r.n_pairs) for r in bpe_merge_candidates(df).collect()]
+    assert out == [("ab", 4), ("ba", 1), ("cd", 1)]  # ties: pair asc
+
+
+def test_bpe_merge_candidates_topk_is_distributed(spark):
+    from xpshacl_spark.operators.text import bpe_merge_candidates
+
+    df = spark.range(200).select(
+        F.concat(F.lit("word"), F.col("id")).alias("text")
+    )
+    plan = _plan(bpe_merge_candidates(df, k=5))
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan  # no global rank window

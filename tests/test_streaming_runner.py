@@ -191,6 +191,37 @@ def _stream_one_file_per_batch(spark, path):
     )
 
 
+def test_streaming_dedup_stateful_across_batches(spark, tmp_path):
+    """applyInPandasWithState exact dedup: the first occurrence passes,
+    repeats are dropped (or emitted with n_prior) even when they arrive
+    in LATER micro-batches — per-fingerprint state carries across."""
+    from xpshacl_spark.streaming import streaming_dedup
+
+    p = str(tmp_path / "sd")
+    rows1 = [(0, "The quick brown fox"), (1, "unique one")]
+    rows2 = [(2, "the QUICK brown fox!!"), (3, "unique two"), (4, "unique one")]
+    schema = "doc_id long, text string"
+    spark.createDataFrame(rows1, schema).coalesce(1).write.mode("append").parquet(p)
+    spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(p)
+
+    kept = _run_to_memory(
+        streaming_dedup(_stream_one_file_per_batch(spark, p), ["doc_id"], "text"),
+        "sd_kept",
+    ).collect()
+    # 0 and 2 share a fingerprint; 1 and 4 share a fingerprint
+    assert sorted(r.doc_id for r in kept) == [0, 1, 3]
+    assert all(r.n_prior == 0 for r in kept)
+
+    dups = _run_to_memory(
+        streaming_dedup(
+            _stream_one_file_per_batch(spark, p), ["doc_id"], "text",
+            emit_duplicates=True,
+        ),
+        "sd_dups",
+    ).collect()
+    assert sorted((r.doc_id, r.n_prior) for r in dups) == [(2, 1), (4, 1)]
+
+
 def test_streaming_monotonic_stateful_across_batches(spark, tmp_path):
     """applyInPandasWithState ordering check: a ts regression at a
     micro-batch BOUNDARY is caught because the last (order, ts) pair per

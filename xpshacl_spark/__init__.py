@@ -63,6 +63,7 @@ from xpshacl_spark.shapes import (
 from xpshacl_spark.compiler import ValidationEngine, ValidationReport
 from xpshacl_spark.session import get_spark
 from xpshacl_spark.streaming import (
+    streaming_dedup,
     streaming_monotonic,
     validate_stream,
     windowed_max_count,
@@ -121,6 +122,7 @@ __all__ = [
     "validate_stream",
     "windowed_min_count",
     "windowed_max_count",
+    "streaming_dedup",
     "streaming_monotonic",
 ]
 

@@ -1,10 +1,11 @@
 """Conversation assembly: turn-level rows -> conversation-level docs.
 
-The bridge between the validation engine (which works turn-level,
-keyed by (conv_id, turn_idx)) and conversation-level checks: assemble
+The transcripts-payload bridge between the validation engine (which
+works turn-level, keyed by (conv_id, turn_idx)) and the corpus
+operators (dedup / quality, which work doc-level): assemble
 each conversation's turns, in stable turn order, into ONE transcript
-document plus rollup stats, so conversation-level duplicate detection
-is one window over the assembled relation (`conversation_duplicates`).
+document plus rollup stats, so conversation-level dedup is exactly
+`exact_duplicates` (or MinHash/SimHash) over the assembled relation.
 
 Scale design: ONE hash aggregation keyed by the conversation columns.
 Turn order inside a conversation is restored by
@@ -19,7 +20,7 @@ instead).
 
 The reference has no conversation assembly (it validates per-focus-node
 triples); the north rule's multi-turn transcript table makes the
-conversation the natural unit of duplicate detection, so the
+conversation the natural unit of dedup and quality filtering, so the
 operator exists here as a first-class relation builder.
 """
 
@@ -29,6 +30,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from xpshacl_spark.operators.text import normalize_text  # noqa: F401 (re-export convenience)
 
 
 def assemble_conversations(
@@ -51,9 +54,10 @@ def assemble_conversations(
     collapsing distinct conversations into false duplicates), joined
     by ``sep``.
     transcript_md5 is the conversation's content fingerprint — group
-    on it for conversation-level duplicate detection. With ``ts_col``,
-    duration_us is the exact integer microsecond span between the
-    first and last turn (min/max in the same agg; no second pass).
+    on it (or feed the transcript to the dedup operators) for
+    conversation-level dedup. With ``ts_col``, duration_us is the
+    exact integer microsecond span between the first and last turn
+    (min/max in the same agg; no second pass).
 
     Turn ordering: NULL order-col values sort LAST (each sort key
     carries an explicit isNull flag — bare Spark struct ordering would
@@ -123,7 +127,8 @@ def conversation_duplicates(
 ) -> DataFrame:
     """Conversation-level exact dedup over an assembled relation: adds
     n_same_transcript (how many conversations share this transcript)
-    and keep (true for the min-key conversation of each group).
+    and keep (true for the min-key conversation of each group — the
+    same survivor rule as dedup.exact_duplicates).
 
     Shape: ONE md5-partitioned window over the CONVERSATION-level
     relation (frame aggregates, no orderBy frame). The groupBy +

@@ -12,10 +12,11 @@ whose semantics survive unbounded input:
 * cardinality per event-time window — `windowed_min_count` /
   `windowed_max_count`: watermarked tumbling-window counts emitted in
   append mode once the watermark closes the window;
-* custom stateful operator — `streaming_monotonic` (per-key ordering
-  check with last-seen state), an Arrow-batched
-  `applyInPandasWithState` (the state itself is bounded: one tiny
-  tuple per distinct key, not per row).
+* custom stateful operators — `streaming_dedup` (exact dedup /
+  duplicate detection with per-fingerprint state) and
+  `streaming_monotonic` (per-key ordering check with last-seen state),
+  both Arrow-batched `applyInPandasWithState` (the state itself is
+  bounded: one tiny tuple per distinct key, not per row).
 
 Whole-table constraints (global uniqueness without a key horizon,
 distribution drift) need retractions; they stay batch/checkpoint
@@ -122,6 +123,102 @@ def _windowed_violations(
     return out.select(*group_by, "window_start", "_v.*")
 
 
+def streaming_dedup(
+    stream_df: DataFrame,
+    key_cols: Sequence[str],
+    content_col: str = "text",
+    emit_duplicates: bool = False,
+    shards: int | None = None,
+) -> DataFrame:
+    """Stateful exact dedup over an unbounded stream.
+
+    Keys state on the md5 content fingerprint (operators.text.
+    normalize_text semantics, same key as batch `dedup.exact_duplicates`)
+    via applyInPandasWithState.
+
+    * emit_duplicates=False: pass through only the FIRST occurrence of
+      each content ever seen (streaming dedup for training-data feeds).
+    * emit_duplicates=True: emit the repeats instead, with `n_prior` =
+      how many occurrences preceded them (streaming uniqueness-violation
+      detection, the Unique constraint's unbounded analog).
+
+    Within a micro-batch, occurrence order is made deterministic by
+    sorting on key_cols. State is one counter per distinct content —
+    bounded by distinct fingerprints, not rows.
+
+    r06 (optimization guide §2.5 coarser keys / §4.2 vectorize): the
+    stream groups by a deterministic SHARD of the fingerprint, not the
+    raw fingerprint — grouping by fingerprint called the Python state
+    function once per distinct content (50k Python invocations per
+    micro-batch at the x10 bench scale, each paying concat +
+    per-group overhead), where the shard form calls it `shards` times
+    and handles each shard's fingerprints vectorized (groupby cumcount
+    in pandas). Per-shard state is the (fingerprint -> count) slice as
+    two parallel arrays; `shards` bounds state-value size — size it so
+    fingerprints/shards stays ~10^3 (default: 8x shuffle partitions
+    locally; a 100 TB corpus raises it so per-shard state stays flat,
+    trading state-store value size against per-group overhead).
+    Emitted rows are byte-identical to the per-fingerprint form: the
+    within-batch order and cross-batch counters are per fingerprint
+    either way.
+    """
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from xpshacl_spark.operators.dedup import fingerprint_col
+
+    keys = list(key_cols)
+    spark = stream_df.sparkSession
+    if shards is None:
+        shards = 8 * max(
+            1, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        )
+    tagged = stream_df.withColumn(
+        "_fp", fingerprint_col(content_col)
+    ).withColumn(
+        "_shard", F.pmod(F.xxhash64("_fp"), F.lit(shards)).cast("long")
+    )
+    fields = [f for f in tagged.schema.fields if f.name != "_shard"]
+    out_schema = StructType(fields + [StructField("n_prior", LongType())])
+
+    def fn(key, pdfs, state):
+        import pandas as pd
+
+        if state.exists:
+            fps, counts = state.get
+            seen = dict(zip(fps, counts))
+        else:
+            seen = {}
+        batch = pd.concat(list(pdfs))
+        if len(batch) == 0:
+            state.update((list(seen), list(seen.values())))
+            return
+        batch = batch.sort_values(
+            ["_fp", *keys], kind="mergesort"
+        ).reset_index(drop=True)
+        prior = batch["_fp"].map(seen).fillna(0).astype("int64")
+        batch["n_prior"] = prior + batch.groupby("_fp").cumcount()
+        totals = batch.groupby("_fp").size()
+        for fp, cnt in totals.items():
+            seen[fp] = seen.get(fp, 0) + int(cnt)
+        state.update((list(seen), list(seen.values())))
+        out = (
+            batch[batch["n_prior"] > 0]
+            if emit_duplicates
+            else batch[batch["n_prior"] == 0]
+        )
+        if len(out):
+            yield out.drop(columns=["_shard"])
+
+    return tagged.groupBy("_shard").applyInPandasWithState(
+        fn,
+        out_schema,
+        "fps array<string>, counts array<long>",
+        "append",
+        GroupStateTimeout.NoTimeout,
+    )
+
+
 def streaming_monotonic(
     stream_df: DataFrame,
     group_by: Sequence[str],
@@ -140,11 +237,12 @@ def streaming_monotonic(
     transcript feeds; out-of-order arrivals compare against the latest
     seen ts, exactly like the batch lag over arrival order).
 
-    When every group column is an atomic string/integer type, the
-    stream groups by a deterministic SHARD of the key instead of the
-    raw key — one Python state call per shard instead of per group
-    (15k groups per batch at the x10 bench scale), with the per-group
-    lag computed vectorized inside the shard. Per-shard state is the
+    r06 (same redesign as :func:`streaming_dedup`): when every group
+    column is an atomic string/integer type, the stream groups by a
+    deterministic SHARD of the key instead of the raw key — one
+    Python state call per shard instead of per group (15k groups per
+    batch at the x10 bench scale), with the per-group lag computed
+    vectorized inside the shard. Per-shard state is the
     (json-encoded key -> last epoch-us) slice as two parallel arrays
     (json round-trips ints and strings exactly); exotic key types
     fall back to the per-group form unchanged.
@@ -309,8 +407,8 @@ def windowed_session_counts(
 
     Sessions are identified by their bounds, not by a per-group
     ordinal (a stream cannot know a session's ordinal without total
-    history). State is bounded: one open session struct per active
-    group, closed by the watermark. Value-oracled end-to-end in
+    history). State is bounded: one open session struct per active group, closed
+    by the watermark. Value-oracled end-to-end in
     __spark_entry__.q_stream_sessions."""
     return (
         stream_df.withWatermark(ts_col, watermark)
