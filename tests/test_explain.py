@@ -178,6 +178,38 @@ def test_cache_kill_mid_save_keeps_previous(sig, tmp_path, monkeypatch):
     assert os.listdir(tmp_path) == ["cache.parquet"]
 
 
+def test_cache_save_merges_with_other_writers(sig, tmp_path):
+    """Two caches opened on one path each add a different signature and
+    save: the second save merges the first's rows instead of dropping
+    them. On a shared (signature, language) the saving cache's row wins,
+    and clear() still leaves an empty cache."""
+    p = str(tmp_path / "cache.parquet")
+    other = ViolationSignature("other_constraint", "other_property", "other_type")
+    a, b, c = ExplanationCache(p), ExplanationCache(p), ExplanationCache(p)
+    a.add_violation(sig, {"natural_language_explanation": "from a"})
+    b.add_violation(other, {"natural_language_explanation": "from b"})
+    a.save()
+    b.save()
+
+    back = ExplanationCache(p)
+    assert back.get_explanation(sig)["natural_language_explanation"] == "from a"
+    assert back.get_explanation(other)["natural_language_explanation"] == "from b"
+    single = ExplanationCache()
+    single.add_violation(sig, {"natural_language_explanation": "from a"})
+    single.add_violation(other, {"natural_language_explanation": "from b"})
+    assert back.size() == single.size()
+
+    c.add_violation(sig, {"natural_language_explanation": "from c"})
+    c.save()
+    back = ExplanationCache(p)
+    assert back.get_explanation(sig)["natural_language_explanation"] == "from c"
+    assert back.has_violation(other)
+    assert back.size() == single.size()
+
+    back.clear()
+    assert ExplanationCache(p).size() == 0
+
+
 # ---------------------------------------------------------------------------
 # justification trees (reference: tests/test_justification_tree_builder.py)
 # ---------------------------------------------------------------------------

@@ -123,6 +123,54 @@ def test_drift_ks_variant(spark):
     assert rep.violations.count() == 1
 
 
+def test_validate_with_drift_starts_no_job(spark):
+    """validate() only builds the plan: once the engine has memoised its
+    FK membership probes, compiling the transcript suite with a Drift
+    check starts no Spark job — the histogram and the statistic run
+    when the violations are read."""
+    from xpshacl_spark.datagen import roles_dim, tools_dim, transcripts
+    from xpshacl_spark.suites import transcript_shapes
+
+    engine = ValidationEngine(
+        spark, dims={"roles": roles_dim(spark), "tools": tools_dim(spark)}
+    )
+    df = transcripts(spark, n_convs=20)
+    drift = Drift("length(text)", lo=0.0, hi=400.0, bins=8,
+                  baseline=tuple(range(10)))
+    shapes = transcript_shapes(drift=drift)
+    keys = ["conv_id", "turn_idx"]
+    engine.validate(df, shapes, keys)  # memoises the FK probes
+
+    sc = spark.sparkContext
+    group = "validate-with-drift-no-job"
+    sc.setJobGroup(group, "validate with memoised probes")
+    try:
+        rep = engine.validate(df, shapes, keys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert rep.metrics["n_shapes"] == len(shapes)
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"stat": "kl"}, "stat"),
+        ({"bins": 0, "baseline": (1, 1)}, "bins"),
+        ({"lo": 5.0, "hi": 5.0}, "lo < hi"),
+        ({"baseline": (1, 2, 3)}, "bin count mismatch"),
+    ],
+)
+def test_bad_drift_declaration_raises_at_compile(spark, kwargs, match):
+    """A Drift with an unknown stat, no bins, an empty range or a
+    baseline that is not bins + 2 long is rejected by validate()."""
+    spec = {"lo": 0.0, "hi": 10.0, "bins": 4, "baseline": (1,) * 6, **kwargs}
+    shape = Shape("bad_drift", (Drift("v", **spec),))
+    df = spark.createDataFrame([(1, 2.0)], "k long, v double")
+    with pytest.raises(ValueError, match=match):
+        ValidationEngine(spark).validate(df, [shape], ["k"])
+
+
 def test_approx_quantiles_relation_shape_and_bound(spark):
     """approx_quantiles_relation matches quantiles_relation's relation
     shape, its values are actual data values within the sketch's rank

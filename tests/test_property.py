@@ -304,6 +304,150 @@ def test_two_sample_drift_matches_reference_stats(spark, xs_a, xs_b, bins):
 
 
 @given(
+    xs=st.lists(
+        st.one_of(
+            st.none(),
+            st.floats(min_value=-5.0, max_value=15.0, allow_nan=False),
+            st.sampled_from([-0.5, 0.0, 10.0, 10.5]),
+        ),
+        min_size=0, max_size=40,
+    ),
+    spec=st.integers(min_value=1, max_value=6).flatmap(
+        lambda bins: st.tuples(
+            st.just(bins),
+            st.lists(
+                st.integers(min_value=0, max_value=20),
+                min_size=bins + 2, max_size=bins + 2,
+            ),
+        )
+    ),
+    threshold=st.sampled_from([0.0, 0.01, 0.1, 0.5]),
+)
+@SLOW
+def test_drift_check_matches_reference_stats(spark, xs, spec, threshold):
+    """PROPERTY: validate()'s Drift rows (PSI and KS against a stored
+    baseline) agree with psi_statistic / ks_statistic over
+    python-binned counts — empty input, NULLs (no bin), values below lo
+    (underflow), at and above hi (overflow) and the unclamped in-range
+    floor. The verdict must match exactly, the 6-decimal value to 1e-6,
+    and the context must carry stat, threshold and n."""
+    import math
+
+    from xpshacl_spark.operators.drift import ks_statistic, psi_statistic
+    from xpshacl_spark.shapes import Drift
+
+    bins, baseline = spec
+    lo, hi = 0.0, 10.0
+    width = (hi - lo) / bins
+    cur = [0] * (bins + 2)
+    for v in xs:
+        if v is None:
+            continue
+        if v < lo:
+            cur[0] += 1
+        elif v >= hi:
+            cur[-1] += 1
+        else:
+            cur[1 + math.floor((v - lo) / width)] += 1
+    want = {
+        "psi": psi_statistic(baseline, cur),
+        "ks": ks_statistic(baseline, cur),
+    }
+
+    shape = Shape(
+        "drift",
+        tuple(
+            Drift("x", lo, hi, bins=bins, stat=stat, threshold=threshold,
+                  baseline=tuple(baseline))
+            for stat in ("psi", "ks")
+        ),
+    )
+    df = spark.createDataFrame(list(enumerate(xs)), "k long, x double")
+    rows = ValidationEngine(spark).validate(df, [shape], ["k"]).violations.collect()
+    got = {r.context["stat"]: r for r in rows}
+    assert set(got) == {stat for stat, s in want.items() if s > threshold}
+    for stat, r in got.items():
+        assert abs(float(r.value) - want[stat]) <= 1e-6
+        assert r.k is None
+        assert r.context == {
+            "stat": stat, "threshold": str(threshold), "n": str(sum(cur)),
+        }
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
+            st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
+            st.one_of(st.none(), st.integers(min_value=-3, max_value=3)),
+        ),
+        min_size=0, max_size=25,
+    ),
+    dim=st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
+            st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
+        ),
+        min_size=0, max_size=5,
+    ),
+)
+@SLOW
+def test_null_key_semantics_match_duckdb(spark, rows, dim):
+    """PROPERTY: the documented NULL-key semantics, checked against
+    DuckDB SQL that spells them out:
+    * Unique groups NULL keys together (GROUP BY, not SQL UNIQUE);
+    * a ForeignKey with any NULL column passes, on both the inlined
+      single-column path and the anti-join multi-column path;
+    * Monotonic skips a row whose value or predecessor's value is NULL.
+    """
+    import duckdb
+
+    from xpshacl_spark.shapes import ForeignKey, Monotonic, Unique
+
+    data = [(i, a, b, v) for i, (a, b, v) in enumerate(rows)]
+    df = spark.createDataFrame(data, "id long, a int, b int, v int")
+    engine = ValidationEngine(
+        spark,
+        dims={
+            "d1": spark.createDataFrame([(a,) for a, _ in dim], "a int"),
+            "d2": spark.createDataFrame(dim, "a int, b int"),
+        },
+    )
+    shapes = [
+        Shape("uniq", (Unique(("a", "b")),)),
+        Shape("fk1", (ForeignKey(("a",), "d1", ("a",)),)),
+        Shape("fk2", (ForeignKey(("a", "b"), "d2", ("a", "b")),)),
+        Shape("mono", (Monotonic(("a",), "id", "v"),)),
+    ]
+    got: dict = {s.shape_id: [] for s in shapes}
+    for r in engine.validate(df, shapes, ["id", "a", "b"]).violations.collect():
+        if r.shape_id == "uniq":
+            got["uniq"].append((r.a, r.b, int(r.context["actualCount"])))
+        else:
+            got[r.shape_id].append(r.id)
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, a INT, b INT, v INT)")
+    con.execute("CREATE TABLE d (a INT, b INT)")
+    if data:
+        con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", data)
+    if dim:
+        con.executemany("INSERT INTO d VALUES (?, ?)", dim)
+    sql = {
+        "uniq": "SELECT a, b, count(*) FROM t GROUP BY a, b HAVING count(*) > 1",
+        "fk1": "SELECT id FROM t WHERE a IS NOT NULL "
+               "AND a NOT IN (SELECT a FROM d WHERE a IS NOT NULL)",
+        "fk2": "SELECT id FROM t WHERE a IS NOT NULL AND b IS NOT NULL "
+               "AND NOT EXISTS (SELECT 1 FROM d WHERE d.a = t.a AND d.b = t.b)",
+        "mono": "SELECT id FROM (SELECT id, v, lag(v) OVER "
+                "(PARTITION BY a ORDER BY id) AS prev FROM t) WHERE prev > v",
+    }
+    for sid, q in sql.items():
+        want = [tuple(x) if len(x) > 1 else x[0] for x in con.execute(q).fetchall()]
+        assert sorted(got[sid], key=repr) == sorted(want, key=repr), sid
+
+
+@given(
     docs=st.lists(
         st.lists(
             st.sampled_from(["a", "b", "c"]), min_size=0, max_size=14

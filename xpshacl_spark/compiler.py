@@ -15,8 +15,9 @@ which violations are *born* structured. Scale design (SURVEY.md §7):
 * Ordering constraints sharing (partition, order) share ONE window
   (one shuffle + sort).
 * Referential constraints compile to broadcast LEFT ANTI joins.
-* Distribution constraints share ONE single-pass histogram aggregation;
-  KS/PSI is computed on the driver from the tiny merged bin counts.
+* Whole-table constraints (dataset metrics, distribution drift) share
+  ONE global aggregation; KS/PSI are expressions over its bin-count
+  arrays, so drift runs inside the plan like every other check.
 
 The resulting plan has at most: 1 row-check scan + 1 shuffle per
 distinct group key + 1 shuffle per distinct window spec + anti-joins
@@ -26,16 +27,15 @@ of shapes.
 
 from __future__ import annotations
 
-import math
 import time
 from functools import reduce
 from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from xpshacl_spark.model import VIOLATION_COLUMNS, ViolationType
+from xpshacl_spark.operators.drift import ks_column, psi_column
 from xpshacl_spark.shapes import (
     DatasetMetric,
     DenseIndex,
@@ -264,6 +264,9 @@ class ValidationEngine:
         """
         key_cols = list(key_cols)
         t0 = time.monotonic()
+        # first, so a bad whole-table declaration raises before any
+        # probe job runs
+        dataset_parts = self._compile_dataset_checks(df, shapes, key_cols)
         auto_salt: dict[str, int] = {}
         if salt_partitions == "auto":
             gkeys = {
@@ -318,10 +321,9 @@ class ValidationEngine:
         )
         parts.extend(self._compile_fk_checks(df, shapes, key_cols))
         parts.extend(self._compile_fd_checks(df, shapes, key_cols))
-        parts.extend(self._compile_dataset_checks(df, shapes, key_cols))
+        parts.extend(dataset_parts)
         parts.extend(self._compile_path_checks(df, shapes, key_cols))
         parts.extend(self._compile_set_pair_checks(df, shapes, key_cols))
-        parts.extend(self._compile_drift_checks(df, shapes, key_cols))
         parts.extend(self._compile_sql_checks(df, shapes, key_cols))
 
         if parts:
@@ -889,20 +891,24 @@ class ValidationEngine:
         return outs
 
     # ------------------------------------------------------------------
-    # dataset-scope metric assertions: ONE fused aggregation, lazy
+    # whole-table checks (metrics, drift): ONE fused aggregation, lazy
     # ------------------------------------------------------------------
 
     def _compile_dataset_checks(
         self, df: DataFrame, shapes: Sequence[Shape], key_cols: list[str]
     ) -> list[DataFrame]:
-        """DatasetMetric — every metric across every shape becomes a
-        pair of conditional aggregates in ONE global aggregation (each
-        shape's target folds into the aggregate's filter, so differing
-        targets don't split the job). The result is a 1-row relation;
-        violation structs explode out of it exactly like the group
-        plan. Fully lazy — unlike Drift there is no driver collect, the
-        single row unions into the violations plan."""
+        """DatasetMetric and Drift — every metric across every shape
+        becomes a pair of conditional aggregates, and every drift check
+        an array of bins+2 counts, in ONE global aggregation (a metric
+        shape's target folds into its aggregate's filter; a histogram
+        covers every row). The 1-row result explodes into violation
+        structs like the group plan: fully lazy, the single row unions
+        into the violations. Drift bins: NULL none, < lo underflow,
+        >= hi overflow, else floor((v - lo) / width) unclamped; the
+        statistic is psi_column / ks_column against the baseline, and
+        a Drift without a baseline checks nothing."""
         pairs = []
+        drifts = []
         for shape in shapes:
             for c in shape.dataset_constraints():
                 if c.min_value is None and c.max_value is None:
@@ -920,7 +926,19 @@ class ValidationEngine:
                         f"DatasetMetric({c.metric!r}) requires a column"
                     )
                 pairs.append((shape, c))
-        if not pairs:
+            for c in shape.drift_constraints():
+                if c.stat not in ("psi", "ks"):
+                    raise ValueError(f"Drift stat {c.stat!r} is not 'psi' or 'ks'")
+                if c.bins < 1 or c.hi <= c.lo:
+                    raise ValueError(
+                        f"Drift needs bins >= 1 and lo < hi, got bins={c.bins} "
+                        f"over [{c.lo}, {c.hi})"
+                    )
+                if c.baseline and len(c.baseline) != c.bins + 2:
+                    raise ValueError("Drift baseline: bin count mismatch (need bins + 2)")
+                if c.baseline:
+                    drifts.append((shape, c))
+        if not pairs and not drifts:
             return []
 
         aggs = []
@@ -956,6 +974,18 @@ class ValidationEngine:
                 aggs.append(F.max(F.when(cond, col)).alias(f"_a{i}"))
                 metrics.append(F.col(f"_a{i}").cast("double"))
 
+        for i, (shape, c) in enumerate(drifts):
+            e = F.expr(c.expression)
+            width = (c.hi - c.lo) / c.bins
+            bucket = (
+                F.when(e.isNull(), F.lit(None))
+                .when(e < F.lit(c.lo), F.lit(-1))
+                .when(e >= F.lit(c.hi), F.lit(c.bins))
+                .otherwise(F.floor((e - F.lit(c.lo)) / F.lit(width)).cast("int"))
+            )
+            counts = [F.count(F.when(bucket == b, 1)) for b in range(-1, c.bins + 1)]
+            aggs.append(F.array(*counts).alias(f"_h{i}"))
+
         row = df.agg(*aggs)
         structs = []
         for i, (shape, c) in enumerate(pairs):
@@ -976,6 +1006,19 @@ class ValidationEngine:
                 F.lit(None if c.max_value is None else str(c.max_value)),
             )
             structs.append(F.when(violated, _violation_struct(shape, c, m, ctx)))
+        for i, (shape, c) in enumerate(drifts):
+            counts = F.col(f"_h{i}")
+            baseline = F.array(*[F.lit(float(x)) for x in c.baseline])
+            stat = (ks_column if c.stat == "ks" else psi_column)(baseline, counts)
+            n = F.aggregate(counts, F.lit(0).cast("long"), lambda acc, x: acc + x)
+            ctx = F.create_map(
+                F.lit("stat"), F.lit(c.stat),
+                F.lit("threshold"), F.lit(str(c.threshold)),
+                F.lit("n"), n.cast("string"),
+            )
+            value = F.format_string("%.6f", stat)
+            violated = stat > F.lit(float(c.threshold))
+            structs.append(F.when(violated, _violation_struct(shape, c, value, ctx)))
         arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
         out = row.select(F.explode(arr).alias("_v")).select("_v.*")
         return [self._align_keys(out, df, key_cols, present=[])]
@@ -1122,85 +1165,6 @@ class ValidationEngine:
                         self._align_keys(out, df, key_cols, present=gkey)
                     )
         return outs
-
-    # ------------------------------------------------------------------
-    # distribution drift: ONE shared histogram pass, driver-side stats
-    # ------------------------------------------------------------------
-
-    def _compile_drift_checks(
-        self, df: DataFrame, shapes: Sequence[Shape], key_cols: list[str]
-    ) -> list[DataFrame]:
-        pairs = []
-        for shape in shapes:
-            for c in shape.drift_constraints():
-                pairs.append((shape, c))
-        if not pairs:
-            return []
-
-        # single fused aggregation: bins+2 conditional counts per check
-        aggs = []
-        for i, (shape, c) in enumerate(pairs):
-            e = F.expr(c.expression)
-            width = (c.hi - c.lo) / c.bins
-            bucket = (
-                F.when(e.isNull(), F.lit(None))
-                .when(e < F.lit(c.lo), F.lit(-1))
-                .when(e >= F.lit(c.hi), F.lit(c.bins))
-                .otherwise(F.floor((e - F.lit(c.lo)) / F.lit(width)).cast("int"))
-            )
-            for b in range(-1, c.bins + 1):
-                aggs.append(
-                    F.count(F.when(bucket == F.lit(b), 1)).alias(f"_d{i}_b{b + 1}")
-                )
-        row = df.agg(*aggs).collect()[0].asDict()
-
-        from xpshacl_spark.operators.drift import ks_statistic, psi_statistic
-
-        viol_tuples = []
-        for i, (shape, c) in enumerate(pairs):
-            cur = [row[f"_d{i}_b{b + 1}"] for b in range(-1, c.bins + 1)]
-            base = list(c.baseline) if c.baseline else None
-            if base is None:
-                continue
-            if c.stat == "ks":
-                stat = ks_statistic(base, cur)
-            else:
-                stat = psi_statistic(base, cur)
-            if stat > c.threshold:
-                viol_tuples.append(
-                    (
-                        shape.shape_id,
-                        c.component(),
-                        c.violation_type(),
-                        c.property_path(),
-                        f"{stat:.6f}",
-                        shape.default_message(c),
-                        shape.severity,
-                        {
-                            "stat": c.stat,
-                            "threshold": str(c.threshold),
-                            "n": str(sum(cur)),
-                        },
-                    )
-                )
-        if not viol_tuples:
-            return []
-        schema = T.StructType(
-            [
-                T.StructField("shape_id", T.StringType()),
-                T.StructField("constraint_component", T.StringType()),
-                T.StructField("violation_type", T.StringType()),
-                T.StructField("property_path", T.StringType()),
-                T.StructField("value", T.StringType()),
-                T.StructField("message", T.StringType()),
-                T.StructField("severity", T.StringType()),
-                T.StructField(
-                    "context", T.MapType(T.StringType(), T.StringType())
-                ),
-            ]
-        )
-        small = self.spark.createDataFrame(viol_tuples, schema)
-        return [self._align_keys(small, df, key_cols, present=[])]
 
     # ------------------------------------------------------------------
     # SQL escape hatch (sh:sparql analog)

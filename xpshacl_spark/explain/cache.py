@@ -64,15 +64,32 @@ class ExplanationCache:
     def save(self) -> None:
         """Single serialize per run (violation_kg.py:59-66 / main.py:213-216).
 
-        Written to a temporary file in the same directory and renamed
-        over `path`, so a kill mid-save leaves the previous cache
-        loadable instead of a torn file."""
+        Merges with the file on disk first: its rows whose (signature,
+        language) this cache does not hold are kept, so runners sharing
+        a cache path keep each other's entries; on a shared key this
+        cache's row wins. Two saves that overlap between the read and
+        the rename can still drop the first one's new rows."""
+        df = self._df
+        if self.path and os.path.exists(self.path):
+            disk = pd.read_parquet(self.path)
+            held = set(zip(df["signature_id"], df["language"]))
+            disk = disk[
+                [k not in held for k in zip(disk["signature_id"], disk["language"])]
+            ]
+            if len(disk):
+                df = pd.concat([df, disk], ignore_index=True)
+        self._write(df)
+
+    def _write(self, df: pd.DataFrame) -> None:
+        """Write `df` to a temporary file in the same directory and
+        rename it over `path`, so a kill mid-save leaves the previous
+        cache loadable instead of a torn file."""
         if not self.path:
             return
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         tmp = f"{self.path}.{os.getpid()}.tmp"
         try:
-            self._df.to_parquet(tmp, index=False)
+            df.to_parquet(tmp, index=False)
             os.replace(tmp, self.path)
         except BaseException:
             if os.path.exists(tmp):
@@ -198,7 +215,7 @@ class ExplanationCache:
     def clear(self) -> None:
         """violation_kg.py:286-291."""
         self._df = pd.DataFrame(columns=_COLUMNS)
-        self.save()
+        self._write(self._df)
 
     def size(self) -> int:
         """Number of emulated RDF facts, preserving the reference's

@@ -1,16 +1,22 @@
 """Distribution-drift statistics over merged histogram bins.
 
-The expensive part (per-bin counts) runs as one fused Spark aggregation
-(see compiler._compile_drift_checks / profiler.profile); these finals
-run on the driver over tiny arrays. Deterministic given fixed bins
-(SURVEY.md §4 custom item 2). The reference has no drift checks — this
-is a north-rule addition (BASELINE.json north_star).
+The per-bin counts come from one fused Spark aggregation (the
+compiler's whole-table aggregation, streaming.windowed_drift's and
+two_sample_drift's). PSI and KS over them are Column expressions
+(psi_column / ks_column) in the same plan: no collect, no driver-side
+arithmetic. psi_statistic / ks_statistic are the Python references.
+Deterministic given fixed bins (SURVEY.md §4 custom item 2). The
+reference has no drift checks — a north-rule addition
+(BASELINE.json north_star).
 """
 
 from __future__ import annotations
 
 import math
 from typing import Sequence
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 
 def _proportions(counts: Sequence[float], eps: float) -> list[float]:
@@ -53,14 +59,70 @@ def ks_statistic(
     return float(gap)
 
 
+# The same statistics as Columns over two equal-length arrays of bin
+# counts (callers check the length; zip_with pads with NULL). Every sum
+# folds from 0.0 in bin order like Python's sum(), so the doubles are
+# the references' up to an ulp of log; the tree is O(bins).
+
+
+def _total(counts: Column) -> Column:
+    return F.aggregate(counts, F.lit(0.0), lambda acc, c: acc + c)
+
+
+def _proportions_column(counts: Column, eps: float) -> Column:
+    """_proportions: c / total floored at eps; a zero total is all-eps."""
+    counts = counts.cast("array<double>")
+    total = _total(counts)
+    return F.when(
+        total > 0,
+        F.transform(counts, lambda c: F.greatest(c / total, F.lit(eps))),
+    ).otherwise(F.transform(counts, lambda c: F.lit(eps)))
+
+
+def psi_column(baseline: Column, current: Column, eps: float = 1e-6) -> Column:
+    """psi_statistic over two array columns of bin counts."""
+    terms = F.zip_with(
+        _proportions_column(current, eps),
+        _proportions_column(baseline, eps),
+        lambda p, q: (p - q) * F.log(p / q),
+    )
+    return F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)
+
+
+def ks_column(baseline: Column, current: Column) -> Column:
+    """ks_statistic over two array columns of bin counts: one fold
+    carrying both running ECDF sums and the largest gap so far."""
+
+    def quotients(counts):  # c / total; a zero total divides by 1.0
+        counts = counts.cast("array<double>")
+        total = _total(counts)
+        denom = F.when(total == 0, F.lit(1.0)).otherwise(total)
+        return F.transform(counts, lambda c: c / denom)
+
+    def step(acc, x):
+        cb = acc["cb"] + x["b"]
+        cc = acc["cc"] + x["c"]
+        return F.struct(
+            cb.alias("cb"),
+            cc.alias("cc"),
+            F.greatest(acc["gap"], F.abs(cc - cb)).alias("gap"),
+        )
+
+    pairs = F.zip_with(
+        quotients(baseline),
+        quotients(current),
+        lambda b, c: F.struct(b.alias("b"), c.alias("c")),
+    )
+    zero = F.struct(*[F.lit(0.0).alias(f) for f in ("cb", "cc", "gap")])
+    return F.aggregate(pairs, zero, step, lambda acc: acc["gap"])
+
+
 def bin_index(col, lo: float, width: float, nbins: int):
     """Fixed-bin histogram index as a Spark Column:
     clamp(floor((col - lo) / width), 0, nbins - 1). The ONE definition
     shared by the batch profiler baseline and streaming.windowed_drift —
     baseline and live windows must bin a value identically or PSI
     measures the binning skew, not drift."""
-    from pyspark.sql import functions as F
-
     return F.least(
         F.greatest(
             F.floor((col - F.lit(float(lo))) / F.lit(float(width))).cast("int"),
@@ -89,23 +151,12 @@ def two_sample_drift(
     hash aggregation with 2*(bins+2) conditional count sums (map-side
     partials; the shuffle carries one row of ints per map partition) —
     a single pass over both inputs, no groupBy key, no collect. The
-    one-row result then explodes into a (bin, ca, cb) relation of
-    bins+2 rows, over which totals / eps-floored proportions /
-    cumulative ECDFs are window + aggregate expressions: every
-    subexpression is computed once per bin row, keeping the Catalyst
-    tree O(bins) (the all-in-one-expression form duplicates the
-    (bins+2)-term total inside every cumulative term — O(bins^3) nodes
-    at the 64-bin default, past the 64 KB codegen limit). The final
-    stats aggregate one 66-row partition; the heavy work stays in the
-    first fused agg. Formulas mirror psi_statistic / ks_statistic
-    exactly (accumulation in bin order, as a left-associated sum), so
-    an ANSI-SQL oracle reproduces the doubles. In-range values are
-    floor-binned with a clamp to bins-1 (width = (hi-lo)/bins is
-    inexact in doubles; an unclamped floor can emit `bins` for a value
-    just under hi, misfiling it as overflow)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    one-row result holds the two count arrays; psi_column / ks_column
+    turn them into the two statistics, exactly psi_statistic /
+    ks_statistic's arithmetic, so an ANSI-SQL oracle reproduces the
+    doubles. In-range values are floor-binned with a clamp to bins-1
+    (width = (hi-lo)/bins is inexact in doubles; an unclamped floor can
+    emit `bins` for a value just under hi, misfiling it as overflow)."""
     width = (hi - lo) / bins
 
     def _bucket(df, tag):
@@ -126,77 +177,19 @@ def two_sample_drift(
         return proj.select(b.alias("_b"), F.lit(tag).alias("_t"))
 
     u = _bucket(df_a, 0).unionByName(_bucket(df_b, 1))
-    n = bins + 2  # underflow + bins + overflow
-    aggs = []
-    for side in (0, 1):
-        for j in range(n):
-            aggs.append(
-                F.coalesce(  # empty union: 0 counts, not NULL
-                    F.sum(
-                        (
-                            (F.col("_t") == side) & (F.col("_b") == j - 1)
-                        ).cast("long")
-                    ),
-                    F.lit(0),
-                ).alias(f"_c{side}_{j}")
-            )
-    row = u.agg(*aggs)
-    cells = row.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.col(f"_c0_{j}").alias("ca"),
-                        F.col(f"_c1_{j}").alias("cb"),
-                    )
-                    for j in range(n)
-                ]
-            )
-        ).alias("_x")
-    ).select("_x.*")
-    w_all = Window.partitionBy().rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w_cum = Window.partitionBy().orderBy("j").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # totals once per row; proportions floored at eps (psi_statistic's
-    # _proportions: an empty side is all-eps)
-    staged = cells.select(
-        "j",
-        "ca",
-        "cb",
-        F.sum("ca").over(w_all).alias("ta"),
-        F.sum("cb").over(w_all).alias("tb"),
-    )
 
-    def _prop(c, total):
-        return F.when(
-            total > 0,
-            F.greatest(c.cast("double") / total.cast("double"), F.lit(eps)),
-        ).otherwise(F.lit(eps))
+    def _counts(side):  # underflow + bins + overflow; empty union: 0, not NULL
+        def hit(j):
+            return ((F.col("_t") == side) & (F.col("_b") == j)).cast("long")
 
-    q = _prop(F.col("ca"), F.col("ta"))  # baseline
-    p = _prop(F.col("cb"), F.col("tb"))  # current
-    ta_d = F.when(F.col("ta") > 0, F.col("ta").cast("double")).otherwise(
-        F.lit(1.0)
-    )
-    tb_d = F.when(F.col("tb") > 0, F.col("tb").cast("double")).otherwise(
-        F.lit(1.0)
-    )
-    terms = staged.select(
-        ((p - q) * F.log(p / q)).alias("_psi_term"),
-        F.abs(
-            F.sum(F.col("cb").cast("double") / tb_d).over(w_cum)
-            - F.sum(F.col("ca").cast("double") / ta_d).over(w_cum)
-        ).alias("_gap"),
-    )
-    out = terms.agg(
-        F.sum("_psi_term").alias("_psi"), F.max("_gap").alias("_ks")
-    )
+        return F.array(
+            *[F.coalesce(F.sum(hit(j)), F.lit(0)) for j in range(-1, bins + 1)]
+        )
+
+    row = u.agg(_counts(0).alias("_ca"), _counts(1).alias("_cb"))
+    ca, cb = F.col("_ca"), F.col("_cb")
     structs = F.array(
-        F.struct(F.lit("psi").alias("stat"), F.col("_psi").alias("value")),
-        F.struct(F.lit("ks").alias("stat"), F.col("_ks").alias("value")),
+        F.struct(F.lit("psi").alias("stat"), psi_column(ca, cb, eps).alias("value")),
+        F.struct(F.lit("ks").alias("stat"), ks_column(ca, cb).alias("value")),
     )
-    return out.select(F.explode(structs).alias("_s")).select("_s.*")
+    return row.select(F.explode(structs).alias("_s")).select("_s.*")

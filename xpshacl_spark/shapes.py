@@ -887,7 +887,14 @@ class QualifiedMaxCount(GroupMaxCount):
 class Unique(Constraint):
     """North-rule uniqueness (template: sh:uniqueLang,
     data/shark_shapes.ttl:37,45): the column tuple must identify at most
-    one row. Emits one violation per duplicated key with actualCount."""
+    one row. Emits one violation per duplicated key with actualCount.
+
+    NULL keys: rows are grouped as GROUP BY groups them, so NULL equals
+    NULL — two rows keyed (NULL, 1) are a duplicate. This is stricter
+    than SQL UNIQUE, which lets any number of rows with a NULL key
+    column through (see the certain-key discussion in "Entity
+    Integrity, Referential Integrity, and Query Optimization with
+    Embedded Uniqueness Constraints", ICDE 2019)."""
 
     columns: tuple
 
@@ -906,7 +913,12 @@ class Monotonic(Constraint):
     """North-rule ordering check (sh:lessThanOrEquals analog across
     consecutive rows): `column` must be non-decreasing in `order_by`
     within each `group_by` group. Compiled to a lag() window
-    (SURVEY.md §2A #16)."""
+    (SURVEY.md §2A #16).
+
+    NULLs: each row is compared with its immediate predecessor in
+    `order_by` order; a row whose value or whose predecessor's value is
+    NULL is skipped (the comparison is unknown), and a NULL `group_by`
+    key forms one group, as in GROUP BY."""
 
     group_by: tuple
     order_by: str
@@ -1166,7 +1178,9 @@ class ForeignKey(Constraint):
     extended_shacl_validator.py:92 / shark_shapes.ttl:182,193): the
     column tuple must exist in dimension table `ref_table` columns
     `ref_columns`. Compiled to a broadcast LEFT ANTI join; NULL FKs are
-    absent values and pass (use NotNull to forbid)."""
+    absent values and pass (use NotNull to forbid): a row whose FK tuple
+    has a NULL in ANY column passes, as under SQL's MATCH SIMPLE, and a
+    NULL in the dimension matches nothing."""
 
     columns: tuple
     ref_table: str
@@ -1226,9 +1240,12 @@ class PathValue(Constraint):
 class Drift(Constraint):
     """North-rule distribution-drift check: KS / PSI of `expression`
     (SQL expr over the row) vs a stored baseline histogram with fixed
-    equi-width bins. The per-bin counts are one shared single-pass agg;
-    the final statistic is computed driver-side from the tiny merged
-    bins (SURVEY.md §4 item 2)."""
+    equi-width bins. The per-bin counts are part of the compiler's one
+    whole-table aggregation, and the statistic is an expression over
+    them (operators.drift.psi_column / ks_column), so validate() runs
+    nothing for it (SURVEY.md §4 item 2). Checked at compile time:
+    stat is 'psi' or 'ks', bins >= 1, lo < hi, and the baseline (if
+    any) holds bins + 2 counts (underflow, bins, overflow)."""
 
     expression: str  # numeric SQL expr, e.g. "length(text)"
     lo: float

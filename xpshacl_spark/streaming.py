@@ -465,17 +465,17 @@ def windowed_drift(
     the baseline (floor((v - lo)/width), clamped to [0, nbins-1]) with
     ONE streaming aggregation — per-bin counts as conditional sums, so
     no second stateful operator is needed (multi-agg streams are
-    restricted) — and the PSI is computed IN-PLAN from the count
-    columns and the baseline-proportion literals: no driver round trip,
-    works inside any sink. Windows emit in append mode when the
-    watermark closes them. Null values are excluded (they belong to a
-    completeness check, not a drift bin).
+    restricted) — and the PSI is computed IN-PLAN by
+    operators.drift.psi_column from the count columns and the baseline
+    literals: no driver round trip, works inside any sink. Windows emit
+    in append mode when the watermark closes them. Null values are
+    excluded (they belong to a completeness check, not a drift bin).
 
-    Same statistic as operators.drift.psi_statistic (proportions
-    floored at eps; left-to-right term sum) so batch and stream agree
-    bit-for-bit on the same rows.
+    psi_column is the arithmetic of operators.drift.psi_statistic
+    (proportions floored at eps; left-to-right term sum), the same
+    expression the batch Drift check uses.
     """
-    from xpshacl_spark.operators.drift import bin_index
+    from xpshacl_spark.operators.drift import bin_index, psi_column
 
     nb = len(baseline_counts)
     if nb < 2:
@@ -497,25 +497,19 @@ def windowed_drift(
         .groupBy(F.window(ts_col, window_duration).alias("_w"))
         .agg(
             F.count(v).alias("n_rows"),
-            *[
-                # explicit isNotNull: bin_index's greatest/least clamp
-                # SKIPS nulls, so a NULL value would land in bin 0
-                F.sum(
-                    F.when(v.isNotNull() & (idx == i), 1).otherwise(0)
-                ).alias(f"_c{i}")
-                for i in range(nb)
-            ],
+            # explicit isNotNull: bin_index's greatest/least clamp
+            # SKIPS nulls, so a NULL value would land in bin 0
+            F.array(
+                *[
+                    F.sum(F.when(v.isNotNull() & (idx == i), 1).otherwise(0))
+                    for i in range(nb)
+                ]
+            ).alias("_c"),
         )
         .where(F.col("n_rows") > 0)
     )
-    btot = float(sum(baseline_counts)) or 1.0
-    qs = [max(c / btot, eps) for c in baseline_counts]
-    total = F.col("n_rows").cast("double")
-    psi = None
-    for i in range(nb):
-        p = F.greatest(F.col(f"_c{i}").cast("double") / total, F.lit(eps))
-        term = (p - F.lit(qs[i])) * F.log(p / F.lit(qs[i]))
-        psi = term if psi is None else psi + term
+    baseline = F.array(*[F.lit(float(c)) for c in baseline_counts])
+    psi = psi_column(baseline, F.col("_c"), eps)
     return agg.select(
         F.col("_w.start").alias("window_start"),
         F.col("_w.end").alias("window_end"),
