@@ -1,0 +1,64 @@
+"""Source hygiene of the package, read from the AST alone (no Spark).
+
+A module-level private helper (`_name`) under xpshacl_spark/ that no
+.py file in the repository references is dead code: this test names it
+so it is deleted instead of accumulating."""
+
+import ast
+import os
+
+ROOT = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
+PKG = os.path.join(ROOT, "xpshacl_spark")
+
+
+def _py_files(top):
+    for dirpath, dirnames, filenames in os.walk(top):
+        dirnames[:] = [d for d in dirnames if not d.startswith(".")]
+        for fn in filenames:
+            if fn.endswith(".py"):
+                yield os.path.join(dirpath, fn)
+
+
+def _references(tree):
+    """Every identifier a module reads: names, attributes, imported
+    names, and whole string constants (getattr / monkeypatch targets).
+    A `def` or `class` statement's own name is none of these."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1]
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            yield node.value
+
+
+def _private_defs(tree):
+    for node in tree.body:
+        if (
+            isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and node.name.startswith("_")
+            and not node.name.startswith("__")
+        ):
+            yield node
+
+
+def test_every_private_module_helper_is_referenced():
+    trees = {}
+    for path in _py_files(ROOT):
+        with open(path, encoding="utf-8") as f:
+            trees[path] = ast.parse(f.read(), filename=path)
+    referenced = set()
+    for tree in trees.values():
+        referenced.update(_references(tree))
+    unreferenced = [
+        f"{os.path.relpath(path, ROOT)}:{node.lineno} {node.name}"
+        for path, tree in sorted(trees.items())
+        if path.startswith(PKG + os.sep)
+        for node in _private_defs(tree)
+        if node.name not in referenced
+    ]
+    assert not unreferenced, "private helpers with no reference: " + ", ".join(
+        unreferenced
+    )

@@ -1,12 +1,15 @@
 """Fused profiler + KS/PSI drift statistics + Drift constraint e2e."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
 from xpshacl_spark.compiler import ValidationEngine
-from xpshacl_spark.operators.drift import ks_statistic, psi_statistic
+from xpshacl_spark.operators.drift import ks_statistic, psi_statistic, two_sample_drift
 from xpshacl_spark.operators.profile import HistSpec, ProfileSpec, profile
 from xpshacl_spark.shapes import Drift, Shape
+from xpshacl_spark.streaming import windowed_drift
 
 
 def test_profile_single_pass_stats(spark):
@@ -169,6 +172,73 @@ def test_bad_drift_declaration_raises_at_compile(spark, kwargs, match):
     df = spark.createDataFrame([(1, 2.0)], "k long, v double")
     with pytest.raises(ValueError, match=match):
         ValidationEngine(spark).validate(df, [shape], ["k"])
+
+
+def _profile_hist(spec):
+    return lambda df: profile(df, [ProfileSpec("x", hist=spec)])
+
+
+@pytest.mark.parametrize(
+    "call, match",
+    [
+        (_profile_hist(HistSpec(5.0, 5.0, 4)), "lo < hi"),
+        (_profile_hist(HistSpec(0.0, 10.0, 0)), "bins >= 1"),
+        (lambda df: two_sample_drift(df, df, "x", 0.0, 10.0, bins=0), "bins >= 1"),
+        (lambda df: two_sample_drift(df, df, "x", 5.0, 5.0), "lo < hi"),
+        (lambda df: windowed_drift(df, "x", [1, 1], 0.0, 0.0), "width > 0"),
+    ],
+    ids=[
+        "profile-empty-range",
+        "profile-no-bins",
+        "two-sample-no-bins",
+        "two-sample-empty-range",
+        "windowed-zero-width",
+    ],
+)
+def test_bad_histogram_declaration_raises(spark, call, match):
+    """A histogram with no bin, an empty range or a zero bin width is
+    rejected with ValueError when the plan is built, never by a silent
+    count, a ZeroDivisionError or a failing query."""
+    df = spark.createDataFrame(
+        [(1.0, datetime.datetime(2024, 1, 1))], "x double, ts timestamp"
+    )
+    with pytest.raises(ValueError, match=match):
+        call(df)
+
+
+@pytest.mark.parametrize(
+    "ddl, values, spec, expected",
+    [
+        # width = 0.9 / 3 = 0.30000000000000004: 0.8999999999999999 is
+        # below hi yet floors to bin 3 == bins, so it lands in overflow
+        (
+            "double",
+            [0.8999999999999999, None, -1.0, 0.0, 0.9, 1.0, 0.45],
+            HistSpec(0.0, 0.9, 3),
+            [1, 1, 1, 0, 3],
+        ),
+        (
+            "int",
+            [-3, 0, 2, 3, 7, 9, 10, 12, None],
+            HistSpec(0.0, 10.0, 4),
+            [1, 2, 1, 1, 1, 2],
+        ),
+    ],
+    ids=["double", "int"],
+)
+def test_profile_and_drift_bin_alike_at_the_edges(spark, ddl, values, spec, expected):
+    """A profile histogram used as a Drift baseline over the same rows
+    scores exactly 0: the profile and the Drift check put every value,
+    NULL, underflow, overflow and the inexact-width edge included, in
+    the same bin."""
+    df = spark.createDataFrame(list(enumerate(values)), f"k long, x {ddl}")
+    hist = profile(df, [ProfileSpec("x", hist=spec)])["x"]["hist"]
+    assert hist == expected
+    engine = ValidationEngine(spark)
+    for stat in ("psi", "ks"):
+        drift = Drift("x", lo=spec.lo, hi=spec.hi, bins=spec.bins, stat=stat,
+                      threshold=0.0, baseline=tuple(hist))
+        assert engine.validate(df, [Shape(f"edge_{stat}", (drift,))], ["k"]).conforms
 
 
 def test_approx_quantiles_relation_shape_and_bound(spark):

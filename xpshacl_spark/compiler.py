@@ -35,7 +35,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xpshacl_spark.model import VIOLATION_COLUMNS, ViolationType
-from xpshacl_spark.operators.drift import ks_column, psi_column
+from xpshacl_spark.operators.drift import (
+    check_bins,
+    histogram_counts,
+    ks_column,
+    psi_column,
+)
 from xpshacl_spark.shapes import (
     DatasetMetric,
     DenseIndex,
@@ -903,8 +908,8 @@ class ValidationEngine:
         shape's target folds into its aggregate's filter; a histogram
         covers every row). The 1-row result explodes into violation
         structs like the group plan: fully lazy, the single row unions
-        into the violations. Drift bins: NULL none, < lo underflow,
-        >= hi overflow, else floor((v - lo) / width) unclamped; the
+        into the violations. Drift bins are
+        operators.drift.histogram_counts, the profile's histogram; the
         statistic is psi_column / ks_column against the baseline, and
         a Drift without a baseline checks nothing."""
         pairs = []
@@ -929,11 +934,7 @@ class ValidationEngine:
             for c in shape.drift_constraints():
                 if c.stat not in ("psi", "ks"):
                     raise ValueError(f"Drift stat {c.stat!r} is not 'psi' or 'ks'")
-                if c.bins < 1 or c.hi <= c.lo:
-                    raise ValueError(
-                        f"Drift needs bins >= 1 and lo < hi, got bins={c.bins} "
-                        f"over [{c.lo}, {c.hi})"
-                    )
+                check_bins(c.lo, c.hi, c.bins)
                 if c.baseline and len(c.baseline) != c.bins + 2:
                     raise ValueError("Drift baseline: bin count mismatch (need bins + 2)")
                 if c.baseline:
@@ -975,16 +976,8 @@ class ValidationEngine:
                 metrics.append(F.col(f"_a{i}").cast("double"))
 
         for i, (shape, c) in enumerate(drifts):
-            e = F.expr(c.expression)
-            width = (c.hi - c.lo) / c.bins
-            bucket = (
-                F.when(e.isNull(), F.lit(None))
-                .when(e < F.lit(c.lo), F.lit(-1))
-                .when(e >= F.lit(c.hi), F.lit(c.bins))
-                .otherwise(F.floor((e - F.lit(c.lo)) / F.lit(width)).cast("int"))
-            )
-            counts = [F.count(F.when(bucket == b, 1)) for b in range(-1, c.bins + 1)]
-            aggs.append(F.array(*counts).alias(f"_h{i}"))
+            counts = histogram_counts(F.expr(c.expression), c.lo, c.hi, c.bins)
+            aggs.append(counts.alias(f"_h{i}"))
 
         row = df.agg(*aggs)
         structs = []

@@ -1,8 +1,11 @@
 """Distribution-drift statistics over merged histogram bins.
 
 The per-bin counts come from one fused Spark aggregation (the
-compiler's whole-table aggregation, streaming.windowed_drift's and
-two_sample_drift's). PSI and KS over them are Column expressions
+compiler's whole-table aggregation, profile's, streaming.windowed_drift's
+and two_sample_drift's), each counted by count_array. histogram_counts
+is the one bucketing of a profile histogram and a Drift check;
+two_sample_drift and windowed_drift (bin_index) clamp in-range values
+instead. PSI and KS over the counts are Column expressions
 (psi_column / ks_column) in the same plan: no collect, no driver-side
 arithmetic. psi_statistic / ks_statistic are the Python references.
 Deterministic given fixed bins (SURVEY.md §4 custom item 2). The
@@ -117,12 +120,53 @@ def ks_column(baseline: Column, current: Column) -> Column:
     return F.aggregate(pairs, zero, step, lambda acc: acc["gap"])
 
 
+def check_bins(lo: float, hi: float, bins: int) -> None:
+    """Reject a fixed-bin histogram with no bin or an empty range: the
+    one declaration check of profile's HistSpec, the compiler's Drift
+    and two_sample_drift."""
+    if bins < 1 or hi <= lo:
+        raise ValueError(
+            f"histogram needs bins >= 1 and lo < hi, got bins={bins} "
+            f"over [{lo}, {hi})"
+        )
+
+
+def count_array(bucket: Column, ids: Sequence[int]) -> Column:
+    """One array<bigint> aggregate of per-bucket row counts,
+    array(count(bucket == j) for j in ids). A row whose bucket is NULL
+    counts nowhere, so callers exclude rows by nulling their bucket; an
+    empty input gives 0s, not NULLs."""
+    return F.array(*[F.count(F.when(bucket == F.lit(j), 1)) for j in ids])
+
+
+def histogram_counts(e: Column, lo: float, hi: float, bins: int) -> Column:
+    """The profile / Drift histogram of numeric Column `e` as one
+    array<bigint> aggregate: [underflow, b0..b(bins-1), overflow].
+
+    NULL gets no bin, v < lo is underflow, v >= hi is overflow, and an
+    in-range v goes to floor((v - lo) / width), UNCLAMPED. width =
+    (hi - lo) / bins is inexact in doubles, so a value just under hi
+    whose floor rounds to `bins` lands in overflow. `profile` and the
+    compiler's Drift both bin through here, so a Drift baseline taken
+    from a profile bins every value as the check does, and PSI/KS
+    measure the data, not the binning."""
+    check_bins(lo, hi, bins)
+    width = (hi - lo) / bins
+    bucket = (
+        F.when(e < F.lit(lo), F.lit(-1))
+        .when(e >= F.lit(hi), F.lit(bins))
+        .otherwise(F.floor((e - F.lit(lo)) / F.lit(width)).cast("int"))
+    )
+    return count_array(bucket, range(-1, bins + 1))
+
+
 def bin_index(col, lo: float, width: float, nbins: int):
     """Fixed-bin histogram index as a Spark Column:
-    clamp(floor((col - lo) / width), 0, nbins - 1). The ONE definition
-    shared by the batch profiler baseline and streaming.windowed_drift —
-    baseline and live windows must bin a value identically or PSI
-    measures the binning skew, not drift."""
+    clamp(floor((col - lo) / width), 0, nbins - 1). This is
+    streaming.windowed_drift's bucketing, a clamped contract unlike
+    histogram_counts': there is no underflow or overflow bucket, values
+    out of range fold into the end bins. A NULL col gets index 0
+    (greatest/least skip NULLs), so callers exclude NULLs themselves."""
     return F.least(
         F.greatest(
             F.floor((col - F.lit(float(lo))) / F.lit(float(width))).cast("int"),
@@ -148,15 +192,18 @@ def two_sample_drift(
     the stored-baseline Drift constraint.
 
     Plan: tag-union the two (bucket) projections and run ONE global
-    hash aggregation with 2*(bins+2) conditional count sums (map-side
+    hash aggregation with 2*(bins+2) conditional counts (map-side
     partials; the shuffle carries one row of ints per map partition) —
     a single pass over both inputs, no groupBy key, no collect. The
     one-row result holds the two count arrays; psi_column / ks_column
     turn them into the two statistics, exactly psi_statistic /
     ks_statistic's arithmetic, so an ANSI-SQL oracle reproduces the
-    doubles. In-range values are floor-binned with a clamp to bins-1
-    (width = (hi-lo)/bins is inexact in doubles; an unclamped floor can
-    emit `bins` for a value just under hi, misfiling it as overflow)."""
+    doubles. In-range values are floor-binned with a clamp to bins-1:
+    width = (hi-lo)/bins is inexact in doubles, and an unclamped floor
+    can emit `bins` for a value just under hi. This clamp is a different
+    contract from histogram_counts', which files that value as overflow,
+    so a profile histogram is not this function's bin counts."""
+    check_bins(lo, hi, bins)
     width = (hi - lo) / bins
 
     def _bucket(df, tag):
@@ -178,15 +225,11 @@ def two_sample_drift(
 
     u = _bucket(df_a, 0).unionByName(_bucket(df_b, 1))
 
-    def _counts(side):  # underflow + bins + overflow; empty union: 0, not NULL
-        def hit(j):
-            return ((F.col("_t") == side) & (F.col("_b") == j)).cast("long")
-
-        return F.array(
-            *[F.coalesce(F.sum(hit(j)), F.lit(0)) for j in range(-1, bins + 1)]
-        )
-
-    row = u.agg(_counts(0).alias("_ca"), _counts(1).alias("_cb"))
+    ids = range(-1, bins + 1)  # underflow + bins + overflow
+    row = u.agg(
+        count_array(F.when(F.col("_t") == 0, F.col("_b")), ids).alias("_ca"),
+        count_array(F.when(F.col("_t") == 1, F.col("_b")), ids).alias("_cb"),
+    )
     ca, cb = F.col("_ca"), F.col("_cb")
     structs = F.array(
         F.struct(F.lit("psi").alias("stat"), psi_column(ca, cb, eps).alias("value")),

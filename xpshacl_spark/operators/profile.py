@@ -15,7 +15,6 @@ The relation-valued profilers below are NOT all single-pass:
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from functools import reduce
 from typing import Optional, Sequence
@@ -23,12 +22,18 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from xpshacl_spark.operators.drift import histogram_counts
+
 
 @dataclass(frozen=True)
 class HistSpec:
     """Fixed equi-width bins [lo, hi) with an underflow and an overflow
     bucket; bins are fixed up front so profiling stays single-pass and
-    drift statistics are deterministic."""
+    drift statistics are deterministic. Binned by
+    operators.drift.histogram_counts, as the Drift check is: width =
+    (hi - lo) / bins is inexact in doubles, so a value just under hi
+    can land in overflow (two_sample_drift clamps such a value into the
+    last bin instead). bins < 1 or hi <= lo raises ValueError."""
 
     lo: float
     hi: float
@@ -46,16 +51,6 @@ class ProfileSpec:
         return self.expression or f"`{self.name}`"
 
 
-def _bucket_col(e, h: HistSpec):
-    width = (h.hi - h.lo) / h.bins
-    return (
-        F.when(e.isNull(), F.lit(None))
-        .when(e < F.lit(h.lo), F.lit(-1))
-        .when(e >= F.lit(h.hi), F.lit(h.bins))
-        .otherwise(F.floor((e - F.lit(h.lo)) / F.lit(width)).cast("int"))
-    )
-
-
 def profile(df: DataFrame, specs: Sequence[ProfileSpec]) -> dict:
     """Profile columns in ONE aggregation pass.
 
@@ -70,9 +65,8 @@ def profile(df: DataFrame, specs: Sequence[ProfileSpec]) -> dict:
         aggs.append(F.max(e).cast("string").alias(f"_max{i}"))
         aggs.append(F.approx_count_distinct(e, rsd=s.rsd).alias(f"_d{i}"))
         if s.hist:
-            b = _bucket_col(e, s.hist)
-            for j in range(-1, s.hist.bins + 1):
-                aggs.append(F.count(F.when(b == F.lit(j), 1)).alias(f"_h{i}_{j + 1}"))
+            h = s.hist
+            aggs.append(histogram_counts(e, h.lo, h.hi, h.bins).alias(f"_h{i}"))
     row = df.agg(*aggs).collect()[0].asDict()
 
     out = {}
@@ -90,9 +84,7 @@ def profile(df: DataFrame, specs: Sequence[ProfileSpec]) -> dict:
             "hist_spec": None,
         }
         if s.hist:
-            rec["hist"] = [
-                row[f"_h{i}_{j + 1}"] for j in range(-1, s.hist.bins + 1)
-            ]
+            rec["hist"] = row[f"_h{i}"]
             rec["hist_spec"] = {
                 "lo": s.hist.lo,
                 "hi": s.hist.hi,
@@ -224,31 +216,6 @@ def _percentile_from_sorted(values, cum, q: float):
     if v_hi == v_lo:
         return v_lo
     return (higher - p) * v_lo + (p - lower) * v_hi
-
-
-def _value_counts_cells(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """(column, v, c) distinct-value counts for every requested column
-    in ONE scan: inline a (column, value) struct array, drop nulls,
-    and run a codegen'd map-side-combined hash agg — the parallel
-    replacement for feeding raw rows to the exact `percentile`
-    buffer's boxed per-row map (measured 25x slower per row, see
-    OPTIMIZATION_r06.md)."""
-    cells = df.select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("column"),
-                        F.col(c).cast("double").alias("v"),
-                    )
-                    # unique: a column listed twice must not double its
-                    # value counts (the grid join re-emits duplicates)
-                    for c in dict.fromkeys(columns)
-                ]
-            )
-        )
-    ).where(F.col("v").isNotNull())
-    return cells.groupBy("column", "v").agg(F.count(F.lit(1)).alias("c"))
 
 
 def _rank_targets(n: int, qs_grid: Sequence[float]) -> set[int]:
@@ -526,10 +493,6 @@ def _percentile_from_ranks(
     return (higher - p) * v_lo + (p - lower) * v_hi
 
 
-def _qgrid_literal(spark, columns, rows, schema: str) -> DataFrame:
-    return spark.createDataFrame(rows, schema)
-
-
 def quantiles_relation(
     df: DataFrame, columns: Sequence[str], qs: Sequence[float] = (0.25, 0.5, 0.75)
 ) -> DataFrame:
@@ -566,14 +529,11 @@ def quantiles_relation(
         for c in dict.fromkeys(columns)
         for q in q_list
     ]
-    computed = _qgrid_literal(
-        spark, columns, rows, "column string, q double, quantile double"
+    computed = spark.createDataFrame(
+        rows, "column string, q double, quantile double"
     )
-    grid = _qgrid_literal(
-        spark,
-        columns,
-        [(c, q) for c in columns for q in q_list],
-        "column string, q double",
+    grid = spark.createDataFrame(
+        [(c, q) for c in columns for q in q_list], "column string, q double"
     )
     return grid.join(computed, ["column", "q"], "left")
 
@@ -706,9 +666,7 @@ def quantiles_error_bound_relation(
     final_rows = [r for c in columns for r in by_col[c]] if (
         len(uniq) != len(list(columns))
     ) else out_rows
-    return _qgrid_literal(
-        spark,
-        columns,
+    return spark.createDataFrame(
         final_rows,
         "column string, q double, exact_q double, within_bound boolean",
     )
@@ -852,13 +810,3 @@ def mutual_information_relation(
     return out.select(
         F.lit(x).alias("x"), F.lit(y).alias("y"), "n_pairs", "mi"
     )
-
-
-def save_baseline(path: str, prof: dict) -> None:
-    with open(path, "w") as f:
-        json.dump(prof, f, sort_keys=True)
-
-
-def load_baseline(path: str) -> dict:
-    with open(path) as f:
-        return json.load(f)

@@ -77,12 +77,6 @@ class RowConstraint(Constraint):
         return {}
 
 
-def _null_ok(col: str, cond: Column) -> Column:
-    """Vacuous pass on NULL value nodes (SHACL: no value -> no violation
-    for value-testing components; cardinality components handle absence)."""
-    return F.col(col).isNull() | cond
-
-
 class ValueConstraint(RowConstraint):
     """A value-testing constraint that applies to EVERY value node of
     its path (SHACL property-shape semantics). Subclasses implement

@@ -462,10 +462,14 @@ def windowed_drift(
     deploy shape: train-time distribution vs live traffic).
 
     Per window the value column is binned into the SAME fixed bins as
-    the baseline (floor((v - lo)/width), clamped to [0, nbins-1]) with
-    ONE streaming aggregation — per-bin counts as conditional sums, so
-    no second stateful operator is needed (multi-agg streams are
-    restricted) — and the PSI is computed IN-PLAN by
+    the baseline by operators.drift.bin_index (floor((v - lo)/width),
+    clamped to [0, nbins-1]: out-of-range values fold into the end
+    bins, unlike the underflow/overflow histogram of `profile` and the
+    Drift check, so bin the baseline with bin_index too) with ONE
+    streaming aggregation —
+    per-bin counts by operators.drift.count_array, so no second
+    stateful operator is needed (multi-agg streams are restricted) —
+    and the PSI is computed IN-PLAN by
     operators.drift.psi_column from the count columns and the baseline
     literals: no driver round trip, works inside any sink. Windows emit
     in append mode when the watermark closes them. Null values are
@@ -475,11 +479,13 @@ def windowed_drift(
     (proportions floored at eps; left-to-right term sum), the same
     expression the batch Drift check uses.
     """
-    from xpshacl_spark.operators.drift import bin_index, psi_column
+    from xpshacl_spark.operators.drift import bin_index, count_array, psi_column
 
     nb = len(baseline_counts)
     if nb < 2:
         raise ValueError("need at least 2 bins")
+    if width <= 0:
+        raise ValueError(f"need width > 0, got {width}")
     v = F.col(value_col)
     idx = bin_index(v, lo, width, nb)
     # NO pre-aggregation null filter: null-valued events must still
@@ -499,12 +505,7 @@ def windowed_drift(
             F.count(v).alias("n_rows"),
             # explicit isNotNull: bin_index's greatest/least clamp
             # SKIPS nulls, so a NULL value would land in bin 0
-            F.array(
-                *[
-                    F.sum(F.when(v.isNotNull() & (idx == i), 1).otherwise(0))
-                    for i in range(nb)
-                ]
-            ).alias("_c"),
+            count_array(F.when(v.isNotNull(), idx), range(nb)).alias("_c"),
         )
         .where(F.col("n_rows") > 0)
     )
