@@ -809,7 +809,7 @@ def q_violation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# training-data pipeline operators (dedup / similarity / text / multimodal)
+# training-data pipeline operators (dedup / similarity / text)
 # ---------------------------------------------------------------------------
 
 
@@ -902,52 +902,6 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload column -> Arrow-batched
-    mapInPandas feature extraction (decode step stubbed
-    deterministically; see operators.multimodal)."""
-    from xpshacl_spark.operators.multimodal import decode_media, synth_media
-
-    d = _load(spark, sf_dir, "documents")
-    return decode_media(synth_media(d))
-
-
-def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plan: every 30th frame, max 16, per video."""
-    from xpshacl_spark.operators.multimodal import sample_frames, synth_media
-
-    d = _load(spark, sf_dir, "documents")
-    return sample_frames(synth_media(d), every_n=30, fps=30, max_frames=16)
-
-
-def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize planning over decoded media features: clamp the longest
-    side to 256 preserving aspect ratio — pure column math over the
-    deterministic decode stub."""
-    from xpshacl_spark.operators.multimodal import (
-        decode_media,
-        resize_plan,
-        synth_media,
-    )
-
-    d = _load(spark, sf_dir, "documents")
-    return resize_plan(decode_media(synth_media(d)), max_side=256)
-
-
-def q_media_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec path end-to-end: JVM-side solid-color binary PPM
-    payloads (header + unhex(repeat(rgb_hex, w*h))) are byte-parsed by
-    decode_media(real=True)'s pure-Python P6 decoder through the same
-    Arrow-batched mapInPandas plan a PIL-backed decoder would use. The
-    oracle recomputes width/height/mean from the id arithmetic (mean of
-    a solid color = (r+g+b)/3) — so a wrong header parse, stride, or
-    pixel count shows up as a value mismatch."""
-    from xpshacl_spark.operators.multimodal import decode_media, synth_ppm_media
-
-    d = _load(spark, sf_dir, "documents")
-    return decode_media(synth_ppm_media(d), real=True)
 
 
 def q_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1875,7 +1829,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_dedup_clusters": q_dedup_clusters,
         "q_ann_ivf_multiprobe": q_ann_ivf_multiprobe,
         "q_ann_lsh_topk": q_ann_lsh_topk,
-        "q_media_decode_real": q_media_decode_real,
         "q_unigram_external": q_unigram_external,
         "q_salted_skew_validation": q_salted_skew_validation,
         "q_dup_span_stats": q_dup_span_stats,
@@ -1941,9 +1894,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_embed_near_dup": q_embed_near_dup,
         "q_ann_cosine_topk": q_ann_cosine_topk,
         "q_ann_lsh_buckets": q_ann_lsh_buckets,
-        "q_media_features": q_media_features,
-        "q_media_frames": q_media_frames,
-        "q_media_resize": q_media_resize,
         "q_profile_stats": q_profile_stats,
         "q_signature_dedup": q_signature_dedup,
         "q_datatype_events": q_datatype_events,
@@ -2937,45 +2887,6 @@ def oracle_sql() -> dict[str, str]:
             "(PARTITION BY query_id ORDER BY cos DESC, vec_id) <= 10"
         ),
         "q_ann_lsh_buckets": _lsh_buckets_sql(),
-        "q_media_features": (
-            "SELECT CAST(doc_id AS BIGINT) AS media_id, "
-            "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' "
-            "ELSE 'video' END AS kind, "
-            "CAST(strlen(text) AS INT) AS n_bytes, md5(text) AS digest, "
-            "CAST((doc_id * 7) % 1024 + 16 AS INT) AS width, "
-            "CAST((doc_id * 13) % 768 + 16 AS INT) AS height "
-            "FROM documents"
-        ),
-        "q_media_decode_real": (
-            "SELECT CAST(doc_id AS BIGINT) AS media_id, 'ppm' AS format, "
-            "CAST(doc_id % 13 + 1 AS INT) AS width, "
-            "CAST(doc_id % 11 + 1 AS INT) AS height, "
-            "round((doc_id % 256 + (doc_id * 7) % 256 + (doc_id * 13) % 256) "
-            "/ 3.0, 6) AS mean_pixel FROM documents"
-        ),
-        "q_media_resize": (
-            "WITH feat AS (SELECT CAST(doc_id AS BIGINT) AS media_id, "
-            "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' "
-            "ELSE 'video' END AS kind, "
-            "CAST((doc_id * 7) % 1024 + 16 AS INT) AS width, "
-            "CAST((doc_id * 13) % 768 + 16 AS INT) AS height FROM documents), "
-            "s AS (SELECT *, CASE WHEN greatest(width, height) <= 256 THEN 1.0 "
-            "ELSE 256 / CAST(greatest(width, height) AS DOUBLE) END AS sc "
-            "FROM feat) "
-            "SELECT media_id, kind, width, height, round(sc, 6) AS scale, "
-            "CAST(floor(width * sc) AS INT) AS out_width, "
-            "CAST(floor(height * sc) AS INT) AS out_height FROM s"
-        ),
-        "q_media_frames": (
-            "WITH v AS (SELECT doc_id, "
-            "CAST(floor(strlen(text) / 8) AS INT) + 1 AS nf "
-            "FROM documents WHERE doc_id % 3 = 2), "
-            "f AS (SELECT doc_id, "
-            "unnest((range(0, nf, 30))[1:16]) AS frame_idx FROM v) "
-            "SELECT CAST(doc_id AS BIGINT) AS media_id, "
-            "CAST(frame_idx AS INT) AS frame_idx, "
-            "round(frame_idx / 30.0, 6) AS ts_sec FROM f"
-        ),
         "q_profile_stats": (
             " UNION ALL ".join(
                 f"SELECT '{c}' AS \"column\", count(*) AS n_rows, "

@@ -5,6 +5,7 @@ retrieval incl. the similar-cases anti-join
 (tests/test_context_retriever.py)."""
 
 import json
+import os
 
 import pytest
 
@@ -208,6 +209,95 @@ def test_cache_save_merges_with_other_writers(sig, tmp_path):
 
     back.clear()
     assert ExplanationCache(p).size() == 0
+
+
+def _pause_first_read(monkeypatch):
+    """Patch pd.read_parquet so the first reader, after its read, waits
+    up to 1 s for `other` to be set: a cache writer that does not hold
+    the path's lock across read and rename lets `other` run inside that
+    window. Returns (first_read, other) events."""
+    import threading
+
+    import pandas as pd
+
+    real = pd.read_parquet
+    first_read, other = threading.Event(), threading.Event()
+
+    def read(*args, **kw):
+        out = real(*args, **kw)
+        if not first_read.is_set():
+            first_read.set()
+            other.wait(1.0)
+        return out
+
+    monkeypatch.setattr(pd, "read_parquet", read)
+    return first_read, other
+
+
+def test_cache_overlapping_saves_keep_both_writers(sig, tmp_path, monkeypatch):
+    """Two caches on one path save in two threads, the second starting
+    while the first sits between its read and its rename: both writers'
+    rows survive, and clear() likewise waits for a save in flight."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    p = str(tmp_path / "cache.parquet")
+    seed = ViolationSignature("seed_constraint", "seed_property", "seed_type")
+    other = ViolationSignature("other_constraint", "other_property", "other_type")
+    s = ExplanationCache(p)
+    s.add_violation(seed, {"natural_language_explanation": "seed"})
+    s.save()
+    a, b = ExplanationCache(p), ExplanationCache(p)
+    a.add_violation(sig, {"natural_language_explanation": "from a"})
+    b.add_violation(other, {"natural_language_explanation": "from b"})
+
+    first_read, other_done = _pause_first_read(monkeypatch)
+    with ThreadPoolExecutor(2) as pool:
+        fa = pool.submit(a.save)
+        assert first_read.wait(5)
+        fb = pool.submit(lambda: (b.save(), other_done.set()))
+        fa.result()
+        fb.result()
+    back = ExplanationCache(p)
+    assert back.get_explanation(sig)["natural_language_explanation"] == "from a"
+    assert back.get_explanation(other)["natural_language_explanation"] == "from b"
+    assert back.has_violation(seed)
+
+    # a clear() issued while a save sits in its window lands after it:
+    # the save's merged rows cannot overwrite the cleared file
+    monkeypatch.undo()
+    c = ExplanationCache(p)
+    first_read, other_done = _pause_first_read(monkeypatch)
+    with ThreadPoolExecutor(2) as pool:
+        fa = pool.submit(a.save)
+        assert first_read.wait(5)
+        fc = pool.submit(lambda: (c.clear(), other_done.set()))
+        fa.result()
+        fc.result()
+    assert ExplanationCache(p).size() == 0
+    assert sorted(os.listdir(tmp_path)) == ["cache.parquet"]
+
+    # stress: more concurrent writers than cores, each row survives
+    import sys
+
+    monkeypatch.undo()
+    caches = []
+    for i in range(16):
+        w = ExplanationCache(p)
+        w.add_violation(
+            ViolationSignature(f"c{i}", "p", "t"), {"natural_language_explanation": str(i)}
+        )
+        caches.append(w)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            for f in [pool.submit(w.save) for w in caches]:
+                f.result(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    back = ExplanationCache(p)
+    for i in range(16):
+        assert back.has_violation(ViolationSignature(f"c{i}", "p", "t")), i
 
 
 # ---------------------------------------------------------------------------

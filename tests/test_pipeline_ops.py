@@ -1,6 +1,6 @@
 """Unit tests for the training-data pipeline operators (dedup,
-similarity search, text analysis, multimodal plumbing) on small
-constructed inputs with hand-computable expectations."""
+similarity search, text analysis) on small constructed inputs with
+hand-computable expectations."""
 
 import os
 import sys
@@ -20,12 +20,6 @@ from xpshacl_spark.operators.dedup import (
     shingles,
     simhash,
     simhash_pairs,
-)
-from xpshacl_spark.operators.multimodal import (
-    decode_media,
-    resize_plan,
-    sample_frames,
-    synth_media,
 )
 from xpshacl_spark.operators.profile import profile_relation
 from xpshacl_spark.operators.similarity import (
@@ -99,6 +93,40 @@ def test_simhash_identical_docs(spark, docs):
         for r in simhash_pairs(docs, "doc_id", "text", max_hamming=3).collect()
     }
     assert pairs.get((0, 1)) == 0
+
+
+def test_fingerprint_hamming_pairs_generic_negative_longs(spark):
+    # direct generic-path check with adversarial 64-bit values around
+    # the sign boundary: recall vs the exhaustive oracle must be 1
+    from xpshacl_spark.operators.dedup import fingerprint_hamming_pairs
+
+    vals = [
+        -1,
+        -2,
+        (1 << 63) - 1,
+        -(1 << 63),
+        -(1 << 63) + 1,
+        0,
+        1,
+        (1 << 62) | 3,
+    ]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals)], "doc_id long, fp long"
+    )
+    for max_h in (1, 2, 3):
+        got = {
+            (r["id_a"], r["id_b"]): r["hamming"]
+            for r in fingerprint_hamming_pairs(
+                df, bits=64, max_hamming=max_h, fp_col="fp"
+            ).collect()
+        }
+        want = {}
+        for i in range(len(vals)):
+            for j in range(i + 1, len(vals)):
+                d = bin((vals[i] ^ vals[j]) & ((1 << 64) - 1)).count("1")
+                if d <= max_h:
+                    want[(i, j)] = d
+        assert got == want, f"max_hamming={max_h}"
 
 
 VECS = [
@@ -232,52 +260,8 @@ def test_shingle_fingerprint_short_doc_null(spark):
 
 
 # ---------------------------------------------------------------------------
-# multimodal plumbing
+# column profiling
 # ---------------------------------------------------------------------------
-
-
-def test_media_roundtrip(spark, docs):
-    media = synth_media(docs.where(F.col("text") != ""))
-    feats = decode_media(media).collect()
-    by_id = {r.media_id: r for r in feats}
-    import hashlib
-
-    for doc_id, text in DOCS[:4]:
-        r = by_id[doc_id]
-        assert r.n_bytes == len(text.encode())
-        assert r.digest == hashlib.md5(text.encode()).hexdigest()
-        assert r.kind in ("image", "audio", "video")
-        assert 16 <= r.width < 1040 and 16 <= r.height < 784
-
-
-def test_media_real_decode_unrecognized_payloads_null(spark, docs):
-    """real=True no longer raises: it actually decodes BMP/PPM payloads
-    (see test_real_decode_bmp_and_ppm). synth_media payloads are raw
-    utf-8 text — no parser recognizes them, so every feature is NULL
-    (quarantine-not-crash semantics for corrupt blobs at scale)."""
-    rows = decode_media(synth_media(docs), real=True).collect()
-    assert len(rows) == len(DOCS)
-    assert all(r.format is None and r.width is None for r in rows)
-
-
-def test_resize_plan(spark):
-    df = spark.createDataFrame(
-        [(1, "image", 512, 128), (2, "image", 100, 50)],
-        "media_id long, kind string, width int, height int",
-    )
-    rows = {r.media_id: r for r in resize_plan(df, max_side=256).collect()}
-    assert rows[1].out_width == 256 and rows[1].out_height == 64
-    assert rows[2].scale == 1.0 and rows[2].out_width == 100
-
-
-def test_sample_frames(spark, docs):
-    media = synth_media(docs)
-    vids = media.where(F.col("kind") == "video")
-    frames = sample_frames(media, every_n=30, max_frames=16)
-    got = frames.groupBy("media_id").count().collect()
-    assert len(got) == vids.count()
-    first = frames.where(F.col("frame_idx") == 0).count()
-    assert first == vids.count()  # frame 0 always sampled
 
 
 def test_profile_relation(spark):
@@ -614,64 +598,6 @@ def test_unigram_logprob_keeps_empty_docs(spark):
     assert got[1][0] == 3
 
 
-def test_real_decode_bmp_and_ppm(spark):
-    """decode_media(real=True): actual byte-level decoding through the
-    same mapInPandas plan — pure-Python BMP/PPM parsers prove the codec
-    seam (swap in PIL later without touching the distributed plan)."""
-    import struct
-
-    from xpshacl_spark.operators.multimodal import decode_media
-
-    def make_bmp(w, h, rgb):
-        row = bytes(rgb[::-1]) * w  # BMP stores BGR
-        stride = (len(row) + 3) & ~3
-        row = row + b"\x00" * (stride - len(row))
-        pixels = row * h
-        off = 14 + 40
-        hdr = b"BM" + struct.pack("<IHHI", off + len(pixels), 0, 0, off)
-        dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0)
-        return hdr + dib + pixels
-
-    def make_ppm(w, h, rgb):
-        return f"P6\n# comment\n{w} {h}\n255\n".encode() + bytes(rgb) * (w * h)
-
-    rows = [
-        (1, "image", bytearray(make_bmp(4, 3, (10, 20, 30))), None),
-        (2, "image", bytearray(make_ppm(5, 2, (60, 90, 120))), None),
-        (3, "image", bytearray(b"not an image"), None),
-        (4, "image", None, None),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    got = {r.media_id: r for r in decode_media(media, real=True).collect()}
-    assert (got[1].format, got[1].width, got[1].height) == ("bmp", 4, 3)
-    assert got[1].mean_pixel == 20.0  # mean of (10,20,30)
-    assert (got[2].format, got[2].width, got[2].height) == ("ppm", 5, 2)
-    assert got[2].mean_pixel == 90.0
-    assert got[3].format is None and got[3].width is None
-    assert got[4].format is None
-
-
-def test_synth_ppm_media_roundtrip(spark):
-    """JVM-side PPM synthesis -> real decoder: dims and solid-color
-    mean recomputed from the id arithmetic match exactly."""
-    from xpshacl_spark.operators.multimodal import decode_media, synth_ppm_media
-
-    docs = spark.createDataFrame(
-        [(i, "x") for i in (0, 1, 7, 255, 300)], "doc_id long, text string"
-    )
-    out = {r.media_id: r for r in
-           decode_media(synth_ppm_media(docs), real=True).collect()}
-    for i in (0, 1, 7, 255, 300):
-        w, h = i % 13 + 1, i % 11 + 1
-        r_, g_, b_ = i % 256, (i * 7) % 256, (i * 13) % 256
-        row = out[i]
-        assert (row.format, row.width, row.height) == ("ppm", w, h)
-        assert row.mean_pixel == round((r_ + g_ + b_) / 3.0, 6)
-
-
 def test_duplicate_span_stats(spark):
     from xpshacl_spark.operators.dedup import duplicate_span_stats
 
@@ -690,33 +616,6 @@ def test_duplicate_span_stats(spark):
     assert got[1].dup_ratio == round(1 / 3, 6)
     assert (got[2].n_spans, got[2].n_dup_spans) == (2, 0)
     assert (got[3].n_spans, got[3].n_dup_spans, got[3].dup_ratio) == (0, 0, None)
-
-
-def test_real_decode_corrupt_bmp_headers_null(spark):
-    """Corrupt BMP variants must quarantine to NULL, not crash the job:
-    zero height (would divide by zero) and a data offset pointing into
-    the headers (would read header bytes as pixels)."""
-    import struct
-
-    from xpshacl_spark.operators.multimodal import decode_media
-
-    def bmp_hdr(w, h, off):
-        hdr = b"BM" + struct.pack("<IHHI", off + 64, 0, 0, off)
-        dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, 0, 2835, 2835, 0, 0)
-        return hdr + dib + b"\x00" * 256
-
-    rows = [
-        (1, "image", bytearray(bmp_hdr(4, 0, 54)), None),   # h = 0
-        (2, "image", bytearray(bmp_hdr(4, 3, 0)), None),    # offset in header
-        (3, "image", bytearray(bmp_hdr(4, 3, 54)), None),   # control: valid
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary, meta map<string,string>"
-    )
-    got = {r.media_id: r for r in decode_media(media, real=True).collect()}
-    assert got[1].format is None and got[1].width is None
-    assert got[2].format is None
-    assert got[3].format == "bmp" and got[3].mean_pixel == 0.0
 
 
 def test_duplicate_clusters_string_ids(spark):
@@ -1412,243 +1311,6 @@ def test_normalize_url_and_url_dedup(spark):
     assert dups == {1: 2, 4: 2}
     kept = {r.doc_id for r in dedup_by_url(df, "doc_id", "url").collect()}
     assert kept == {1, 3, 4, 6, 7, 8, 9}
-
-
-def test_real_decode_png_all_filters_and_color_types(spark):
-    """The dependency-free PNG decoder: a test-local encoder writes
-    images whose rows cycle through ALL five PNG filters (None, Sub,
-    Up, Average, Paeth) for each supported color type (gray, RGB,
-    gray+alpha, RGBA); decoded dims and channel-byte mean must match
-    numpy exactly. Unsupported features (palette) quarantine as NULL."""
-    import binascii
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from xpshacl_spark.operators.multimodal import _paeth, decode_media
-
-    def encode_png(arr, color):
-        h, w, ch = arr.shape
-
-        def chunk(t, d):
-            return (
-                struct.pack(">I", len(d))
-                + t
-                + d
-                + struct.pack(">I", binascii.crc32(t + d) & 0xFFFFFFFF)
-            )
-
-        flat = arr.reshape(h, w * ch).astype(np.int32)
-        prev = np.zeros(w * ch, np.int32)
-        rows = []
-        for r in range(h):
-            ft = r % 5  # cycle every filter type
-            rec = flat[r]
-            left = np.concatenate([np.zeros(ch, np.int32), rec[:-ch]])
-            ul = np.concatenate([np.zeros(ch, np.int32), prev[:-ch]])
-            if ft == 0:
-                f = rec
-            elif ft == 1:
-                f = (rec - left) % 256
-            elif ft == 2:
-                f = (rec - prev) % 256
-            elif ft == 3:
-                f = (rec - (left + prev) // 2) % 256
-            else:
-                pred = np.array(
-                    [_paeth(int(a), int(b), int(c)) for a, b, c in zip(left, prev, ul)]
-                )
-                f = (rec - pred) % 256
-            rows.append(bytes([ft]) + bytes(f.astype(np.uint8)))
-            prev = rec
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(b"".join(rows)))
-            + chunk(b"IEND", b"")
-        )
-
-    rng = np.random.RandomState(7)
-    cases = {}  # media_id -> (w, h, expected_mean)
-    rows = []
-    for mid, (color, ch) in enumerate([(0, 1), (2, 3), (4, 2), (6, 4)], start=1):
-        arr = rng.randint(0, 256, size=(7, 5, ch), dtype=np.uint8)  # 7 rows: all filters
-        # the decode batch layer rounds mean_pixel to 6 decimals
-        cases[mid] = (5, 7, round(float(arr.sum()) / arr.size, 6))
-        rows.append((mid, "image", bytearray(encode_png(arr, color)), None))
-    # palette PNG (color type 3): recognized signature, unsupported -> NULL
-    pal = (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)
-        + b"\x00\x00\x00\x00"
-    )
-    rows.append((99, "image", bytearray(pal), None))
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    got = {r.media_id: r for r in decode_media(media, real=True).collect()}
-    for mid, (w, h, mean) in cases.items():
-        assert (got[mid].format, got[mid].width, got[mid].height) == ("png", w, h), mid
-        assert abs(got[mid].mean_pixel - mean) < 1e-9, (mid, got[mid].mean_pixel, mean)
-    assert got[99].format is None and got[99].width is None
-
-
-def test_png_decoder_rejects_zlib_bomb_bounded():
-    """A PNG declaring tiny dims but carrying a huge highly-compressible
-    IDAT must be rejected WITHOUT inflating it: the decompress is
-    length-limited by the IHDR-derived expected size, so peak allocation
-    stays at expected+1 bytes, not the bomb's full expansion."""
-    import struct
-    import tracemalloc
-    import zlib
-
-    from xpshacl_spark.operators.multimodal import _decode_png_bytes
-
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)  # 2x2 gray
-
-    def chunk(t, d):
-        import binascii
-
-        return (
-            struct.pack(">I", len(d))
-            + t
-            + d
-            + struct.pack(">I", binascii.crc32(t + d) & 0xFFFFFFFF)
-        )
-
-    bomb = zlib.compress(b"\x00" * (256 * 1024 * 1024), 9)  # 256MB of zeros
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", bomb)
-        + chunk(b"IEND", b"")
-    )
-    tracemalloc.start()
-    assert _decode_png_bytes(payload) is None
-    _, peak = tracemalloc.get_traced_memory()
-    tracemalloc.stop()
-    # the bomb expands to 256MB; bounded inflate must stay far below
-    assert peak < 32 * 1024 * 1024, peak
-
-    # channel-byte cap: a huge RGBA header (w*h*ch > 2^26) is rejected
-    big = struct.pack(">IIBBBBB", 1 << 13, 1 << 12, 8, 6, 0, 0, 0)  # 2^27 ch-bytes
-    payload2 = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", big)
-        + chunk(b"IDAT", zlib.compress(b"\x00"))
-        + chunk(b"IEND", b"")
-    )
-    assert _decode_png_bytes(payload2) is None
-
-
-def test_png_decoder_rejects_overlong_and_truncated_streams():
-    """The exact-size contract must hold for streams whose excess hides
-    in zlib internal state rather than emitted output: (a) a stored-
-    block (level-0) stream carrying more raw data than the IHDR
-    declares stops at the limit with eof False — the old probe
-    `d.decompress(b'', 1)` returned b'' here and ACCEPTED the payload;
-    (b) a stream cut with Z_SYNC_FLUSH emits exactly the expected bytes
-    but never reaches Z_STREAM_END (no adler32) — also previously
-    accepted. Both must quarantine as None, and a byte-identical valid
-    payload must still decode."""
-    import struct
-    import zlib
-
-    from xpshacl_spark.operators.multimodal import _decode_png_bytes
-
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)  # 2x2 gray
-    raw = b"\x00\x07\x09\x00\x03\x05"  # 2 rows: filter byte + 2 px
-
-    def chunk(t, d):
-        import binascii
-
-        return (
-            struct.pack(">I", len(d))
-            + t
-            + d
-            + struct.pack(">I", binascii.crc32(t + d) & 0xFFFFFFFF)
-        )
-
-    def png(idat):
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", idat)
-            + chunk(b"IEND", b"")
-        )
-
-    # sanity: the honest stream decodes
-    assert _decode_png_bytes(png(zlib.compress(raw))) == (2, 2, 6.0)
-    # (a) oversized stored-block stream: declared 6 raw bytes, carries 64
-    overlong = zlib.compress(raw + b"\xAA" * 58, 0)
-    assert _decode_png_bytes(png(overlong)) is None
-    # (b) truncated: exact expected bytes out, but no stream end marker
-    c = zlib.compressobj()
-    cut = c.compress(raw) + c.flush(zlib.Z_SYNC_FLUSH)
-    assert _decode_png_bytes(png(cut)) is None
-    # (c) trailing garbage after a complete stream
-    assert _decode_png_bytes(png(zlib.compress(raw) + b"junk")) is None
-
-
-def test_real_decode_wav_pcm(spark):
-    """decode_audio: real RIFF PCM WAV byte decoding through the
-    mapInPandas plan — 16-bit stereo sine (known RMS ~ 1/sqrt(2) of
-    amplitude), 8-bit mono constant (RMS 0 after midpoint shift),
-    word-aligned odd-length extra chunk skipped, garbage/NULL
-    quarantined."""
-    import math
-    import struct
-
-    from xpshacl_spark.operators.multimodal import decode_audio
-
-    def wav(rate, bits, channels, frames, extra_chunk=False):
-        data = b"".join(frames)
-        block = channels * bits // 8
-        fmt = struct.pack(
-            "<HHIIHH", 1, channels, rate, rate * block, block, bits
-        )
-        chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        if extra_chunk:  # odd-length LIST chunk: walker must pad-align
-            chunks += b"LIST" + struct.pack("<I", 3) + b"abc" + b"\x00"
-        chunks += b"data" + struct.pack("<I", len(data)) + data
-        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-    amp = 16384  # half full-scale
-    n = 8000
-    sine = [
-        struct.pack(
-            "<hh",
-            int(amp * math.sin(2 * math.pi * 440 * t / 8000)),
-            int(amp * math.sin(2 * math.pi * 440 * t / 8000)),
-        )
-        for t in range(n)
-    ]
-    silence8 = [b"\x80"] * 4000  # 8-bit unsigned midpoint = silence
-    rows = [
-        (1, "audio", bytearray(wav(8000, 16, 2, sine, extra_chunk=True)), None),
-        (2, "audio", bytearray(wav(4000, 8, 1, silence8)), None),
-        (3, "audio", bytearray(b"RIFFxxxxNOPE"), None),
-        (4, "audio", None, None),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    got = {r.media_id: r for r in decode_audio(media).collect()}
-    assert (got[1].format, got[1].sample_rate, got[1].n_channels) == ("wav", 8000, 2)
-    assert got[1].duration_sec == 1.0
-    # RMS of a half-scale sine ~ 0.5/sqrt(2); integer quantization keeps
-    # it within a loose band
-    assert abs(got[1].rms - 0.5 / math.sqrt(2)) < 0.01
-    assert (got[2].format, got[2].sample_rate, got[2].n_channels) == ("wav", 4000, 1)
-    assert got[2].duration_sec == 1.0 and got[2].rms == 0.0
-    assert got[3].format is None
-    assert got[4].format is None
 
 
 def test_bigram_logprob_self_trained(spark):

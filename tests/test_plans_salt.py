@@ -622,43 +622,6 @@ def test_dedup_by_url_is_single_shuffle_window(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(doc_id), GreaterThanOrEqual(doc_id,1" in plan
 
 
-def test_video_near_dup_join_is_bucketed_not_cartesian(spark):
-    """video_near_dup_pairs must be an equi-join on the frame-hash key
-    (the inverted-index probe) — never a cartesian/nested-loop product
-    — and the shared count a plain hash aggregate, no Window."""
-    from xpshacl_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        video_near_dup_pairs,
-    )
-
-    media = spark.createDataFrame(
-        [(0, "video", bytearray(b"x"), {})], MEDIA_SCHEMA
-    )
-    plan = _plan(video_near_dup_pairs(media, min_shared=2))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "dhash" in plan, plan
-    assert "Window" not in plan, plan
-
-
-def test_media_near_dup_dispatch_plan_shape(spark):
-    """media_near_dup_pairs: a plan-level union of two kind-pruned
-    branches, each a segment/hash equi-join — no cartesian anywhere."""
-    from xpshacl_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        media_near_dup_pairs,
-    )
-
-    media = spark.createDataFrame(
-        [(0, "image", bytearray(b"x"), {})], MEDIA_SCHEMA
-    )
-    plan = _plan(media_near_dup_pairs(media))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "Union" in plan, plan
-    assert "seg_idx" in plan and "seg_val" in plan, plan
-
-
 def test_simhash_is_zero_agg_arrow_pass(spark):
     """r06 simhash plan: one MapInPandas over the per-row word arrays —
     no explode, no HashAggregate, and the only Exchange allowed is the

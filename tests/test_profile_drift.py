@@ -426,6 +426,34 @@ def test_two_sample_drift_clamps_inexact_width_edge(spark):
     assert got["ks"] == 1.0
 
 
+def test_bin_index_clamps_before_int_cast(spark):
+    """bin_index clamps floor's bigint BEFORE the cast to int: under
+    ANSI mode (Spark 4's default) a value whose bin lies beyond the int
+    range folds into an end bin instead of failing the whole query with
+    CAST_OVERFLOW, so windowed_drift runs over such values."""
+    from xpshacl_spark.operators.drift import bin_index
+
+    df = spark.createDataFrame(
+        [(0, -1e300), (1, 1e300), (2, 0.5), (3, None)], "i int, v double"
+    )
+    got = [
+        r.b
+        for r in df.orderBy("i")
+        .select(bin_index(F.col("v"), 0.0, 1.0, 10).alias("b"))
+        .collect()
+    ]
+    assert got == [0, 9, 0, 0]  # NULL gets index 0, as documented
+
+    day = datetime.datetime(2024, 1, 1)
+    events = spark.createDataFrame(
+        [(day, v) for v in (-1e300, 1e300, 0.5, None)],
+        "ts timestamp, x double",
+    )
+    (r,) = windowed_drift(events, "x", [1, 1], lo=0.0, width=1.0).collect()
+    assert r.n_rows == 3
+    assert r.psi == round(psi_statistic([1, 1], [2, 1]), 6)
+
+
 def test_entropy_relation_values_and_plan(spark):
     """entropy_relation: hand-computed entropy/distinctness on a tiny
     distribution; NULLs excluded; all-null columns emit no row; and the

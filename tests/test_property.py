@@ -944,46 +944,3 @@ def test_fingerprint_hamming_pairs_generic_recall(spark, fps, h):
         ).collect()
     }
     assert got == expect
-
-
-@given(
-    blob=st.binary(min_size=0, max_size=400),
-    magic=st.sampled_from([
-        b"", b"P6", b"BM", b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff",
-        b"GIF89a", b"GIF87a", b"RIFF", b"RIFFxxxxWAVE", b"RIFFxxxxAVI ",
-    ]),
-)
-@SLOW
-def test_codec_seam_never_raises_on_arbitrary_bytes(blob, magic):
-    """Executor-safety property: NO byte sequence may escape a decoder
-    as an exception — on a real cluster an uncaught decode error kills
-    the whole mapInPandas stage, so corrupt payloads must quarantine as
-    None/valid tuples. Fuzzes every decoder with random bytes behind
-    every format's magic prefix (the worst case: headers that parse
-    far enough to reach the body logic)."""
-    from xpshacl_spark.operators.jpeg import decode_jpeg_bytes
-    from xpshacl_spark.operators.multimodal import (
-        _decode_bmp_bytes,
-        _decode_gif_bytes,
-        _decode_gray,
-        _decode_png_bytes,
-        _decode_ppm_bytes,
-        _decode_wav_bytes,
-        _parse_avi_bytes,
-    )
-
-    payload = magic + blob
-    for dec in (
-        decode_jpeg_bytes,
-        _decode_gif_bytes,
-        _parse_avi_bytes,
-        _decode_wav_bytes,
-    ):
-        out = dec(payload)
-        assert out is None or isinstance(out, tuple)
-    for dec in (_decode_ppm_bytes, _decode_bmp_bytes, _decode_png_bytes):
-        for px in (False, True):
-            out = dec(payload, px)
-            assert out is None or isinstance(out, tuple)
-    out = _decode_gray(payload)
-    assert out is None or isinstance(out, tuple)

@@ -24,6 +24,8 @@ the dedup stage).
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 from typing import Optional
@@ -67,26 +69,54 @@ class ExplanationCache:
         Merges with the file on disk first: its rows whose (signature,
         language) this cache does not hold are kept, so runners sharing
         a cache path keep each other's entries; on a shared key this
-        cache's row wins. Two saves that overlap between the read and
-        the rename can still drop the first one's new rows."""
-        df = self._df
-        if self.path and os.path.exists(self.path):
-            disk = pd.read_parquet(self.path)
-            held = set(zip(df["signature_id"], df["language"]))
-            disk = disk[
-                [k not in held for k in zip(disk["signature_id"], disk["language"])]
-            ]
-            if len(disk):
-                df = pd.concat([df, disk], ignore_index=True)
-        self._write(df)
+        cache's row wins. The read, merge and rename run under the
+        path's exclusive lock, so overlapping saves serialize and none
+        drops another's rows."""
+        if not self.path:
+            return
+        with self._locked():
+            df = self._df
+            if os.path.exists(self.path):
+                disk = pd.read_parquet(self.path)
+                held = set(zip(df["signature_id"], df["language"]))
+                disk = disk[
+                    [k not in held for k in zip(disk["signature_id"], disk["language"])]
+                ]
+                if len(disk):
+                    df = pd.concat([df, disk], ignore_index=True)
+            self._write(df)
+
+    @contextlib.contextmanager
+    def _locked(self):
+        """Hold an exclusive flock on `<path>.lock`. flock conflicts
+        between open file descriptions, so it serializes threads of one
+        process as well as processes. The lock file is removed on
+        release; a waiter that wakes holding the lock of a removed file
+        retries on the current one, so two holders never coexist."""
+        lock = f"{self.path}.lock"
+        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+        while True:
+            fd = os.open(lock, os.O_RDWR | os.O_CREAT, 0o644)
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX)
+                if os.path.samestat(os.fstat(fd), os.stat(lock)):
+                    break
+            except FileNotFoundError:
+                pass
+            except BaseException:
+                os.close(fd)
+                raise
+            os.close(fd)
+        try:
+            yield
+        finally:
+            os.unlink(lock)
+            os.close(fd)
 
     def _write(self, df: pd.DataFrame) -> None:
         """Write `df` to a temporary file in the same directory and
         rename it over `path`, so a kill mid-save leaves the previous
-        cache loadable instead of a torn file."""
-        if not self.path:
-            return
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+        cache loadable instead of a torn file. Callers hold the lock."""
         tmp = f"{self.path}.{os.getpid()}.tmp"
         try:
             df.to_parquet(tmp, index=False)
@@ -215,7 +245,9 @@ class ExplanationCache:
     def clear(self) -> None:
         """violation_kg.py:286-291."""
         self._df = pd.DataFrame(columns=_COLUMNS)
-        self._write(self._df)
+        if self.path:
+            with self._locked():
+                self._write(self._df)
 
     def size(self) -> int:
         """Number of emulated RDF facts, preserving the reference's

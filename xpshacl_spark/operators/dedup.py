@@ -875,7 +875,7 @@ def fingerprint_hamming_pairs(
     segment, so candidates come from an equi-join on (segment_idx,
     segment_value) and are verified with bit_count(xor). Recall is
     exactly 1 by construction. Works for full 64-bit fingerprints
-    (image dHash packs the top bit, so values can be NEGATIVE longs):
+    (a set top bit makes the value a NEGATIVE long):
     shiftright sign-extends, but every segment is masked to seg_bits,
     and equal top segments imply equal sign bits — sign extension can
     never split or merge buckets.
@@ -883,7 +883,7 @@ def fingerprint_hamming_pairs(
     Scale: the join fan-out is bounded by per-segment bucket sizes; at
     100 TB the fingerprint relation is metadata-sized (one long per
     doc) and the caller persists it (both self-join sides derive from
-    it) — see simhash_pairs_with_fingerprints / image_near_dup_pairs.
+    it) — see simhash_pairs_with_fingerprints.
     """
     if bits <= 0 or max_hamming < 0:
         raise ValueError(f"need bits>0, max_hamming>=0; got {bits}, {max_hamming}")

@@ -165,15 +165,18 @@ def bin_index(col, lo: float, width: float, nbins: int):
     clamp(floor((col - lo) / width), 0, nbins - 1). This is
     streaming.windowed_drift's bucketing, a clamped contract unlike
     histogram_counts': there is no underflow or overflow bucket, values
-    out of range fold into the end bins. A NULL col gets index 0
-    (greatest/least skip NULLs), so callers exclude NULLs themselves."""
+    out of range fold into the end bins. The clamp runs on floor's
+    bigint before the cast to int, so a value whose bin lies beyond the
+    int range folds too instead of failing an ANSI cast. A NULL col
+    gets index 0 (greatest/least skip NULLs), so callers exclude NULLs
+    themselves."""
     return F.least(
         F.greatest(
-            F.floor((col - F.lit(float(lo))) / F.lit(float(width))).cast("int"),
+            F.floor((col - F.lit(float(lo))) / F.lit(float(width))),
             F.lit(0),
         ),
         F.lit(nbins - 1),
-    )
+    ).cast("int")
 
 
 def two_sample_drift(
