@@ -390,44 +390,6 @@ def test_rejects_unsupported_and_corrupt():
     assert (w, h) == (8, 8) and mean == pytest.approx(100, abs=1e-6)
 
 
-def test_jpeg_wired_into_codec_seam_and_dhash(spark):
-    """End-to-end through the Spark seam: decode_media(real=True)
-    recognizes JPEG payloads, and image_dhash over a DC-only mosaic
-    (exact decode) matches the Python dHash oracle computed from the
-    known pixel values."""
-    from tests.test_multimodal_dedup import media_df, py_dhash
-    from xpshacl_spark.operators.multimodal import decode_media, image_dhash
-
-    # horizontal sawtooth: adjacent dHash block means are separated by
-    # >> the ~1e-14 decode noise, so the strict > comparisons are
-    # well-defined and the Python oracle must agree bit-for-bit (a
-    # solid mosaic would TIE adjacent means exactly and let float
-    # noise pick the bits — tested and excluded by design)
-    img = np.array(
-        [[(x * 37 + y * 11) % 200 + 20.0 for x in range(32)]
-         for y in range(24)]
-    )
-    payloads = [encode_jpeg(img)]
-    media = media_df(spark, payloads)
-    feats = {r["media_id"]: r for r in
-             decode_media(media, real=True).collect()}
-    assert (feats[0]["format"], feats[0]["width"], feats[0]["height"]) == (
-        "jpeg", 32, 24,
-    )
-    assert feats[0]["mean_pixel"] == pytest.approx(img.mean(), abs=0.01)
-    hashes = {r["media_id"]: r["dhash"] for r in
-              image_dhash(media).collect()}
-    # oracle hash on the DECODED grid must be tie-free vs quant error:
-    # verify adjacent block-mean gaps clear the reconstruction budget
-    from xpshacl_spark.operators.multimodal import _block_mean
-
-    small = _block_mean(img, 8, 9)
-    # quant=1 block-mean reconstruction error is ~0.03 (rounding of 64
-    # coefficients averaged over >=6-pixel blocks); 0.5 is ample margin
-    assert np.abs(small[:, :-1] - small[:, 1:]).min() > 0.5
-    assert hashes[0] == py_dhash([list(map(float, row)) for row in img])
-
-
 def test_color_422_roundtrip_on_chroma_constant_columns():
     # constant color per 2-wide column pair -> the 4:2:2 horizontal
     # downsample is lossless, isolating the 2x1 sampling-factor path

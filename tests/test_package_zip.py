@@ -27,7 +27,7 @@ def test_zip_contents_and_determinism(tmp_path):
     assert not any(n.endswith((".pyc", ".pyo")) or "__pycache__" in n for n in names)
     # no stale copy of a removed operator module is packaged
     for gone in (
-        "sample", "sessions", "packing", "ranges", "bucketing", "jpeg", "multimodal",
+        "sample", "sessions", "packing", "ranges", "bucketing", "multimodal",
     ):
         assert f"xpshacl_spark/operators/{gone}.py" not in names, gone
 

@@ -1,15 +1,12 @@
 """Dependency-free baseline JPEG decoder (ITU-T T.81 / ISO 10918-1).
 
-Closes the last "real compressed codec" gap of the in-sandbox media
-path (PNG landed in r05 via stdlib zlib; JPEG needs its own entropy
-coder, so everything here is spec-implemented from the public
-standard): baseline sequential DCT, 8-bit precision, 1- or 3-component
+Everything here is spec-implemented from the public standard:
+baseline sequential DCT, 8-bit precision, 1- or 3-component
 (grayscale / YCbCr), arbitrary sampling factors up to 2x2 (4:4:4,
 4:2:2, 4:2:0), restart intervals. Progressive (SOF2), arithmetic
-coding, 12-bit precision, and hierarchical modes are REJECTED to the
-same quarantine-as-NULL contract as the other byte decoders — at scale
-those rows route to a quarantine sink, and a PIL/libjpeg swap at the
-decoder seam is the production path for decode-bound workloads.
+coding, 12-bit precision, hierarchical modes and corrupt streams are
+REJECTED: `decode_jpeg_bytes` returns None. Nothing in the package
+imports this module; it is the next leaf to delete.
 
 Correctness evidence (tests/test_jpeg_codec.py):
 * the fast matrix IDCT vs the textbook O(n^4) DCT-III double loop;
@@ -20,9 +17,8 @@ Correctness evidence (tests/test_jpeg_codec.py):
 * DC-only JPEGs (solid blocks) decode to EXACT flat values — ground
   truth that needs no reference codec.
 
-Scale: one image per decode, Arrow-batched across payload rows via the
-multimodal mapInPandas seam (never intra-image parallelism); the same
-2^26 channel-byte hostile-payload bound as the PNG path.
+Scale: one image per decode (never intra-image parallelism); a
+2^26 channel-byte bound on hostile payloads.
 """
 
 from __future__ import annotations
