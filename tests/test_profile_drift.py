@@ -155,6 +155,56 @@ def test_validate_with_drift_starts_no_job(spark):
     assert rep.metrics["n_shapes"] == len(shapes)
 
 
+def _count_py4j_commands(monkeypatch):
+    """Record every py4j command this process sends to the JVM, except
+    the `m` (memory) ones that Python's garbage collector triggers."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m"):
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return sent
+
+
+def test_plan_building_round_trips_stay_few(spark, monkeypatch):
+    """Building the transcript suite's plan with a 50-bin Drift, and a
+    five-column profile with a 50-bin histogram, each cost a bounded
+    number of py4j round trips (bounds are 1.5x the measured counts,
+    1407 and 154). PySpark's call-site capture, which wraps
+    every Column method in extra JVM calls, multiplies both well past
+    the bounds, as does building a histogram one Column per bin."""
+    from xpshacl_spark.datagen import roles_dim, tools_dim, transcripts
+    from xpshacl_spark.suites import transcript_shapes
+
+    engine = ValidationEngine(
+        spark, dims={"roles": roles_dim(spark), "tools": tools_dim(spark)}
+    )
+    df = transcripts(spark, n_convs=20)
+    drift = Drift("length(text)", lo=0.0, hi=5000.0, bins=50,
+                  baseline=tuple(range(52)), column="text")
+    shapes = transcript_shapes(drift=drift, max_gap_seconds=3600)
+    keys = ["conv_id", "turn_idx"]
+    specs = [ProfileSpec(c) for c in ("conv_id", "turn_idx", "role", "tool")]
+    specs.append(ProfileSpec("text_len", expression="length(text)",
+                             hist=HistSpec(0.0, 5000.0, 50)))
+    engine.validate(df, shapes, keys)  # memoises the FK probes
+
+    sent = _count_py4j_commands(monkeypatch)
+    engine.validate(df, shapes, keys)
+    n_validate = len(sent)
+    sent.clear()
+    profile(df, specs)
+    n_profile = len(sent)
+    assert n_validate <= 2110, n_validate
+    assert n_profile <= 231, n_profile
+
+
 @pytest.mark.parametrize(
     "kwargs, match",
     [
@@ -239,6 +289,72 @@ def test_profile_and_drift_bin_alike_at_the_edges(spark, ddl, values, spec, expe
         drift = Drift("x", lo=spec.lo, hi=spec.hi, bins=spec.bins, stat=stat,
                       threshold=0.0, baseline=tuple(hist))
         assert engine.validate(df, [Shape(f"edge_{stat}", (drift,))], ["k"]).conforms
+
+
+def test_profile_column_name_with_backtick(spark):
+    """A bare ProfileSpec name is quoted as an identifier, so a column
+    whose name holds a backtick profiles like any other."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField("we`ird", T.DoubleType())])
+    df = spark.createDataFrame([(1.0,), (3.0,), (None,)], schema)
+    spec = ProfileSpec("we`ird", hist=HistSpec(0.0, 4.0, 2))
+    got = profile(df, [spec])["we`ird"]
+    assert (got["non_null"], got["min"], got["max"]) == (2, "1.0", "3.0")
+    assert got["hist"] == [0, 1, 1, 0]
+
+
+# quote, backslash, double quote, percent, non-ASCII and a SQL
+# variable reference: each must survive the SQL text the engine parses
+_ODD = "it's \\d+ \"50%\" ünïcødé 日本 ${spark.app.name}"
+
+
+@pytest.mark.parametrize(
+    "lo, hi, bins, expected",
+    [
+        # width 0.6 / 3 is inexact in doubles; the lengths all fall
+        # outside [0.1, 0.7)
+        (0.1, 0.7, 3, [2, 0, 0, 0, 4]),
+        # (1 - 0.7) / 0.30000000000000004 is exactly 1.0 in doubles but
+        # 0.99... in decimals: a DECIMAL lo or width puts length 1 in b0
+        (0.7, 1.3, 2, [2, 0, 2, 2]),
+    ],
+    ids=["issue-range", "decimal-edge"],
+)
+def test_sql_text_keeps_strings_and_double_bins(spark, lo, hi, bins, expected):
+    """Shape id, message and severity reach the violation rows exactly
+    as declared, and a profile histogram and a Drift over an integer
+    expression bin with DOUBLE bounds (the profile's bins are pinned, and
+    the Drift scores 0 against them)."""
+    from xpshacl_spark.shapes import DatasetMetric, NotNull
+
+    df = spark.createDataFrame(
+        list(enumerate([None, "", "a", "b", "abc", "abcdefgh"])),
+        "k long, text string",
+    )
+    expr = "coalesce(length(text), 0)"
+    hist = profile(df, [ProfileSpec("n", expression=expr,
+                                    hist=HistSpec(lo, hi, bins))])["n"]["hist"]
+    assert hist == expected
+
+    odd = Shape(
+        f"urn:{_ODD}",
+        (NotNull("text"), DatasetMetric("row_count", max_value=1)),
+        severity=_ODD,
+        message=_ODD,
+    )
+    engine = ValidationEngine(spark)
+    rows = engine.validate(df, [odd], ["k"]).violations.collect()
+    assert len(rows) == 2
+    for r in rows:
+        assert (r["shape_id"], r["message"], r["severity"]) == (
+            f"urn:{_ODD}", _ODD, _ODD,
+        )
+    for stat in ("psi", "ks"):
+        drift = Drift(expr, lo=lo, hi=hi, bins=bins, stat=stat,
+                      threshold=0.0, baseline=tuple(expected))
+        shape = Shape(f"bins_{stat}", (drift,))
+        assert engine.validate(df, [shape], ["k"]).conforms
 
 
 def test_approx_quantiles_relation_shape_and_bound(spark):

@@ -921,8 +921,8 @@ def test_bigram_logprob_matches_python_oracle(spark, train, score):
 )
 @SLOW
 def test_fingerprint_hamming_pairs_generic_recall(spark, fps, h):
-    """The generic 64-bit pair join (shared by simhash text, dHash
-    image, and energy-hash audio fingerprints) == the brute-force
+    """The generic 64-bit pair join (used by simhash_pairs for text
+    fingerprints) == the brute-force
     Hamming filter for ARBITRARY signed longs — including values at
     the sign boundary, where shiftright sign-extension must be masked
     away, and the whole-long segment at max_hamming=0."""

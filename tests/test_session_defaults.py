@@ -40,3 +40,10 @@ def test_defaults_on_this_host():
     assert session._host_cores() == len(os.sched_getaffinity(0))
     gb = int(session._host_driver_memory()[:-1])
     assert 1 <= gb <= 24
+
+
+def test_call_site_capture_is_off(spark):
+    """get_spark turns PySpark's call-site capture off: it costs extra
+    JVM round trips on every Column method of a generated plan."""
+    conf = spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+    assert conf == "false"

@@ -59,6 +59,7 @@ from xpshacl_spark.shapes import (
     Transition,
     Unique,
 )
+from xpshacl_spark.sqltext import double_literal, quote_string
 
 _CTX_TYPE = "map<string,string>"
 
@@ -70,19 +71,25 @@ def _violation_struct(
     context: Optional[Column] = None,
     message: Optional[str] = None,
 ) -> Column:
-    """The canonical violation payload struct (SURVEY.md §1.3)."""
-    return F.struct(
-        F.lit(shape.shape_id).alias("shape_id"),
-        F.lit(constraint.component()).alias("constraint_component"),
-        F.lit(constraint.violation_type()).alias("violation_type"),
-        F.lit(constraint.property_path()).cast("string").alias("property_path"),
-        value.cast("string").alias("value"),
-        F.lit(message or shape.default_message(constraint)).alias("message"),
-        F.lit(shape.severity).alias("severity"),
-        (context if context is not None else F.lit(None).cast(_CTX_TYPE)).alias(
-            "context"
-        ),
+    """The canonical violation payload struct (SURVEY.md §1.3): one
+    parsed named_struct of the literal fields, then `value` and
+    `context` set in place by withField."""
+    fields = {
+        "shape_id": shape.shape_id,
+        "constraint_component": constraint.component(),
+        "violation_type": constraint.violation_type(),
+        "property_path": constraint.property_path(),
+        "value": None,
+        "message": message or shape.default_message(constraint),
+        "severity": shape.severity,
+    }
+    sql = ", ".join(
+        f"'{k}', " + ("CAST(NULL AS STRING)" if v is None else quote_string(v))
+        for k, v in fields.items()
     )
+    struct = F.expr(f"named_struct({sql}, 'context', CAST(NULL AS {_CTX_TYPE}))")
+    struct = struct.withField("value", value.cast("string"))
+    return struct if context is None else struct.withField("context", context)
 
 
 def _target_col(shape: Shape) -> Column:
@@ -447,10 +454,9 @@ class ValidationEngine:
         # path is a pure codegen'd predicate scan that emits ~nothing.
         pre = df.where(any_violated)
         arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-        # explode drops rows with empty arrays -> conforming rows vanish
+        # inline drops rows with empty arrays -> conforming rows vanish
         # before any downstream operator sees them.
-        out = pre.select(*key_cols, F.explode(arr).alias("_v"))
-        return out.select(*key_cols, "_v.*")
+        return pre.select(*key_cols, F.inline(arr))
 
     # ------------------------------------------------------------------
     # group-level cardinality: shared aggregation per group key
@@ -547,9 +553,7 @@ class ValidationEngine:
                 F.when(violated, _violation_struct(shape, c, n, ctx))
             )
         arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-        out = counts.select(*gkey, F.explode(arr).alias("_v")).select(
-            *gkey, "_v.*"
-        )
+        out = counts.select(*gkey, F.inline(arr))
         return self._align_keys(out, df, key_cols, present=gkey)
 
     # ------------------------------------------------------------------
@@ -626,18 +630,18 @@ class ValidationEngine:
             w = Window.partitionBy(*gkey).orderBy(order_by)
             structs = []
             lag_cols = {}
-            proj = df
             # "first row of the group" must be row_number()==1, NOT
             # lag(value) IS NULL: a mid-sequence row whose PREDECESSOR
             # holds a NULL value is not a group opener, and conflating
             # the two made Transition's `initial` check fire mid-stream
             # (and let DenseIndex pass a repeat that happened to equal
             # `start` after a NULL index). Shares the same window sort.
-            proj = proj.withColumn("_seq_rn1", F.row_number().over(w) == 1)
+            # Every window column is added by ONE withColumns below.
+            win_cols = {"_seq_rn1": F.row_number().over(w) == 1}
             is_first = F.col("_seq_rn1")
             for i, (shape, c) in enumerate(pairs):
                 lag_name = f"_prev{i}"
-                proj = proj.withColumn(lag_name, F.lag(c.column).over(w))
+                win_cols[lag_name] = F.lag(c.column).over(w)
                 lag_cols[i] = lag_name
             for i, (shape, c) in enumerate(pairs):
                 prev = F.col(lag_cols[i])
@@ -756,12 +760,10 @@ class ValidationEngine:
                 claimed.add((ushape.shape_id, uc))
                 w_key = Window.partitionBy(*gkey, order_by)
                 i = len(claimed)
-                proj = proj.withColumn(
-                    f"_uqn_{i}",
-                    F.count(
-                        F.when(_target_col(ushape), F.lit(1))
-                    ).over(w_key),
-                ).withColumn(f"_uqp_{i}", F.lag(order_by).over(w))
+                win_cols[f"_uqn_{i}"] = F.count(
+                    F.when(_target_col(ushape), F.lit(1))
+                ).over(w_key)
+                win_cols[f"_uqp_{i}"] = F.lag(order_by).over(w)
                 ucnt = F.col(f"_uqn_{i}")
                 first_of_key = is_first | ~F.col(f"_uqp_{i}").eqNullSafe(
                     F.col(order_by)
@@ -780,10 +782,7 @@ class ValidationEngine:
                     )
                 )
             arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-            out = proj.select(*key_cols, F.explode(arr).alias("_v")).select(
-                *key_cols, "_v.*"
-            )
-            outs.append(out)
+            outs.append(df.withColumns(win_cols).select(*key_cols, F.inline(arr)))
         return outs
 
     # ------------------------------------------------------------------
@@ -889,9 +888,7 @@ class ValidationEngine:
                     F.when(violated, _violation_struct(shape, c, n, ctx))
                 )
             arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-            out = counts.select(*gkey, F.explode(arr).alias("_v")).select(
-                *gkey, "_v.*"
-            )
+            out = counts.select(*gkey, F.inline(arr))
             outs.append(self._align_keys(out, df, key_cols, present=gkey))
         return outs
 
@@ -976,7 +973,7 @@ class ValidationEngine:
                 metrics.append(F.col(f"_a{i}").cast("double"))
 
         for i, (shape, c) in enumerate(drifts):
-            counts = histogram_counts(F.expr(c.expression), c.lo, c.hi, c.bins)
+            counts = histogram_counts(c.expression, c.lo, c.hi, c.bins)
             aggs.append(counts.alias(f"_h{i}"))
 
         row = df.agg(*aggs)
@@ -1000,20 +997,20 @@ class ValidationEngine:
             )
             structs.append(F.when(violated, _violation_struct(shape, c, m, ctx)))
         for i, (shape, c) in enumerate(drifts):
-            counts = F.col(f"_h{i}")
-            baseline = F.array(*[F.lit(float(x)) for x in c.baseline])
+            counts = f"_h{i}"
+            baseline = f"array({', '.join(double_literal(x) for x in c.baseline)})"
             stat = (ks_column if c.stat == "ks" else psi_column)(baseline, counts)
-            n = F.aggregate(counts, F.lit(0).cast("long"), lambda acc, x: acc + x)
-            ctx = F.create_map(
-                F.lit("stat"), F.lit(c.stat),
-                F.lit("threshold"), F.lit(str(c.threshold)),
-                F.lit("n"), n.cast("string"),
+            ctx = F.expr(
+                f"map('stat', {quote_string(c.stat)}, "
+                f"'threshold', {quote_string(str(c.threshold))}, 'n', "
+                f"CAST(aggregate({counts}, CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+                " AS STRING))"
             )
             value = F.format_string("%.6f", stat)
             violated = stat > F.lit(float(c.threshold))
             structs.append(F.when(violated, _violation_struct(shape, c, value, ctx)))
         arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-        out = row.select(F.explode(arr).alias("_v")).select("_v.*")
+        out = row.select(F.inline(arr))
         return [self._align_keys(out, df, key_cols, present=[])]
 
     # ------------------------------------------------------------------

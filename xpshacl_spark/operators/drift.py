@@ -21,6 +21,8 @@ from typing import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from xpshacl_spark.sqltext import double_literal
+
 
 def _proportions(counts: Sequence[float], eps: float) -> list[float]:
     total = float(sum(counts))
@@ -63,61 +65,66 @@ def ks_statistic(
 
 
 # The same statistics as Columns over two equal-length arrays of bin
-# counts (callers check the length; zip_with pads with NULL). Every sum
-# folds from 0.0 in bin order like Python's sum(), so the doubles are
-# the references' up to an ulp of log; the tree is O(bins).
+# counts, each built as one SQL string and parsed by one F.expr (callers
+# check the length; zip_with pads with NULL). `baseline` and `current`
+# are SQL text: a count column's name or an array literal; lambda
+# variables start with `__` so they never shadow them. Every sum folds
+# from 0.0 in bin order like Python's sum(), so the doubles are the
+# references' up to an ulp of log; the tree is O(bins).
+
+_ZERO = double_literal(0.0)
 
 
-def _total(counts: Column) -> Column:
-    return F.aggregate(counts, F.lit(0.0), lambda acc, c: acc + c)
+def _total_sql(counts: str) -> str:
+    return f"aggregate({counts}, {_ZERO}, (__acc, __c) -> __acc + __c)"
 
 
-def _proportions_column(counts: Column, eps: float) -> Column:
+def _proportions_sql(counts: str, eps: float) -> str:
     """_proportions: c / total floored at eps; a zero total is all-eps."""
-    counts = counts.cast("array<double>")
-    total = _total(counts)
-    return F.when(
-        total > 0,
-        F.transform(counts, lambda c: F.greatest(c / total, F.lit(eps))),
-    ).otherwise(F.transform(counts, lambda c: F.lit(eps)))
-
-
-def psi_column(baseline: Column, current: Column, eps: float = 1e-6) -> Column:
-    """psi_statistic over two array columns of bin counts."""
-    terms = F.zip_with(
-        _proportions_column(current, eps),
-        _proportions_column(baseline, eps),
-        lambda p, q: (p - q) * F.log(p / q),
+    counts = f"CAST({counts} AS ARRAY<DOUBLE>)"
+    total = _total_sql(counts)
+    eps = double_literal(eps)
+    return (
+        f"CASE WHEN {total} > 0 "
+        f"THEN transform({counts}, __c -> greatest(__c / {total}, {eps})) "
+        f"ELSE transform({counts}, __c -> {eps}) END"
     )
-    return F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)
 
 
-def ks_column(baseline: Column, current: Column) -> Column:
-    """ks_statistic over two array columns of bin counts: one fold
-    carrying both running ECDF sums and the largest gap so far."""
+def psi_column(baseline: str, current: str, eps: float = 1e-6) -> Column:
+    """psi_statistic over two array<number> SQL expressions of bin
+    counts."""
+    terms = (
+        f"zip_with({_proportions_sql(current, eps)}, "
+        f"{_proportions_sql(baseline, eps)}, "
+        "(__p, __q) -> (__p - __q) * ln(__p / __q))"
+    )
+    return F.expr(f"aggregate({terms}, {_ZERO}, (__acc, __t) -> __acc + __t)")
+
+
+def ks_column(baseline: str, current: str) -> Column:
+    """ks_statistic over two array<number> SQL expressions of bin
+    counts: one fold carrying both running ECDF sums and the largest
+    gap so far."""
 
     def quotients(counts):  # c / total; a zero total divides by 1.0
-        counts = counts.cast("array<double>")
-        total = _total(counts)
-        denom = F.when(total == 0, F.lit(1.0)).otherwise(total)
-        return F.transform(counts, lambda c: c / denom)
+        counts = f"CAST({counts} AS ARRAY<DOUBLE>)"
+        total = _total_sql(counts)
+        denom = f"CASE WHEN {total} = 0 THEN {double_literal(1.0)} ELSE {total} END"
+        return f"transform({counts}, __c -> __c / {denom})"
 
-    def step(acc, x):
-        cb = acc["cb"] + x["b"]
-        cc = acc["cc"] + x["c"]
-        return F.struct(
-            cb.alias("cb"),
-            cc.alias("cc"),
-            F.greatest(acc["gap"], F.abs(cc - cb)).alias("gap"),
-        )
-
-    pairs = F.zip_with(
-        quotients(baseline),
-        quotients(current),
-        lambda b, c: F.struct(b.alias("b"), c.alias("c")),
+    cb = "__acc.cb + __x.b"
+    cc = "__acc.cc + __x.c"
+    step = (
+        f"(__acc, __x) -> named_struct('cb', {cb}, 'cc', {cc}, "
+        f"'gap', greatest(__acc.gap, abs(({cc}) - ({cb}))))"
     )
-    zero = F.struct(*[F.lit(0.0).alias(f) for f in ("cb", "cc", "gap")])
-    return F.aggregate(pairs, zero, step, lambda acc: acc["gap"])
+    pairs = (
+        f"zip_with({quotients(baseline)}, {quotients(current)}, "
+        "(__b, __c) -> named_struct('b', __b, 'c', __c))"
+    )
+    zero = f"named_struct('cb', {_ZERO}, 'cc', {_ZERO}, 'gap', {_ZERO})"
+    return F.expr(f"aggregate({pairs}, {zero}, {step}, __acc -> __acc.gap)")
 
 
 def check_bins(lo: float, hi: float, bins: int) -> None:
@@ -131,17 +138,20 @@ def check_bins(lo: float, hi: float, bins: int) -> None:
         )
 
 
-def count_array(bucket: Column, ids: Sequence[int]) -> Column:
+def count_array(bucket: str, ids: Sequence[int]) -> Column:
     """One array<bigint> aggregate of per-bucket row counts,
-    array(count(bucket == j) for j in ids). A row whose bucket is NULL
-    counts nowhere, so callers exclude rows by nulling their bucket; an
-    empty input gives 0s, not NULLs."""
-    return F.array(*[F.count(F.when(bucket == F.lit(j), 1)) for j in ids])
+    array(count(bucket = j) for j in ids), for the SQL expression
+    `bucket`. A row whose bucket is NULL counts nowhere, so callers
+    exclude rows by nulling their bucket; an empty input gives 0s, not
+    NULLs."""
+    counts = ", ".join(f"count(CASE WHEN {bucket} = {j} THEN 1 END)" for j in ids)
+    return F.expr(f"array({counts})")
 
 
-def histogram_counts(e: Column, lo: float, hi: float, bins: int) -> Column:
-    """The profile / Drift histogram of numeric Column `e` as one
-    array<bigint> aggregate: [underflow, b0..b(bins-1), overflow].
+def histogram_counts(e: str, lo: float, hi: float, bins: int) -> Column:
+    """The profile / Drift histogram of the numeric SQL expression `e`
+    as one array<bigint> aggregate: [underflow, b0..b(bins-1),
+    overflow].
 
     NULL gets no bin, v < lo is underflow, v >= hi is overflow, and an
     in-range v goes to floor((v - lo) / width), UNCLAMPED. width =
@@ -152,10 +162,11 @@ def histogram_counts(e: Column, lo: float, hi: float, bins: int) -> Column:
     measure the data, not the binning."""
     check_bins(lo, hi, bins)
     width = (hi - lo) / bins
+    e = f"({e})"
+    lo_, hi_ = double_literal(lo), double_literal(hi)
     bucket = (
-        F.when(e < F.lit(lo), F.lit(-1))
-        .when(e >= F.lit(hi), F.lit(bins))
-        .otherwise(F.floor((e - F.lit(lo)) / F.lit(width)).cast("int"))
+        f"CASE WHEN {e} < {lo_} THEN -1 WHEN {e} >= {hi_} THEN {bins} "
+        f"ELSE CAST(floor(({e} - {lo_}) / {double_literal(width)}) AS INT) END"
     )
     return count_array(bucket, range(-1, bins + 1))
 
@@ -207,35 +218,28 @@ def two_sample_drift(
     contract from histogram_counts', which files that value as overflow,
     so a profile histogram is not this function's bin counts."""
     check_bins(lo, hi, bins)
-    width = (hi - lo) / bins
+    lo_, hi_ = double_literal(lo), double_literal(hi)
+    width = double_literal((hi - lo) / bins)
+    bucket = (
+        f"CASE WHEN _v < {lo_} THEN -1 WHEN _v >= {hi_} THEN {bins} "
+        f"ELSE least(CAST(floor((_v - {lo_}) / {width}) AS INT), {bins - 1}) END"
+    )
 
     def _bucket(df, tag):
-        proj = df.select(
-            F.expr(expression).cast("double").alias("_v")
-        ).where(F.col("_v").isNotNull())
-        v = F.col("_v")
-        b = (
-            F.when(v < F.lit(float(lo)), F.lit(-1))
-            .when(v >= F.lit(float(hi)), F.lit(bins))
-            .otherwise(
-                F.least(
-                    F.floor((v - F.lit(float(lo))) / F.lit(width)).cast("int"),
-                    F.lit(bins - 1),
-                )
-            )
+        proj = df.selectExpr(f"CAST(({expression}) AS DOUBLE) AS _v")
+        return proj.where("_v IS NOT NULL").selectExpr(
+            f"{bucket} AS _b", f"{tag} AS _t"
         )
-        return proj.select(b.alias("_b"), F.lit(tag).alias("_t"))
 
     u = _bucket(df_a, 0).unionByName(_bucket(df_b, 1))
 
     ids = range(-1, bins + 1)  # underflow + bins + overflow
     row = u.agg(
-        count_array(F.when(F.col("_t") == 0, F.col("_b")), ids).alias("_ca"),
-        count_array(F.when(F.col("_t") == 1, F.col("_b")), ids).alias("_cb"),
+        count_array("CASE WHEN _t = 0 THEN _b END", ids).alias("_ca"),
+        count_array("CASE WHEN _t = 1 THEN _b END", ids).alias("_cb"),
     )
-    ca, cb = F.col("_ca"), F.col("_cb")
     structs = F.array(
-        F.struct(F.lit("psi").alias("stat"), psi_column(ca, cb, eps).alias("value")),
-        F.struct(F.lit("ks").alias("stat"), ks_column(ca, cb).alias("value")),
+        F.struct(F.lit("psi").alias("stat"), psi_column("_ca", "_cb", eps).alias("value")),
+        F.struct(F.lit("ks").alias("stat"), ks_column("_ca", "_cb").alias("value")),
     )
-    return row.select(F.explode(structs).alias("_s")).select("_s.*")
+    return row.select(F.inline(structs))

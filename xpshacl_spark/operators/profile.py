@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from xpshacl_spark.operators.drift import histogram_counts
+from xpshacl_spark.sqltext import quote_ident
 
 
 @dataclass(frozen=True)
@@ -48,7 +49,7 @@ class ProfileSpec:
     rsd: float = 0.05  # HLL relative standard deviation
 
     def expr_sql(self) -> str:
-        return self.expression or f"`{self.name}`"
+        return self.expression or quote_ident(self.name)
 
 
 def profile(df: DataFrame, specs: Sequence[ProfileSpec]) -> dict:
@@ -66,7 +67,9 @@ def profile(df: DataFrame, specs: Sequence[ProfileSpec]) -> dict:
         aggs.append(F.approx_count_distinct(e, rsd=s.rsd).alias(f"_d{i}"))
         if s.hist:
             h = s.hist
-            aggs.append(histogram_counts(e, h.lo, h.hi, h.bins).alias(f"_h{i}"))
+            aggs.append(
+                histogram_counts(s.expr_sql(), h.lo, h.hi, h.bins).alias(f"_h{i}")
+            )
     row = df.agg(*aggs).collect()[0].asDict()
 
     out = {}

@@ -40,6 +40,15 @@ def get_spark(
     of physical memory (capped at 24g) as the driver heap.
     Env overrides: SPARK_GRAFT_CPUS (core count for local[N]),
     SPARK_GRAFT_MASTER, SPARK_GRAFT_DRIVER_MEM.
+
+    PySpark's call-site capture is off
+    (spark.python.sql.dataFrameDebugging.enabled=false). With it on,
+    every Column method (.alias, .cast, ==, &, ...) walks the Python
+    stack and makes several extra JVM round trips, only to add a
+    call-site line to runtime error messages. The engine generates its
+    plans, so that line would always point into the compiler; with the
+    capture off, building the transcript suite's plan takes less than
+    half the py4j round trips.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER")
     if master is None:
@@ -67,6 +76,7 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")

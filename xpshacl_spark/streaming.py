@@ -480,6 +480,7 @@ def windowed_drift(
     expression the batch Drift check uses.
     """
     from xpshacl_spark.operators.drift import bin_index, count_array, psi_column
+    from xpshacl_spark.sqltext import double_literal
 
     nb = len(baseline_counts)
     if nb < 2:
@@ -500,17 +501,18 @@ def windowed_drift(
     # the predicate cannot be pushed past the stateful operator.
     agg = (
         stream_df.withWatermark(ts_col, watermark)
+        # explicit isNotNull: bin_index's greatest/least clamp SKIPS
+        # nulls, so a NULL value would land in bin 0
+        .withColumn("_drift_bin", F.when(v.isNotNull(), idx))
         .groupBy(F.window(ts_col, window_duration).alias("_w"))
         .agg(
             F.count(v).alias("n_rows"),
-            # explicit isNotNull: bin_index's greatest/least clamp
-            # SKIPS nulls, so a NULL value would land in bin 0
-            count_array(F.when(v.isNotNull(), idx), range(nb)).alias("_c"),
+            count_array("_drift_bin", range(nb)).alias("_c"),
         )
         .where(F.col("n_rows") > 0)
     )
-    baseline = F.array(*[F.lit(float(c)) for c in baseline_counts])
-    psi = psi_column(baseline, F.col("_c"), eps)
+    baseline = ", ".join(double_literal(c) for c in baseline_counts)
+    psi = psi_column(f"array({baseline})", "_c", eps)
     return agg.select(
         F.col("_w.start").alias("window_start"),
         F.col("_w.end").alias("window_end"),
