@@ -5,8 +5,6 @@ method."""
 
 from __future__ import annotations
 
-import math
-
 
 def quote_ident(name: str) -> str:
     """`name` as a backtick-quoted identifier, inner backticks doubled."""
@@ -29,5 +27,4 @@ def double_literal(x: float) -> str:
     """`x` as a DOUBLE expression. A bare `5000.0` would parse as a
     DECIMAL and make the arithmetic around it decimal; the cast of the
     shortest round-trip repr gives back exactly `x`."""
-    x = float(x)
-    return f"CAST({x!r} AS DOUBLE)" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+    return f"CAST({float(x)!r} AS DOUBLE)"
