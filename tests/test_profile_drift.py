@@ -647,3 +647,74 @@ def test_mutual_information_relation(spark):
     # as ReusedExchange — the fact table is scanned once
     assert plan.count("ReusedExchange") == 3
     assert "Window" not in plan
+
+
+def test_non_finite_numbers_never_become_sql_identifiers(spark):
+    """An infinite histogram bound or a NaN in a Drift baseline is
+    rejected with ValueError, even on a frame with columns named `inf`
+    and `nan`, which the printed number would otherwise bind to."""
+    from xpshacl_spark.sqltext import double_literal
+
+    inf, nan = float("inf"), float("nan")
+    for x in (inf, -inf, nan):
+        with pytest.raises(ValueError, match="non-finite"):
+            double_literal(x)
+    df = spark.createDataFrame(
+        [(1, 1.0, 2.0, 3.0)], "k long, v double, inf double, nan double"
+    )
+    with pytest.raises(ValueError, match="finite"):
+        profile(df, [ProfileSpec("v", hist=HistSpec(0.0, inf, 4))])
+    with pytest.raises(ValueError, match="finite"):
+        two_sample_drift(df, df, "v", -inf, 1.0, bins=4)
+    engine = ValidationEngine(spark)
+    bad = [
+        Drift("v", lo=0.0, hi=inf, bins=4, baseline=(1,) * 6),
+        Drift("v", lo=0.0, hi=4.0, bins=4, baseline=(1, 1, nan, 1, 1, 1)),
+    ]
+    for drift in bad:
+        with pytest.raises(ValueError, match="finite"):
+            engine.validate(df, [Shape("bad_drift", (drift,))], ["k"])
+
+
+def test_drift_and_profile_aggregate_projected_columns(spark, monkeypatch):
+    """The whole-table aggregate counts each Drift's projected bucket
+    and profile() aggregates projected columns: in the optimized plans
+    no aggregate function computes length(text) itself, so the
+    optimizer has not inlined the projections back, and each row
+    computes the length once."""
+    import re
+
+    from xpshacl_spark.datagen import roles_dim, tools_dim, transcripts
+    from xpshacl_spark.suites import transcript_shapes
+
+    engine = ValidationEngine(
+        spark, dims={"roles": roles_dim(spark), "tools": tools_dim(spark)}
+    )
+    df = transcripts(spark, n_convs=20)
+    drift = Drift("length(text)", lo=0.0, hi=400.0, bins=8,
+                  baseline=tuple(range(10)))
+    rep = engine.validate(df, transcript_shapes(drift=drift), ["conv_id", "turn_idx"])
+
+    collected = []  # the frame profile() collects
+    collect = type(df).collect
+    monkeypatch.setattr(
+        type(df), "collect", lambda self: collected.append(self) or collect(self)
+    )
+    spec = ProfileSpec("n", expression="length(text)", hist=HistSpec(0.0, 400.0, 8))
+    profile(df, [spec])
+    monkeypatch.undo()
+
+    def aggregate_exprs(plan):
+        if plan.nodeName() == "Aggregate":
+            exprs = plan.aggregateExpressions()
+            yield from (exprs.apply(i).toString() for i in range(exprs.size()))
+        children = plan.children()
+        for i in range(children.size()):
+            yield from aggregate_exprs(children.apply(i))
+
+    length_of_text = re.compile(r"(?<!octet_)length\(text#")
+    for frame in (rep.violations, *collected):
+        exprs = list(aggregate_exprs(frame._jdf.queryExecution().optimizedPlan()))
+        assert any("count(" in e for e in exprs)
+        assert not [e for e in exprs if length_of_text.search(e)]
+    assert len(collected) == 1

@@ -47,3 +47,28 @@ def test_call_site_capture_is_off(spark):
     JVM round trips on every Column method of a generated plan."""
     conf = spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
     assert conf == "false"
+
+
+def test_scan_splits_give_each_big_file_a_task(spark, tmp_path):
+    """A table of four single-row-group files of a few hundred KB and
+    four tiny ones scans with no task holding more rows than the
+    largest file: the tiny files may join a big one, but no two big
+    files share a task. At Spark's 4 MB default open cost the tiny files
+    inflate the split size until two big files share each task, and
+    half the cores idle through the scan."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "table")
+    for i, n in enumerate([3000, 2600, 2200, 1800] + [5] * 4):
+        rows = spark.range(n).selectExpr(
+            "sha2(CAST(id AS STRING), 512) AS a",
+            f"sha2(CAST(id + {i} * 10000 AS STRING), 256) AS b",
+        )
+        rows.coalesce(1).write.mode("append").parquet(path)
+    df = spark.read.parquet(path)
+
+    def largest(part):
+        return df.groupBy(part).count().agg(F.max("count")).first()[0]
+
+    assert largest(F.input_file_name()) == 3000
+    assert largest(F.spark_partition_id()) <= 3000

@@ -390,3 +390,28 @@ def test_path_value_fk_is_also_key_col(spark):
     rows = rep.violations.collect()
     assert [r.cust_id for r in rows] == [10]
     assert rows[0].value == "-5.0"
+
+
+def test_max_length_counts_characters_not_bytes(spark):
+    """MaxLength screens on the byte length first, but the bound is on
+    characters: four 2-byte or 4-byte characters conform at n = 4 and
+    five violate, on a string column and element-wise on an array
+    column; NULL values and NULL elements pass."""
+    from xpshacl_spark.shapes import MaxLength
+
+    e4, e5, s4, s5 = "é" * 4, "é" * 5, "😀" * 4, "😀" * 5
+    df = spark.createDataFrame(
+        [
+            (1, e4, [e4, s4]),
+            (2, e5, [s4, None]),
+            (3, s4, [s5]),
+            (4, s5, None),
+            (5, None, [e4, e5]),
+            (6, "abcd", []),
+        ],
+        "k int, s string, a array<string>",
+    )
+    shape = Shape("len", (MaxLength("s", 4), MaxLength("a", 4)))
+    rows = _violations(spark, df, shape, ["k"]).violations.collect()
+    got = sorted((r["k"], r["property_path"]) for r in rows)
+    assert got == [(2, "s"), (3, "a"), (4, "s"), (5, "a")]

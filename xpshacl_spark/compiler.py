@@ -27,6 +27,7 @@ of shapes.
 
 from __future__ import annotations
 
+import math
 import time
 from functools import reduce
 from typing import Optional, Sequence
@@ -37,6 +38,7 @@ from pyspark.sql import functions as F
 from xpshacl_spark.model import VIOLATION_COLUMNS, ViolationType
 from xpshacl_spark.operators.drift import (
     check_bins,
+    histogram_bucket,
     histogram_counts,
     ks_column,
     psi_column,
@@ -906,7 +908,7 @@ class ValidationEngine:
         covers every row). The 1-row result explodes into violation
         structs like the group plan: fully lazy, the single row unions
         into the violations. Drift bins are
-        operators.drift.histogram_counts, the profile's histogram; the
+        operators.drift.histogram_bucket, the profile's histogram; the
         statistic is psi_column / ks_column against the baseline, and
         a Drift without a baseline checks nothing."""
         pairs = []
@@ -934,6 +936,8 @@ class ValidationEngine:
                 check_bins(c.lo, c.hi, c.bins)
                 if c.baseline and len(c.baseline) != c.bins + 2:
                     raise ValueError("Drift baseline: bin count mismatch (need bins + 2)")
+                if not all(math.isfinite(x) for x in c.baseline):
+                    raise ValueError("Drift baseline: every count must be finite")
                 if c.baseline:
                     drifts.append((shape, c))
         if not pairs and not drifts:
@@ -972,11 +976,23 @@ class ValidationEngine:
                 aggs.append(F.max(F.when(cond, col)).alias(f"_a{i}"))
                 metrics.append(F.col(f"_a{i}").cast("double"))
 
+        # each Drift's value and bucket are projected once per row and
+        # its statistic once over the one-row aggregate: the counts read
+        # the bucket column, the value and the verdict the statistic
+        values, buckets, stats = [], [], []
         for i, (shape, c) in enumerate(drifts):
-            counts = histogram_counts(c.expression, c.lo, c.hi, c.bins)
-            aggs.append(counts.alias(f"_h{i}"))
-
-        row = df.agg(*aggs)
+            values.append(f"{c.expression} AS _drift_v{i}")
+            bucket = histogram_bucket(f"_drift_v{i}", c.lo, c.hi, c.bins)
+            buckets.append(f"{bucket} AS _drift_b{i}")
+            aggs.append(histogram_counts(f"_drift_b{i}", c.bins).alias(f"_h{i}"))
+            baseline = f"array({', '.join(double_literal(x) for x in c.baseline)})"
+            stat = (ks_column if c.stat == "ks" else psi_column)(baseline, f"_h{i}")
+            stats.append(stat.alias(f"_s{i}"))
+        if drifts:
+            binned = df.selectExpr("*", *values).selectExpr("*", *buckets)
+            row = binned.agg(*aggs).select("*", *stats)
+        else:
+            row = df.agg(*aggs)
         structs = []
         for i, (shape, c) in enumerate(pairs):
             m = metrics[i]
@@ -998,8 +1014,7 @@ class ValidationEngine:
             structs.append(F.when(violated, _violation_struct(shape, c, m, ctx)))
         for i, (shape, c) in enumerate(drifts):
             counts = f"_h{i}"
-            baseline = f"array({', '.join(double_literal(x) for x in c.baseline)})"
-            stat = (ks_column if c.stat == "ks" else psi_column)(baseline, counts)
+            stat = F.col(f"_s{i}")
             ctx = F.expr(
                 f"map('stat', {quote_string(c.stat)}, "
                 f"'threshold', {quote_string(str(c.threshold))}, 'n', "

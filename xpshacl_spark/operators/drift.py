@@ -2,10 +2,11 @@
 
 The per-bin counts come from one fused Spark aggregation (the
 compiler's whole-table aggregation, profile's, streaming.windowed_drift's
-and two_sample_drift's), each counted by count_array. histogram_counts
-is the one bucketing of a profile histogram and a Drift check;
-two_sample_drift and windowed_drift (bin_index) clamp in-range values
-instead. PSI and KS over the counts are Column expressions
+and two_sample_drift's), each counted by count_array over a bucket
+column projected before the aggregation, so each row is bucketed once.
+histogram_bucket is the one bucketing of a profile histogram and a
+Drift check; two_sample_drift and windowed_drift (bin_index) clamp
+in-range values instead. PSI and KS over the counts are Column expressions
 (psi_column / ks_column) in the same plan: no collect, no driver-side
 arithmetic. psi_statistic / ks_statistic are the Python references.
 Deterministic given fixed bins (SURVEY.md §4 custom item 2). The
@@ -128,9 +129,11 @@ def ks_column(baseline: str, current: str) -> Column:
 
 
 def check_bins(lo: float, hi: float, bins: int) -> None:
-    """Reject a fixed-bin histogram with no bin or an empty range: the
-    one declaration check of profile's HistSpec, the compiler's Drift
-    and two_sample_drift."""
+    """Reject a fixed-bin histogram with a non-finite bound, no bin or
+    an empty range: the one declaration check of profile's HistSpec,
+    the compiler's Drift and two_sample_drift."""
+    if not (math.isfinite(lo) and math.isfinite(hi)):
+        raise ValueError(f"histogram needs finite lo and hi, got [{lo}, {hi})")
     if bins < 1 or hi <= lo:
         raise ValueError(
             f"histogram needs bins >= 1 and lo < hi, got bins={bins} "
@@ -143,31 +146,36 @@ def count_array(bucket: str, ids: Sequence[int]) -> Column:
     array(count(bucket = j) for j in ids), for the SQL expression
     `bucket`. A row whose bucket is NULL counts nowhere, so callers
     exclude rows by nulling their bucket; an empty input gives 0s, not
-    NULLs."""
+    NULLs. `bucket` is repeated once per id, so callers pass a column
+    they projected, not the expression that computes it."""
     counts = ", ".join(f"count(CASE WHEN {bucket} = {j} THEN 1 END)" for j in ids)
     return F.expr(f"array({counts})")
 
 
-def histogram_counts(e: str, lo: float, hi: float, bins: int) -> Column:
-    """The profile / Drift histogram of the numeric SQL expression `e`
-    as one array<bigint> aggregate: [underflow, b0..b(bins-1),
-    overflow].
+def histogram_bucket(e: str, lo: float, hi: float, bins: int) -> str:
+    """The profile / Drift bucket of the numeric SQL expression `e`, as
+    SQL text: -1 for v < lo (underflow), `bins` for v >= hi (overflow),
+    NULL for NULL, and floor((v - lo) / width) in range, UNCLAMPED.
 
-    NULL gets no bin, v < lo is underflow, v >= hi is overflow, and an
-    in-range v goes to floor((v - lo) / width), UNCLAMPED. width =
-    (hi - lo) / bins is inexact in doubles, so a value just under hi
-    whose floor rounds to `bins` lands in overflow. `profile` and the
-    compiler's Drift both bin through here, so a Drift baseline taken
-    from a profile bins every value as the check does, and PSI/KS
-    measure the data, not the binning."""
+    width = (hi - lo) / bins is inexact in doubles, so a value just
+    under hi whose floor rounds to `bins` lands in overflow. `profile`
+    and the compiler's Drift both bin through here, so a Drift baseline
+    taken from a profile bins every value as the check does, and
+    PSI/KS measure the data, not the binning. `e` appears three times:
+    callers pass a projected column."""
     check_bins(lo, hi, bins)
     width = (hi - lo) / bins
     e = f"({e})"
     lo_, hi_ = double_literal(lo), double_literal(hi)
-    bucket = (
+    return (
         f"CASE WHEN {e} < {lo_} THEN -1 WHEN {e} >= {hi_} THEN {bins} "
         f"ELSE CAST(floor(({e} - {lo_}) / {double_literal(width)}) AS INT) END"
     )
+
+
+def histogram_counts(bucket: str, bins: int) -> Column:
+    """The histogram of a projected histogram_bucket column `bucket` as
+    one array<bigint> aggregate: [underflow, b0..b(bins-1), overflow]."""
     return count_array(bucket, range(-1, bins + 1))
 
 

@@ -22,7 +22,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from xpshacl_spark.operators.drift import histogram_counts
+from xpshacl_spark.operators.drift import histogram_bucket, histogram_counts
 from xpshacl_spark.sqltext import quote_ident
 
 
@@ -31,7 +31,7 @@ class HistSpec:
     """Fixed equi-width bins [lo, hi) with an underflow and an overflow
     bucket; bins are fixed up front so profiling stays single-pass and
     drift statistics are deterministic. Binned by
-    operators.drift.histogram_counts, as the Drift check is: width =
+    operators.drift.histogram_bucket, as the Drift check is: width =
     (hi - lo) / bins is inexact in doubles, so a value just under hi
     can land in overflow (two_sample_drift clamps such a value into the
     last bin instead). bins < 1 or hi <= lo raises ValueError."""
@@ -58,19 +58,26 @@ def profile(df: DataFrame, specs: Sequence[ProfileSpec]) -> dict:
     Returns {name: {count, nulls, min, max, approx_distinct,
     hist: [underflow, b0..b(n-1), overflow] or None, hist_spec}}.
     """
+    # each expression and each bucket is projected once, so a row
+    # computes it once however many aggregates read it
+    cols = df.selectExpr(*(f"{s.expr_sql()} AS _e{i}" for i, s in enumerate(specs)))
+    buckets = [
+        f"{histogram_bucket(f'_e{i}', s.hist.lo, s.hist.hi, s.hist.bins)} AS _b{i}"
+        for i, s in enumerate(specs)
+        if s.hist
+    ]
+    if buckets:
+        cols = cols.selectExpr("*", *buckets)
     aggs = [F.count(F.lit(1)).alias("_total")]
     for i, s in enumerate(specs):
-        e = F.expr(s.expr_sql())
+        e = F.col(f"_e{i}")
         aggs.append(F.count(e).alias(f"_c{i}"))
         aggs.append(F.min(e).cast("string").alias(f"_min{i}"))
         aggs.append(F.max(e).cast("string").alias(f"_max{i}"))
         aggs.append(F.approx_count_distinct(e, rsd=s.rsd).alias(f"_d{i}"))
         if s.hist:
-            h = s.hist
-            aggs.append(
-                histogram_counts(s.expr_sql(), h.lo, h.hi, h.bins).alias(f"_h{i}")
-            )
-    row = df.agg(*aggs).collect()[0].asDict()
+            aggs.append(histogram_counts(f"_b{i}", s.hist.bins).alias(f"_h{i}"))
+    row = cols.agg(*aggs).collect()[0].asDict()
 
     out = {}
     total = row["_total"]

@@ -80,22 +80,23 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # Scan-split size (guide §6): the local bench tables are SINGLE
-        # parquet files (lineitem sf1.0: one 126 MB file, six ~21 MB
-        # row groups), so Spark's 128 MB default yields a ONE-TASK scan
-        # and every map-side aggregation over lineitem runs
-        # single-threaded. 16 MB splits let each row group decode in
-        # its own task (measured: the fused lineitem agg queries drop
-        # ~2-4x; see OPTIMIZATION_r06.md). Scale-dependent and
-        # parameterised: a production 100 TB table is thousands of
-        # row-group-sized files where larger splits (128 MB - 1 GB)
-        # cut scheduling overhead — set SPARK_GRAFT_MAX_PARTITION_BYTES
-        # there; AQE still coalesces small shuffle partitions either
-        # way.
+        # Scan splits. A table here is a directory of parquet files,
+        # each one row group of a few MB, plus the odd tiny file.
+        # Spark packs files into scan tasks at a split size of
+        # (bytes + files x open cost) / cores, but adds a file to the
+        # open task when the file alone fits, without its open cost.
+        # At the 4 MB default open cost, a few small files inflate the
+        # split size so much that two big files share each task and
+        # half the cores idle through every scan. A 128k open cost
+        # counts a small file as about what it costs to open, so each
+        # big file gets a task of its own. The 16m split size caps a
+        # task at a few row groups; a production table of large files
+        # may want larger splits (SPARK_GRAFT_MAX_PARTITION_BYTES).
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
         )
+        .config("spark.sql.files.openCostInBytes", "128k")
         # keep catalog-table data out of the launch directory (bucketed
         # tables pass explicit external paths; this covers any default),
         # per-process so concurrent sessions' managed tables never

@@ -307,7 +307,12 @@ class MaxLength(ValueConstraint):
         return {"maxLength": self.length}
 
     def ok_value(self, v: Column) -> Column:
-        return F.length(v) <= F.lit(self.length)
+        # a string never has more characters than bytes, so the cheap
+        # byte count settles every row of at most `length` bytes and
+        # characters are counted only for the longer ones
+        return (F.octet_length(v) <= F.lit(self.length)) | (
+            F.length(v) <= F.lit(self.length)
+        )
 
 
 @dataclass(frozen=True)

@@ -5,6 +5,8 @@ method."""
 
 from __future__ import annotations
 
+import math
+
 
 def quote_ident(name: str) -> str:
     """`name` as a backtick-quoted identifier, inner backticks doubled."""
@@ -26,5 +28,10 @@ def quote_string(s: str) -> str:
 def double_literal(x: float) -> str:
     """`x` as a DOUBLE expression. A bare `5000.0` would parse as a
     DECIMAL and make the arithmetic around it decimal; the cast of the
-    shortest round-trip repr gives back exactly `x`."""
-    return f"CAST({float(x)!r} AS DOUBLE)"
+    shortest round-trip repr gives back exactly `x`. A non-finite `x`
+    raises ValueError: its repr (`inf`, `nan`) would parse as a column
+    name."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"no SQL literal for the non-finite double {x!r}")
+    return f"CAST({x!r} AS DOUBLE)"
