@@ -62,3 +62,30 @@ def test_every_private_module_helper_is_referenced():
     assert not unreferenced, "private helpers with no reference: " + ", ".join(
         unreferenced
     )
+
+
+def test_create_dataframe_only_in_local_relation():
+    """Driver rows become relations only through
+    `session.local_relation`, which hands Spark an Arrow table. A row
+    list given to `createDataFrame` anywhere else plans as a Python RDD
+    whose first action starts Python workers."""
+    allowed = os.path.join(PKG, "session.py")
+    calls = []
+    for path in _py_files(PKG):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        inside = set()
+        if path == allowed:
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "local_relation":
+                    inside = {id(n) for n in ast.walk(node)}
+        calls.extend(
+            f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and node.attr == "createDataFrame"
+            and id(node) not in inside
+        )
+    assert not calls, "createDataFrame outside local_relation: " + ", ".join(
+        sorted(calls)
+    )

@@ -155,6 +155,33 @@ def test_validate_with_drift_starts_no_job(spark):
     assert rep.metrics["n_shapes"] == len(shapes)
 
 
+def test_positional_union_matches_union_by_name(spark, monkeypatch):
+    """validate() unions its parts by position. Every part has the same
+    column order, so the transcript suite with a Drift gives the same
+    rows and schema as a by-name union of the same parts."""
+    from pyspark.sql import DataFrame
+
+    from xpshacl_spark.datagen import roles_dim, tools_dim, transcripts
+    from xpshacl_spark.suites import transcript_shapes
+
+    engine = ValidationEngine(
+        spark, dims={"roles": roles_dim(spark), "tools": tools_dim(spark)}
+    )
+    df = transcripts(spark, n_convs=40)
+    drift = Drift("length(text)", lo=0.0, hi=400.0, bins=8,
+                  baseline=(1, 1, 1, 1, 1, 1, 1, 1, 1, 50))
+    shapes = transcript_shapes(drift=drift)
+    keys = ["conv_id", "turn_idx"]
+    positional = engine.validate(df, shapes, keys).violations
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "union", DataFrame.unionByName)
+        by_name = engine.validate(df, shapes, keys).violations
+    assert positional.schema.json() == by_name.schema.json()
+    rows = positional.collect()
+    assert sorted(map(repr, rows)) == sorted(map(repr, by_name.collect()))
+    assert len({r.shape_id for r in rows}) >= 5
+
+
 def _count_py4j_commands(monkeypatch):
     """Record every py4j command this process sends to the JVM, except
     the `m` (memory) ones that Python's garbage collector triggers."""

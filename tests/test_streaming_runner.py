@@ -182,6 +182,52 @@ def test_runner_cli_conformance_by(spark, tmp_path):
     )
 
 
+def test_runner_conformance_count_from_observation(spark, tmp_path):
+    """The failing-group count rides the conformance write as an
+    Observation. The summary and the written conformance relation equal
+    what a separate recount over the published violations gives."""
+    import io
+    from contextlib import redirect_stdout
+
+    from xpshacl_spark import runner
+    from xpshacl_spark.checkpoint import CheckpointedRunner
+
+    inp = str(tmp_path / "in.parquet")
+    out = str(tmp_path / "out")
+    transcripts(spark, n_convs=50, seed=3).write.parquet(inp)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        rc = runner.main(
+            ["--input", inp, "--output", out, "--conformance-by", "conv_id",
+             "--explain"]
+        )
+    assert rc == 3
+    summary = json.loads(buf.getvalue().strip().splitlines()[-1])
+
+    df = spark.read.parquet(inp)
+    engine = ValidationEngine(
+        spark, dims={"roles": roles_dim(spark), "tools": tools_dim(spark)}
+    )
+    report = CheckpointedRunner(engine, out).report(["conv_id", "turn_idx"])
+    counts = report.counts().collect()
+    want_conf = report.conformance_by_group(df, ["conv_id"])
+    assert summary == {
+        "conforms": False,
+        "n_violations": sum(r["n_violations"] for r in counts),
+        "by_shape": {
+            f"{r['shape_id']}#{r['constraint_component']}": r["n_violations"]
+            for r in counts
+        },
+        "wall_sec": summary["wall_sec"],
+        "conformance_path": f"{out}/conformance",
+        "n_nonconforming_groups": want_conf.where("NOT conforms").count(),
+        "explained_path": f"{out}/explained",
+    }
+    conf = spark.read.parquet(f"{out}/conformance")
+    assert conf.dtypes == want_conf.dtypes  # parquet reads back all-nullable
+    assert sorted(conf.collect()) == sorted(want_conf.collect())
+
+
 def _stream_one_file_per_batch(spark, path):
     schema = spark.read.parquet(path).schema
     return (

@@ -43,6 +43,7 @@ from xpshacl_spark.operators.drift import (
     ks_column,
     psi_column,
 )
+from xpshacl_spark.session import local_relation
 from xpshacl_spark.shapes import (
     DatasetMetric,
     DenseIndex,
@@ -341,7 +342,10 @@ class ValidationEngine:
         parts.extend(self._compile_sql_checks(df, shapes, key_cols))
 
         if parts:
-            violations = reduce(lambda a, b: a.unionByName(b), parts)
+            # every part is (key_cols..., VIOLATION_COLUMNS...) in that
+            # order, so a positional union skips unionByName's per-part
+            # name resolution
+            violations = reduce(DataFrame.union, parts)
         else:
             violations = self._empty_violations(df, key_cols)
 
@@ -1245,4 +1249,4 @@ class ValidationEngine:
             "violation_type string, property_path string, value string, "
             "message string, severity string, context map<string,string>"
         )
-        return self.spark.createDataFrame([], schema)
+        return local_relation(self.spark, [], schema)

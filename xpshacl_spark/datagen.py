@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xpshacl_spark.session import local_relation
+
 ROLES = ["user", "assistant", "system", "tool"]
 TOOLS = [f"tool-{i:02d}" for i in range(20)]
 
@@ -46,11 +48,11 @@ def _h(rule: str, seed: int, *cols):
 
 
 def roles_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(r,) for r in ROLES], "role string")
+    return local_relation(spark, [(r,) for r in ROLES], "role string")
 
 
 def tools_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in TOOLS], "tool string")
+    return local_relation(spark, [(t,) for t in TOOLS], "tool string")
 
 
 def conversations(spark: SparkSession, n_convs: int, seed: int = 42) -> DataFrame:

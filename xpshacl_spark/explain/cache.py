@@ -136,12 +136,14 @@ class ExplanationCache:
         """The cache as a DataFrame for broadcast cache-hit joins."""
         from pyspark.sql import types as T
 
+        from xpshacl_spark.session import local_relation
+
         schema = T.StructType(
             [T.StructField(c, T.StringType(), True) for c in _COLUMNS]
         )
-        if len(self._df) == 0:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(self._df.astype(object), schema)
+        df = self._df[_COLUMNS].astype(object)
+        rows = df.where(df.notna(), None).itertuples(index=False, name=None)
+        return local_relation(spark, rows, schema)
 
     # -- reference-parity API -------------------------------------------
 

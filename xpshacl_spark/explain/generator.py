@@ -197,12 +197,16 @@ class BatchExplanationGenerator(ExplanationGenerator):
             return [
                 template_explanation(v, lang) for v, _, _, lang in items
             ]
+        from xpshacl_spark.session import local_relation
+
         rows = []
         for i, (v, t, c, lang) in enumerate(items):
             ep, sp = build_prompts(v, t, c, lang)
             rows.append((i, ep, sp, lang))
-        df = spark.createDataFrame(
-            rows, "idx long, expl_prompt string, sugg_prompt string, language string"
+        df = local_relation(
+            spark,
+            rows,
+            "idx long, expl_prompt string, sugg_prompt string, language string",
         )
         llm_fn, model = self.llm_fn, self.model_name
 

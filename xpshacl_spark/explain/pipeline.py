@@ -38,6 +38,7 @@ from xpshacl_spark.explain.signature import (
 )
 from xpshacl_spark.explain.tree import build_justification_tree
 from xpshacl_spark.model import ViolationType
+from xpshacl_spark.session import local_relation
 
 _EXPL_SCHEMA = T.StructType(
     [
@@ -255,7 +256,7 @@ class Explainer:
         if new_cache_entries and self.cache.path:
             # one save per run (main.py:213-216)
             self.cache.save()
-        return self.spark.createDataFrame(out_rows, _EXPL_SCHEMA)
+        return local_relation(self.spark, out_rows, _EXPL_SCHEMA)
 
     def explain_full(
         self,

@@ -43,6 +43,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from xpshacl_spark.session import local_relation
+
 
 def metric_anomalies(
     history: DataFrame,
@@ -137,8 +139,8 @@ def history_from_manifests(
                     rec["run_id"],
                 )
             )
-    return spark.createDataFrame(
-        rows, "metric string, run_order double, value double, run_id string"
+    return local_relation(
+        spark, rows, "metric string, run_order double, value double, run_id string"
     )
 
 

@@ -41,6 +41,7 @@ from xpshacl_spark.operators.text import (
     normalize_text,
     rebalance_if_narrow,
 )
+from xpshacl_spark.session import local_relation
 
 
 # ---------------------------------------------------------------------------
@@ -462,9 +463,10 @@ def duplicate_clusters(
                 else:
                     parent2[ra] = rb
             spark = pairs.sparkSession
-            groots = spark.createDataFrame(
+            groots = local_relation(
+                spark,
                 [(i, find2(i)) for i in sorted(nodes)],
-                schema=f"id {idt}, label {idt}",
+                f"id {idt}, label {idt}",
             )
     if groots is None:
         groots = _minlabel_pointer_jump(contracted, max_iter)

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from xpshacl_spark.operators.drift import histogram_bucket, histogram_counts
+from xpshacl_spark.session import local_relation
 from xpshacl_spark.sqltext import quote_ident
 
 
@@ -539,11 +540,11 @@ def quantiles_relation(
         for c in dict.fromkeys(columns)
         for q in q_list
     ]
-    computed = spark.createDataFrame(
-        rows, "column string, q double, quantile double"
+    computed = local_relation(
+        spark, rows, "column string, q double, quantile double"
     )
-    grid = spark.createDataFrame(
-        [(c, q) for c in columns for q in q_list], "column string, q double"
+    grid = local_relation(
+        spark, [(c, q) for c in columns for q in q_list], "column string, q double"
     )
     return grid.join(computed, ["column", "q"], "left")
 
@@ -676,7 +677,8 @@ def quantiles_error_bound_relation(
     final_rows = [r for c in columns for r in by_col[c]] if (
         len(uniq) != len(list(columns))
     ) else out_rows
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         final_rows,
         "column string, q double, exact_q double, within_bound boolean",
     )

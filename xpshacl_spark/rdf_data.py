@@ -25,6 +25,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from xpshacl_spark.session import local_relation
 from xpshacl_spark.shapes_ttl import (
     RDF_TYPE,
     Literal,
@@ -170,7 +171,7 @@ def rdf_table(
         tuple([ids[subj]] + [_cell(c, rows[subj].get(c)) for c in cols])
         for subj in sorted(rows, key=lambda s: (ids[s], s))
     ]
-    return spark.createDataFrame(data, schema)
+    return local_relation(spark, data, schema)
 
 
 def read_rdf_table(spark: SparkSession, path: str, **kwargs) -> DataFrame:

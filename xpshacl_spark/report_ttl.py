@@ -144,6 +144,8 @@ def report_violations_df(spark, source: str):
     whitespace; a whitespace-free non-existent path raises)."""
     from pyspark.sql import types as T
 
+    from xpshacl_spark.session import local_relation
+
     if os.path.exists(source):
         rows, _ = read_report_violations(source)
     elif "\n" in source or " " in source:
@@ -164,11 +166,11 @@ def report_violations_df(spark, source: str):
         ]
     )
     ordered = [
-        {
-            "focus_node": r["focus_node"],
-            **{c: r[c] for c in VIOLATION_COLUMNS if c != "context"},
-            "context": r["context"],
-        }
+        (
+            r["focus_node"],
+            *(r[c] for c in VIOLATION_COLUMNS if c != "context"),
+            r["context"],
+        )
         for r in rows
     ]
-    return spark.createDataFrame(ordered, schema)
+    return local_relation(spark, ordered, schema)

@@ -192,6 +192,9 @@ def main(argv=None) -> int:
             )
         schema_gate = _parse_schema_spec(ap, args.expect_schema)
 
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from xpshacl_spark.checkpoint import CheckpointedRunner
     from xpshacl_spark.compiler import ValidationEngine, ValidationReport
     from xpshacl_spark.datagen import roles_dim, tools_dim
@@ -311,12 +314,15 @@ def main(argv=None) -> int:
         missing = [c for c in group_cols if c not in df.columns]
         if missing:
             ap.error(f"--conformance-by columns not in input: {missing}")
-        conf = report.conformance_by_group(df, group_cols)
+        # the failing-group count rides the write as an Observation
+        # instead of a second pass over the universe distinct and join
+        obs = Observation()
+        conf = report.conformance_by_group(df, group_cols).observe(
+            obs, F.count_if(~F.col("conforms")).alias("n_nonconforming")
+        )
         conf.write.mode("overwrite").parquet(f"{args.output}/conformance")
         summary["conformance_path"] = f"{args.output}/conformance"
-        summary["n_nonconforming_groups"] = int(
-            conf.where("NOT conforms").count()
-        )
+        summary["n_nonconforming_groups"] = int(obs.get["n_nonconforming"])
 
     if args.explain:
         cache = ExplanationCache(args.cache) if args.cache else ExplanationCache()

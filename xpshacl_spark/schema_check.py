@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xpshacl_spark.session import local_relation
+
 
 @dataclass(frozen=True)
 class ColumnSpec:
@@ -117,7 +119,7 @@ def schema_violations(
     order-independent content (the relation is tiny — bounded by the
     column count — and built driver-side from metadata alone)."""
     rows = schema_issue_rows(spark, df, specs, allow_extra=allow_extra)
-    return spark.createDataFrame(rows, _RESULT_SCHEMA)
+    return local_relation(spark, rows, _RESULT_SCHEMA)
 
 
 def schema_violation_report(

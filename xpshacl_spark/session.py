@@ -8,8 +8,10 @@ multi-executor cluster via spark-submit --py-files.
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _host_cores() -> int:
@@ -121,3 +123,63 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _rebuilds_map(dt: T.DataType) -> bool:
+    """Whether `dt` holds a map whose key or value is a timestamp or a
+    nested type. PySpark's Arrow input path rebuilds such a map, and
+    with pyarrow < 17 the rebuild turns a NULL map into an empty one."""
+    if isinstance(dt, T.MapType):
+        return any(
+            isinstance(t, (T.TimestampType, T.ArrayType, T.MapType, T.StructType))
+            for t in (dt.keyType, dt.valueType)
+        )
+    if isinstance(dt, T.ArrayType):
+        return _rebuilds_map(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return any(_rebuilds_map(f.dataType) for f in dt.fields)
+    return False
+
+
+def local_relation(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """Rows the driver already holds as a relation: one tuple per row,
+    values in `schema`'s field order; `schema` is a StructType or a DDL
+    string.
+
+    The rows go to the JVM as one Arrow table, so a small relation
+    plans as a `LocalRelation`: collecting, joining or broadcasting it
+    starts no Spark job and no Python worker. A row list handed to
+    `createDataFrame` would instead become a parallelized Python RDD
+    whose first action starts the Python daemon and one task per core.
+    Tables above `spark.sql.execution.arrow.localRelationThreshold` are
+    still decoded in the JVM, never pickled."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows = list(rows)
+    n = len(schema.fields)
+    if any(len(r) != n for r in rows):
+        raise ValueError(f"every row needs {n} values, one per field of {schema}")
+    rebuilt = [f.name for f in schema.fields if _rebuilds_map(f.dataType)]
+    if rebuilt:
+        raise TypeError(
+            f"fields {rebuilt} hold a map of timestamps or nested values, "
+            "whose NULLs the Arrow path does not keep"
+        )
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * n
+    arrays = []
+    for values, f, af in zip(columns, schema.fields, arrow_schema):
+        if not f.nullable and any(v is None for v in values):
+            raise ValueError(f"field {f.name!r} is not nullable, but got None")
+        if f.dataType.needConversion():
+            # Spark's internal form, as the row-list path builds it: a
+            # naive datetime is local time, where Arrow would read UTC
+            values = [f.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, type=af.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

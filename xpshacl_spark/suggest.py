@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import local_relation
 from .shapes import (
     Constraint,
     DatasetMetric,
@@ -290,7 +291,8 @@ def suggestions_relation(
 ) -> DataFrame:
     """The suggestions as a relation (col_name, constraint_component,
     param_num, param_str) — metadata-sized, like schema_check's."""
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [
             (s.col_name, s.constraint_component, s.param_num, s.param_str)
             for s in suggestions
