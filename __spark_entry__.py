@@ -566,31 +566,13 @@ def q_unigram_external(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_logprob(d, "doc_id", "text", oov_count=0.5, vocab=persisted)
 
 
-def _replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay the events table as a file stream: file-stream sources
-    need a DIRECTORY and the testdata table is a single file, so stream
-    from a symlink in a fresh temp dir."""
-    import tempfile
-
-    src = tempfile.mkdtemp(prefix="xp_stream_src_")
-    os.symlink(
-        os.path.abspath(f"{sf_dir}/events.parquet"), f"{src}/events.parquet"
-    )
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .parquet(src)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-
-
 def _replay_one_file_stream(
     spark: SparkSession, df: DataFrame, prefix: str
 ) -> DataFrame:
     """Materialize `df` as ONE parquet file in a fresh temp dir and open
     it as a file-stream source. A single file means a single
     AvailableNow micro-batch, which is what makes the stateful
-    operators' in-batch ordering deterministic for the oracles."""
+    operator's in-batch ordering deterministic for its oracle."""
     import tempfile
 
     src = tempfile.mkdtemp(prefix=prefix)
@@ -619,31 +601,6 @@ def _run_stream_to_memory(spark: SparkSession, df: DataFrame, prefix: str) -> Da
     return spark.table(name)
 
 
-def q_stream_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming, DuckDB-oracled: the events table replayed
-    through a file-stream source -> watermarked tumbling-window
-    sh:maxCount (windowed_max_count) -> append-mode memory sink with
-    Trigger.AvailableNow. Append mode emits exactly the windows the
-    final watermark (max event time - 1h) has closed, which the oracle
-    reproduces as `window_end <= max(ts) - 1h` — so the streaming
-    engine's late-data semantics themselves are value-verified, not
-    just unit-tested. Timestamps compare as epoch seconds (tz-proof
-    across engines)."""
-    from xpshacl_spark.shapes import GroupMaxCount
-    from xpshacl_spark.streaming import windowed_max_count
-
-    stream = _replay_events_stream(spark, sf_dir)
-    shape = Shape("evt_hourly_rate", (GroupMaxCount(("event_type",), 2),))
-    v = windowed_max_count(
-        stream, shape, ts_col="ts", window_duration="1 hour", watermark="1 hour"
-    )
-    return _run_stream_to_memory(spark, v, "winviol_").select(
-        "event_type",
-        F.col("window_start").cast("long").alias("window_start_unix"),
-        F.element_at(F.col("context"), "actualCount").cast("int").alias("n_events"),
-    )
-
-
 def q_stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom STATEFUL streaming operator, driver-oracled: exact dedup
     over an unbounded stream (applyInPandasWithState, one counter per
@@ -667,107 +624,6 @@ def q_stream_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _run_stream_to_memory(spark, out, "sdedup_").select(
         "doc_id", "n_prior"
-    )
-
-
-def q_stream_monotonic_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming ordering check, driver-oracled: the events
-    table with deliberate time regressions (every event_id % 97 == 0
-    shifted back 2 hours) replays as a ONE-file stream through
-    streaming_monotonic (applyInPandasWithState: per-user state = the
-    last seen ts; in-batch lag over the order column). A single
-    micro-batch makes the emitted regressions exactly the batch lag's,
-    so the oracle is a plain LAG window — the streaming analog of
-    sh:lessThanOrEquals/Monotonic gets the same hash-level proof as the
-    batch one (q_monotonic_events)."""
-    from xpshacl_spark.streaming import streaming_monotonic
-
-    ev = _load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.when(
-            F.pmod("event_id", F.lit(97)) == 0,
-            F.col("ts") - F.expr("INTERVAL 2 HOURS"),
-        )
-        .otherwise(F.col("ts"))
-        .cast("timestamp")  # testdata stores NTZ; session-tz timestamps
-        .alias("ts"),       # cast to epoch long for the oracle compare
-    )
-    stream = _replay_one_file_stream(spark, ev, "xp_stream_msrc_")
-    out = streaming_monotonic(stream, ["user_id"], "event_id", ts_col="ts")
-    return _run_stream_to_memory(spark, out, "smono_").select(
-        "user_id",
-        "event_id",
-        F.col("ts").cast("long").alias("ts_unix"),
-        F.col("prev_ts").cast("long").alias("prev_ts_unix"),
-    )
-
-
-DRIFT_BINS = 8
-DRIFT_LO, DRIFT_WIDTH = 0.0, 50.0
-DRIFT_BASELINE_CUT = 1704672000  # 2024-01-08 UTC: the reference week
-
-
-def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming drift monitor, value-oracled end-to-end: the baseline
-    histogram (first week of events.value, fixed 8x50 bins) is computed
-    in BATCH and passed as literals — the deploy shape where the
-    train-time distribution is frozen and live traffic streams against
-    it. The events table then replays through a file stream and
-    windowed_drift emits one PSI row per closed 1-day window (append
-    mode, 1h watermark). The oracle recomputes baseline proportions,
-    per-window bins, and the PSI term sum in SQL with the watermark cut
-    `window_end <= max(ts) - 1h`."""
-    from xpshacl_spark.operators.drift import bin_index
-    from xpshacl_spark.streaming import windowed_drift
-
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # the SAME bin_index helper windowed_drift uses internally —
-    # baseline and live windows must bin a value identically
-    idx = bin_index(F.col("value"), DRIFT_LO, DRIFT_WIDTH, DRIFT_BINS)
-    got = {
-        r["bi"]: r["n"]
-        for r in batch.where(
-            F.col("value").isNotNull()
-            & (
-                F.col("ts").cast("timestamp").cast("long")
-                < DRIFT_BASELINE_CUT
-            )
-        )
-        .groupBy(idx.alias("bi"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    baseline = [got.get(i, 0) for i in range(DRIFT_BINS)]
-
-    v = windowed_drift(
-        _replay_events_stream(spark, sf_dir), "value", baseline,
-        DRIFT_LO, DRIFT_WIDTH,
-        ts_col="ts", window_duration="1 day", watermark="1 hour",
-    )
-    return _run_stream_to_memory(spark, v, "drift_").select(
-        F.col("window_start").cast("long").alias("window_start_unix"),
-        "n_rows",
-        "psi",
-    )
-
-
-def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming gap-based sessionization (session_window + watermark),
-    value-oracled: append mode emits exactly the sessions whose end
-    (last event + gap) the final watermark passed; the oracle rebuilds
-    them with the batch lag+cumsum idiom and the same watermark cut."""
-    from xpshacl_spark.streaming import windowed_session_counts
-
-    sess = windowed_session_counts(
-        _replay_events_stream(spark, sf_dir), ["user_id"],
-        ts_col="ts", gap="30 minutes", watermark="1 hour",
-    )
-    return _run_stream_to_memory(spark, sess, "sessviol_").select(
-        "user_id",
-        F.col("session_start").cast("long").alias("session_start_unix"),
-        F.col("session_end").cast("long").alias("session_end_unix"),
-        "n_events",
     )
 
 
@@ -1630,41 +1486,6 @@ def q_text_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_parity_violations(d, b, key_cols=["doc_id"])
 
 
-def q_report_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-run violation-report diff (report_diff.violation_diff):
-    run N-1 validated {qty<=30, disc<=0.08}; run N tightened qty to 28
-    and swapped disc for a tax floor. The delta relation carries the
-    regression story: 'new' = qty in (28,30] plus every tax violation,
-    'resolved' = every disc violation. One full-outer equi-join on the
-    violation identity (shape, component, focus key) between two
-    violation relations — never touches the fact table twice beyond the
-    two validation scans themselves. Oracle rebuilds both violation
-    sets from the range predicates and takes the identical one-sided
-    FULL OUTER JOIN."""
-    from xpshacl_spark.report_diff import violation_diff
-
-    li = _load(spark, sf_dir, "lineitem")
-    keys = ["l_orderkey", "l_linenumber"]
-    engine = ValidationEngine(spark)
-    prev = engine.validate(
-        li,
-        [
-            Shape("li_qty", (MaxInclusive("l_quantity", 30),)),
-            Shape("li_disc", (MaxInclusive("l_discount", 0.08),)),
-        ],
-        key_cols=keys,
-    ).violations
-    cur = engine.validate(
-        li,
-        [
-            Shape("li_qty", (MaxInclusive("l_quantity", 28),)),
-            Shape("li_tax", (MinInclusive("l_tax", 0.02),)),
-        ],
-        key_cols=keys,
-    ).violations
-    return violation_diff(cur, prev, key_cols=keys)
-
-
 def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE merge-candidate counting
     (text.bpe_merge_candidates): top-50 adjacent character pairs within
@@ -1677,103 +1498,6 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _load(spark, sf_dir, "documents")
     return bpe_merge_candidates(d, "text", k=50)
-
-
-_SUGGEST_COLS = (
-    # (col, kind) — kind drives which rules the oracle mirrors
-    ("o_orderkey", "num"),
-    ("o_custkey", "num"),
-    ("o_totalprice", "num"),
-    ("o_orderstatus", "str"),
-    ("o_orderpriority", "str"),
-)
-
-
-def q_suggest_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Constraint suggestion (suggest.suggest_constraints): profile the
-    orders table in ONE fused multi-distinct aggregate (plus one capped
-    distinct-values pass for the low-cardinality InSet candidates) and
-    emit the proposed constraints as a relation — the Deequ-style
-    authoring loop whose output `suggested_shapes` feeds straight back
-    into ValidationEngine.validate. Oracle recomputes every rule gate
-    (zero nulls -> NotNull, distinct==nonnull -> Unique, numeric ->
-    Min/MaxInclusive, string -> Min/MaxLength, distinct<=10 -> InSet
-    with the sorted value list) from one DuckDB stats CTE."""
-    from xpshacl_spark.suggest import suggest_constraints, suggestions_relation
-
-    o = _load(spark, sf_dir, "orders")
-    sugg = suggest_constraints(
-        o, [c for c, _ in _SUGGEST_COLS], inset_max=10
-    )
-    return suggestions_relation(spark, sugg)
-
-
-def q_metric_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-run metric anomaly detection (operators.anomaly): the
-    history is per-(event_type, day) counts — the shape a nightly
-    validation pipeline's manifest metrics take — with a deterministic
-    planted 3x spike on day 15 (the test seam, q_text_parity
-    convention); metric_anomalies flags rows deviating >50% from their
-    trailing-7 mean after a 3-point warmup. Count-valued metrics make
-    every double exact (integer sums, one division), so the oracle
-    mirrors the raw doubles with no rounding. Plan: one grouped count
-    then ONE metric-partitioned window over the metadata-sized history."""
-    from xpshacl_spark.operators.anomaly import metric_anomalies
-
-    return metric_anomalies(
-        _daily_metric_history(spark, sf_dir),
-        window=7,
-        threshold=0.5,
-        min_history=3,
-    )
-
-
-def _daily_metric_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared history relation for the anomaly-strategy queries:
-    per-(event_type, day) counts with the deterministic 3x day-15 spike
-    (same seam as q_metric_anomalies)."""
-    ev = _load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.col("event_type").alias("metric"), F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return daily.select(
-        "metric",
-        F.datediff(F.col("day"), F.lit("1970-01-01"))
-        .cast("double")
-        .alias("run_order"),
-        (
-            F.col("n")
-            * F.when(F.dayofmonth("day") == 15, F.lit(3)).otherwise(F.lit(1))
-        )
-        .cast("double")
-        .alias("value"),
-    )
-
-
-def q_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deequ RelativeRateOfChangeStrategy over the manifest-metric
-    history: value/prev outside [0.5, 2.0] pages — the planted day-15
-    3x spike fires on the way up AND on the way back down. One lag
-    window per metric over the metadata-sized history."""
-    from xpshacl_spark.operators.anomaly import rate_of_change_anomalies
-
-    return rate_of_change_anomalies(
-        _daily_metric_history(spark, sf_dir), max_increase=2.0, max_decrease=0.5
-    )
-
-
-def q_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deequ OnlineNormalStrategy (batch form): |value - trailing mean|
-    > 3 trailing sample stds. Variance is the explicit textbook
-    one-pass form — fixed op order, bit-identical across engines for
-    count-valued metrics — NOT the engine's stddev_samp (Welford ulp
-    differences would break hash parity). ONE window, three shared
-    frame aggregates."""
-    from xpshacl_spark.operators.anomaly import zscore_anomalies
-
-    return zscore_anomalies(
-        _daily_metric_history(spark, sf_dir), window=7, z=3.0, min_history=3
-    )
 
 
 def q_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1832,7 +1556,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_unigram_external": q_unigram_external,
         "q_salted_skew_validation": q_salted_skew_validation,
         "q_dup_span_stats": q_dup_span_stats,
-        "q_stream_drift": q_stream_drift,
         "q_dedup_incremental": q_dedup_incremental,
         "q_path_value_orders": q_path_value_orders,
         "q_violation_rollup": q_violation_rollup,
@@ -1857,8 +1580,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_pii_documents": q_pii_documents,
         "q_repetition_documents": q_repetition_documents,
         "q_unigram_quality": q_unigram_quality,
-        "q_stream_window_events": q_stream_window_events,
-        "q_stream_sessions": q_stream_sessions,
         "q_violation_summary": q_violation_summary,
         "q_text_profile": q_text_profile,
         "q_dedup_exact": q_dedup_exact,
@@ -1867,8 +1588,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_dup_span_extract": q_dup_span_extract,
         "q_strip_dup_spans": q_strip_dup_spans,
         "q_ngram_repetition": q_ngram_repetition,
-        "q_rate_anomalies": q_rate_anomalies,
-        "q_zscore_anomalies": q_zscore_anomalies,
         "q_nb_quality": q_nb_quality,
         "q_conv_assembly": q_conv_assembly,
         "q_max_gap_events": q_max_gap_events,
@@ -1880,17 +1599,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_mi_documents": q_mi_documents,
         "q_transition_events": q_transition_events,
         "q_dense_turns_events": q_dense_turns_events,
-        "q_stream_monotonic_events": q_stream_monotonic_events,
         "q_stream_dedup_docs": q_stream_dedup_docs,
         "q_schema_documents": q_schema_documents,
         "q_quantiles_approx": q_quantiles_approx,
         "q_skew_join_orders": q_skew_join_orders,
         "q_drift_two_sample": q_drift_two_sample,
         "q_text_parity": q_text_parity,
-        "q_report_diff": q_report_diff,
         "q_bpe_pairs": q_bpe_pairs,
-        "q_suggest_shapes": q_suggest_shapes,
-        "q_metric_anomalies": q_metric_anomalies,
         "q_embed_near_dup": q_embed_near_dup,
         "q_ann_cosine_topk": q_ann_cosine_topk,
         "q_ann_lsh_buckets": q_ann_lsh_buckets,
@@ -1961,18 +1676,6 @@ _SPAN_CTES = (
     "CAST(max(pos)+7 AS INT) AS end_word, "
     "CAST(max(pos)+7-min(pos)+1 AS INT) AS len_words "
     "FROM isl GROUP BY doc_id, island)"
-)
-
-
-# manifest-metric history (per-(event_type, day) counts, 3x day-15
-# spike) shared by the three anomaly-strategy oracles
-_HIST_CTES = (
-    "daily AS (SELECT event_type AS metric, "
-    "CAST(ts AS DATE) AS day, count(*) AS n FROM events GROUP BY 1, 2), "
-    "hist AS (SELECT metric, "
-    "CAST(date_diff('day', DATE '1970-01-01', day) AS DOUBLE) AS run_order, "
-    "CAST(n * (CASE WHEN date_part('day', day) = 15 THEN 3 ELSE 1 END) "
-    "AS DOUBLE) AS value FROM daily)"
 )
 
 
@@ -2146,52 +1849,6 @@ def _drift_sql() -> str:
         f"SELECT 'psi' AS stat, '{expr}' AS property_path, "
         f"round({psi}, 6) AS stat_value FROM c "
         f"UNION ALL SELECT 'ks', '{expr}', round({ks}, 6) FROM c"
-    )
-
-
-def _suggest_sql() -> str:
-    """DuckDB mirror of q_suggest_shapes: one stats CTE (the same fused
-    multi-distinct aggregate), then one conditionally-gated UNION ALL
-    branch per suggestion rule per column — a branch contributes a row
-    iff its rule's evidence gate holds, exactly suggest_constraints'
-    logic. Min/max are CAST to DOUBLE like SUGGESTION_SCHEMA."""
-    aggs, branches = ["count(*) AS n"], []
-    for i, (c, kind) in enumerate(_SUGGEST_COLS):
-        v = c if kind == "num" else f"length({c})"
-        aggs += [
-            f"count({c}) AS nn{i}",
-            f"count(DISTINCT {c}) AS d{i}",
-            f"CAST(min({v}) AS DOUBLE) AS mn{i}",
-            f"CAST(max({v}) AS DOUBLE) AS mx{i}",
-        ]
-        nul = "CAST(NULL AS DOUBLE) AS param_num, CAST(NULL AS VARCHAR) AS param_str"
-        mincomp, maxcomp = (
-            ("MinInclusiveConstraintComponent", "MaxInclusiveConstraintComponent")
-            if kind == "num"
-            else ("MinLengthConstraintComponent", "MaxLengthConstraintComponent")
-        )
-        branches += [
-            f"SELECT '{c}' AS col_name, 'MinCountConstraintComponent' AS "
-            f"constraint_component, {nul} FROM s WHERE n > 0 AND nn{i} = n",
-            f"SELECT '{c}', 'UniquenessConstraintComponent', NULL, NULL "
-            f"FROM s WHERE nn{i} > 0 AND d{i} = nn{i}",
-            f"SELECT '{c}', '{mincomp}', mn{i}, NULL FROM s "
-            f"WHERE mn{i} IS NOT NULL",
-            f"SELECT '{c}', '{maxcomp}', mx{i}, NULL FROM s "
-            f"WHERE mx{i} IS NOT NULL",
-        ]
-        if kind == "str":
-            branches.append(
-                # JSON array (python json.dumps with ","/":" separators
-                # == DuckDB to_json on a list), not a comma join
-                f"SELECT '{c}', 'InConstraintComponent', NULL, "
-                f"(SELECT CAST(to_json(list(v ORDER BY v)) AS VARCHAR) FROM "
-                f"(SELECT DISTINCT {c} AS v FROM orders WHERE {c} IS NOT NULL)) "
-                f"FROM s WHERE d{i} BETWEEN 1 AND 10"
-            )
-    return (
-        f"WITH s AS (SELECT {', '.join(aggs)} FROM orders) "
-        + " UNION ALL ".join(branches)
     )
 
 
@@ -2453,34 +2110,6 @@ def _signature_sql() -> str:
             f"WHERE EXISTS (SELECT 1 FROM lineitem WHERE {pred})"
         )
     return " UNION ALL ".join(branches)
-
-
-def _drift_oracle_sql() -> str:
-    """SQL mirror of q_stream_drift: baseline proportions, per-window
-    bins, and the PSI term sum use the exact double arithmetic of
-    streaming.windowed_drift (left-to-right term order, eps floor),
-    with the append-mode watermark cut `window_end <= max(ts) - 1h`."""
-    nb, lo, width = DRIFT_BINS, DRIFT_LO, DRIFT_WIDTH
-    bi = f"least(greatest(CAST(floor((value - {lo!r}) / {width!r}) AS INT), 0), {nb - 1})"
-    bins = ", ".join(
-        f"sum(CASE WHEN bi = {i} THEN 1 ELSE 0 END) AS c{i}" for i in range(nb)
-    )
-    terms = []
-    for i in range(nb):
-        p = f"greatest(CAST(c.c{i} AS DOUBLE) / CAST(c.n AS DOUBLE), 1e-06)"
-        q = f"greatest(CAST(b.c{i} AS DOUBLE) / CAST(b.bt AS DOUBLE), 1e-06)"
-        terms.append(f"(({p}) - ({q})) * ln(({p}) / ({q}))")
-    return (
-        "WITH mx AS (SELECT epoch(max(ts)) AS m FROM events), "
-        "ev AS (SELECT CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS wsu, "
-        f"epoch(ts) AS es, {bi} AS bi FROM events WHERE value IS NOT NULL), "
-        f"b AS (SELECT {bins}, count(*) AS bt FROM ev "
-        f"WHERE es < {DRIFT_BASELINE_CUT}), "
-        f"c AS (SELECT wsu, {bins}, count(*) AS n FROM ev GROUP BY wsu) "
-        "SELECT c.wsu AS window_start_unix, CAST(c.n AS INT) AS n_rows, "
-        f"round({' + '.join(terms)}, 6) AS psi "
-        "FROM c, b, mx WHERE c.wsu + 86400 <= m - 3600"
-    )
 
 
 def oracle_sql() -> dict[str, str]:
@@ -2751,29 +2380,6 @@ def oracle_sql() -> dict[str, str]:
             "round(CASE WHEN n_words = 0 THEN 0.0 "
             "ELSE wn / CAST(n_words AS DOUBLE) END, 6) AS top_word_frac "
             "FROM s LEFT JOIN top ON s.doc_id = top.doc_id"
-        ),
-        "q_stream_drift": _drift_oracle_sql(),
-        "q_stream_window_events": (
-            "WITH mx AS (SELECT epoch(max(ts)) AS m FROM events), "
-            "w AS (SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS wsu, "
-            "event_type, count(*) AS n FROM events GROUP BY 1, 2) "
-            "SELECT event_type, wsu AS window_start_unix, CAST(n AS INT) AS n_events "
-            "FROM w, mx WHERE n > 2 AND wsu + 3600 <= m - 3600"
-        ),
-        "q_stream_sessions": (
-            "WITH mx AS (SELECT epoch(max(ts)) AS m FROM events), "
-            "s AS (SELECT user_id, ts, CASE WHEN lag(ts) OVER w IS NULL OR "
-            "epoch(ts) - epoch(lag(ts) OVER w) >= 1800 THEN 1 ELSE 0 END AS nb "
-            "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)), "
-            "x AS (SELECT user_id, ts, sum(nb) OVER (PARTITION BY user_id "
-            "ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
-            "AS sidx FROM s), "
-            "g AS (SELECT user_id, sidx, count(*) AS n_events, "
-            "CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start_unix, "
-            "CAST(floor(epoch(max(ts))) AS BIGINT) + 1800 AS session_end_unix, "
-            "epoch(max(ts)) + 1800 AS en FROM x GROUP BY 1, 2) "
-            "SELECT user_id, session_start_unix, session_end_unix, n_events "
-            "FROM g, mx WHERE en <= m - 3600"
         ),
         "q_decontaminate": (
             f"WITH nw AS (SELECT doc_id, {_NWORDS} AS ws FROM documents), "
@@ -3115,18 +2721,6 @@ def oracle_sql() -> dict[str, str]:
         "q_ann_ivf_multiprobe": _ivf_multiprobe_sql(),
         "q_ann_lsh_topk": _lsh_topk_sql(),
         "q_quantiles_lineitem": _quantiles_sql(),
-        "q_stream_monotonic_events": (
-            "WITH pe AS (SELECT user_id, event_id, CASE WHEN "
-            "event_id % 97 = 0 THEN ts - INTERVAL 2 HOUR ELSE ts END AS ts "
-            "FROM events), lagged AS (SELECT user_id, event_id, ts, "
-            "lag(ts) OVER (PARTITION BY user_id ORDER BY event_id) AS "
-            "prev_ts FROM pe) "
-            # floor, not CAST-rounding: Spark's timestamp->long truncates
-            "SELECT user_id, event_id, "
-            "CAST(floor(epoch(ts)) AS BIGINT) AS ts_unix, "
-            "CAST(floor(epoch(prev_ts)) AS BIGINT) AS prev_ts_unix "
-            "FROM lagged WHERE ts < prev_ts"
-        ),
         "q_stream_dedup_docs": (
             f"SELECT doc_id, CAST(rn - 1 AS BIGINT) AS n_prior FROM "
             f"(SELECT doc_id, row_number() OVER (PARTITION BY md5({_NORM}) "
@@ -3191,43 +2785,6 @@ def oracle_sql() -> dict[str, str]:
             "WHERE pa IS NULL OR pb IS NULL "
             "OR a.text IS DISTINCT FROM b.text"
         ),
-        "q_report_diff": (
-            # both violation sets from the same range predicates the
-            # engine compiles (nulls pass, q_range_* convention), then
-            # the identical one-sided FULL OUTER JOIN on the identity.
-            # DISTINCT per branch: the diff is over the violation SET
-            # (the generated lineitem has duplicate focus keys)
-            "WITH prev AS ("
-            "SELECT DISTINCT 'li_qty' AS shape_id, "
-            "'MaxInclusiveConstraintComponent' AS constraint_component, "
-            "l_orderkey, l_linenumber, TRUE AS pp "
-            "FROM lineitem WHERE l_quantity > 30 "
-            "UNION ALL "
-            "SELECT DISTINCT 'li_disc', 'MaxInclusiveConstraintComponent', "
-            "l_orderkey, l_linenumber, TRUE FROM lineitem "
-            "WHERE l_discount > 0.08), "
-            "cur AS ("
-            "SELECT DISTINCT 'li_qty' AS shape_id, "
-            "'MaxInclusiveConstraintComponent' AS constraint_component, "
-            "l_orderkey, l_linenumber, TRUE AS pc "
-            "FROM lineitem WHERE l_quantity > 28 "
-            "UNION ALL "
-            "SELECT DISTINCT 'li_tax', 'MinInclusiveConstraintComponent', "
-            "l_orderkey, l_linenumber, TRUE FROM lineitem "
-            "WHERE l_tax < 0.02) "
-            "SELECT COALESCE(c.shape_id, p.shape_id) AS shape_id, "
-            "COALESCE(c.constraint_component, p.constraint_component) "
-            "AS constraint_component, "
-            "COALESCE(c.l_orderkey, p.l_orderkey) AS l_orderkey, "
-            "COALESCE(c.l_linenumber, p.l_linenumber) AS l_linenumber, "
-            "CASE WHEN pp IS NULL THEN 'new' ELSE 'resolved' END AS status "
-            "FROM cur c FULL OUTER JOIN prev p "
-            "ON c.shape_id = p.shape_id "
-            "AND c.constraint_component = p.constraint_component "
-            "AND c.l_orderkey = p.l_orderkey "
-            "AND c.l_linenumber = p.l_linenumber "
-            "WHERE pc IS NULL OR pp IS NULL"
-        ),
         "q_bpe_pairs": (
             f"WITH toks AS (SELECT unnest(string_split({_NORM}, ' ')) "
             "AS tok FROM documents), "
@@ -3236,59 +2793,5 @@ def oracle_sql() -> dict[str, str]:
             "FROM t2, unnest(range(1, length(tok))) AS r(i)) "
             "SELECT pair, count(*) AS n_pairs FROM pairs GROUP BY pair "
             "ORDER BY n_pairs DESC, pair ASC LIMIT 50"
-        ),
-        "q_suggest_shapes": _suggest_sql(),
-        "q_rate_anomalies": (
-            f"WITH {_HIST_CTES}, "
-            "scored AS (SELECT metric, run_order, value, "
-            "lag(value) OVER (PARTITION BY metric ORDER BY run_order) "
-            "AS prev_value FROM hist) "
-            "SELECT metric, run_order, value, prev_value, "
-            "value / prev_value AS rate FROM scored "
-            "WHERE prev_value IS NOT NULL AND prev_value > 0 "
-            "AND (value / prev_value > 2.0 OR value / prev_value < 0.5)"
-        ),
-        "q_zscore_anomalies": (
-            # explicit textbook variance, same op order as
-            # anomaly.zscore_anomalies -> bit-identical doubles
-            f"WITH {_HIST_CTES}, "
-            "scored AS (SELECT metric, run_order, value, "
-            "sum(value) OVER w AS s1, sum(value * value) OVER w AS s2, "
-            "count(value) OVER w AS n FROM hist "
-            "WINDOW w AS (PARTITION BY metric ORDER BY run_order "
-            "ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)), "
-            "derived AS (SELECT metric, run_order, value, n, "
-            "s1 / CAST(n AS DOUBLE) AS baseline_mean, "
-            "sqrt(greatest((s2 - s1 * s1 / CAST(n AS DOUBLE)) / "
-            "(CAST(n AS DOUBLE) - 1), 0.0)) AS baseline_std FROM scored) "
-            "SELECT metric, run_order, value, "
-            "round(baseline_mean, 6) AS baseline_mean, "
-            "round(baseline_std, 6) AS baseline_std, n AS n_history "
-            "FROM derived WHERE n >= 3 AND baseline_std > 0 "
-            "AND abs(value - baseline_mean) > 3.0 * baseline_std"
-        ),
-        "q_metric_anomalies": (
-            # identical expression sequence -> bit-identical doubles
-            # (integer-valued counts; exact sums; one division each)
-            "WITH daily AS (SELECT event_type AS metric, "
-            "CAST(ts AS DATE) AS day, count(*) AS n "
-            "FROM events GROUP BY 1, 2), "
-            "hist AS (SELECT metric, "
-            "CAST(date_diff('day', DATE '1970-01-01', day) AS DOUBLE) "
-            "AS run_order, "
-            "CAST(n * (CASE WHEN date_part('day', day) = 15 THEN 3 ELSE 1 "
-            "END) AS DOUBLE) AS value FROM daily), "
-            "scored AS (SELECT metric, run_order, value, "
-            "avg(value) OVER w AS baseline_mean, "
-            "count(value) OVER w AS n_history FROM hist "
-            "WINDOW w AS (PARTITION BY metric ORDER BY run_order "
-            "ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)) "
-            "SELECT metric, run_order, value, baseline_mean, "
-            "CASE WHEN baseline_mean > 0 THEN "
-            "(value - baseline_mean) / baseline_mean END AS deviation_ratio, "
-            "n_history FROM scored "
-            "WHERE n_history >= 3 AND ((baseline_mean > 0 "
-            "AND abs(value - baseline_mean) > 0.5 * baseline_mean) "
-            "OR (baseline_mean = 0 AND value > 0))"
         ),
     }

@@ -1,4 +1,5 @@
-"""BPE tokenizer training (Sennrich et al. 2016) + application.
+"""BPE tokenizer training (Sennrich et al. 2016), application and
+merge-candidate counting.
 
 Oracle: a row-at-a-time pure-Python trainer over explicit word counts
 (no Spark), plus the paper's worked corpus; apply_bpe is pinned by the
@@ -6,8 +7,11 @@ reconstruction property and the trained-word-collapses-to-one-token
 property.
 """
 
+from pyspark.sql import functions as F
+
 from xpshacl_spark.operators.text import (
     apply_bpe,
+    bpe_merge_candidates,
     bpe_word_counts,
     train_bpe,
 )
@@ -127,3 +131,25 @@ def test_apply_bpe_null_and_empty(spark):
     rows = {r["i"]: r["bpe_tokens"] for r in apply_bpe(df, [("a", "b")]).collect()}
     assert rows[0] is None
     assert rows[1] == [] and rows[2] == []
+
+
+def test_bpe_merge_candidates_exact(spark):
+    df = spark.createDataFrame(
+        [("abab ab",), ("Ab! cd",), ("x",)], "text string"
+    )
+    # normalized tokens: [abab, ab], [ab, cd], [x -> dropped (len 1)]
+    # pairs: abab -> ab, ba, ab; ab -> ab; ab -> ab; cd -> cd
+    out = [(r.pair, r.n_pairs) for r in bpe_merge_candidates(df).collect()]
+    assert out == [("ab", 4), ("ba", 1), ("cd", 1)]  # ties: pair asc
+
+
+def test_bpe_merge_candidates_topk_is_distributed(spark):
+    df = spark.range(200).select(
+        F.concat(F.lit("word"), F.col("id")).alias("text")
+    )
+    plan = (
+        bpe_merge_candidates(df, k=5)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "TakeOrderedAndProject" in plan
+    assert "Window" not in plan  # no global rank window

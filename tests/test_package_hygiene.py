@@ -1,8 +1,8 @@
 """Source hygiene of the package, read from the AST alone (no Spark).
 
-A module-level private helper (`_name`) under xpshacl_spark/ that no
-.py file in the repository references is dead code: this test names it
-so it is deleted instead of accumulating."""
+A module-level `def` or `class` under xpshacl_spark/, private (`_name`)
+or public, that no .py file in the repository references is dead code:
+these tests name it so it is deleted instead of accumulating."""
 
 import ast
 import os
@@ -34,17 +34,17 @@ def _references(tree):
             yield node.value
 
 
-def _private_defs(tree):
+def _module_defs(tree):
     for node in tree.body:
-        if (
-            isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-            and node.name.startswith("_")
-            and not node.name.startswith("__")
-        ):
+        if isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ) and not node.name.startswith("__"):
             yield node
 
 
-def test_every_private_module_helper_is_referenced():
+def _unreferenced_module_defs(private):
+    """`path:line name` of every module-level private (or public) def
+    under xpshacl_spark/ that no .py file in the repository reads."""
     trees = {}
     for path in _py_files(ROOT):
         with open(path, encoding="utf-8") as f:
@@ -52,14 +52,25 @@ def test_every_private_module_helper_is_referenced():
     referenced = set()
     for tree in trees.values():
         referenced.update(_references(tree))
-    unreferenced = [
+    return [
         f"{os.path.relpath(path, ROOT)}:{node.lineno} {node.name}"
         for path, tree in sorted(trees.items())
         if path.startswith(PKG + os.sep)
-        for node in _private_defs(tree)
-        if node.name not in referenced
+        for node in _module_defs(tree)
+        if node.name.startswith("_") == private and node.name not in referenced
     ]
+
+
+def test_every_private_module_helper_is_referenced():
+    unreferenced = _unreferenced_module_defs(private=True)
     assert not unreferenced, "private helpers with no reference: " + ", ".join(
+        unreferenced
+    )
+
+
+def test_every_public_module_def_is_referenced():
+    unreferenced = _unreferenced_module_defs(private=False)
+    assert not unreferenced, "public defs with no reference: " + ", ".join(
         unreferenced
     )
 

@@ -25,11 +25,14 @@ def test_zip_contents_and_determinism(tmp_path):
     ):
         assert required in names, required
     assert not any(n.endswith((".pyc", ".pyo")) or "__pycache__" in n for n in names)
-    # no stale copy of a removed operator module is packaged
+    # no stale copy of a removed module is packaged
     for gone in (
         "sample", "sessions", "packing", "ranges", "bucketing", "multimodal",
+        "anomaly",
     ):
         assert f"xpshacl_spark/operators/{gone}.py" not in names, gone
+    for gone in ("suggest", "report_diff"):
+        assert f"xpshacl_spark/{gone}.py" not in names, gone
 
 
 def test_zip_is_importable_via_zipimport(tmp_path):

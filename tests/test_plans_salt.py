@@ -679,10 +679,10 @@ def test_unique_rides_window_exchange(spark):
 def test_profile_relation_exact_distinct_no_expand(spark):
     """profile_relation's exact count_distincts must not fuse into one
     multi-distinct aggregate: that plans an Expand replicating every
-    input row (len(columns)+1)x before aggregating (the same trap
-    suggest._column_stats hit, r6). Each distinct runs as its own
-    single-distinct agg attached by a 1-row cross-join, so the plan
-    must contain no Expand and the values must match the fused form."""
+    input row (len(columns)+1)x before aggregating. Each distinct runs
+    as its own single-distinct agg attached by a 1-row cross-join, so
+    the plan must contain no Expand and the values must match the fused
+    form."""
     from xpshacl_spark.operators.profile import profile_relation
 
     df = spark.createDataFrame(

@@ -8,16 +8,10 @@ import pytest
 
 sys.path.insert(0, os.path.abspath(os.path.join(os.path.dirname(__file__), "..")))
 
-from pyspark.sql import functions as F
-
 from xpshacl_spark.compiler import ValidationEngine
 from xpshacl_spark.datagen import roles_dim, tools_dim, transcripts
-from xpshacl_spark.shapes import GroupMaxCount, GroupMinCount, Shape, Unique
-from xpshacl_spark.streaming import (
-    validate_stream,
-    windowed_max_count,
-    windowed_min_count,
-)
+from xpshacl_spark.shapes import Shape, Unique
+from xpshacl_spark.streaming import validate_stream
 from xpshacl_spark.suites import transcript_shapes
 
 
@@ -72,52 +66,6 @@ def test_stream_rejects_non_streamable(spark, tmp_path):
             sdf, [Shape("u", (Unique(("conv_id", "turn_idx")),))],
             ["conv_id", "turn_idx"],
         )
-
-
-def test_windowed_counts(spark, tmp_path):
-    """Tumbling-window cardinality: user 1 sends 3 msgs in minute 0
-    (max 2 violated); window (user 2, minute 1) has rows but no
-    'assistant' row (min 1 violated)."""
-    rows = [
-        ("u1", 0, "user", "2025-01-01 00:00:01"),
-        ("u1", 1, "user", "2025-01-01 00:00:20"),
-        ("u1", 2, "user", "2025-01-01 00:00:40"),
-        ("u2", 0, "user", "2025-01-01 00:01:10"),
-        ("u2", 1, "assistant", "2025-01-01 00:00:30"),
-        # sentinel: pushes the watermark past 00:02:00 so append mode
-        # closes (and emits) both the minute-0 and minute-1 windows;
-        # its own minute-3 window stays open and is NOT emitted
-        ("u3", 0, "assistant", "2025-01-01 00:03:00"),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, ts_s string"
-    ).select("conv_id", "turn_idx", "role", F.col("ts_s").cast("timestamp").alias("ts"))
-    p = str(tmp_path / "w.parquet")
-    df.write.parquet(p)
-    sdf = _stream_from_parquet(spark, p)
-
-    mx = windowed_max_count(
-        sdf,
-        Shape("rate", (GroupMaxCount(("conv_id",), 2, column="role"),)),
-        window_duration="1 minute",
-    )
-    got = _run_to_memory(mx, "win_max").collect()
-    assert len(got) == 1
-    assert got[0].conv_id == "u1" and got[0].context["actualCount"] == "3"
-
-    mn = windowed_min_count(
-        _stream_from_parquet(spark, p),
-        Shape(
-            "asst",
-            (GroupMinCount(("conv_id",), 1, where="role = 'assistant'", column="role"),),
-        ),
-        window_duration="1 minute",
-    )
-    got = {(r.conv_id, str(r.window_start)) for r in _run_to_memory(mn, "win_min").collect()}
-    # u1's minute-0 window and u2's minute-1 window lack assistant turns
-    assert ("u1", "2025-01-01 00:00:00") in got
-    assert ("u2", "2025-01-01 00:01:00") in got
-    assert ("u2", "2025-01-01 00:00:00") not in got  # has the assistant row
 
 
 def test_runner_cli_end_to_end(spark, tmp_path):
@@ -268,41 +216,6 @@ def test_streaming_dedup_stateful_across_batches(spark, tmp_path):
     assert sorted((r.doc_id, r.n_prior) for r in dups) == [(2, 1), (4, 1)]
 
 
-def test_streaming_monotonic_stateful_across_batches(spark, tmp_path):
-    """applyInPandasWithState ordering check: a ts regression at a
-    micro-batch BOUNDARY is caught because the last (order, ts) pair per
-    key is state."""
-    from xpshacl_spark.streaming import streaming_monotonic
-
-    p = str(tmp_path / "sm")
-    schema = "conv_id string, turn_idx int, ts_s string"
-
-    def _write(rows):
-        spark.createDataFrame(rows, schema).select(
-            "conv_id", "turn_idx", F.col("ts_s").cast("timestamp").alias("ts")
-        ).coalesce(1).write.mode("append").parquet(p)
-
-    _write([
-        ("c1", 0, "2025-01-01 00:00:10"),
-        ("c1", 1, "2025-01-01 00:00:20"),
-        ("c2", 0, "2025-01-01 00:00:30"),
-    ])
-    _write([
-        ("c1", 2, "2025-01-01 00:00:05"),   # regression across the batch boundary
-        ("c1", 3, "2025-01-01 00:00:50"),
-        ("c2", 1, "2025-01-01 00:00:40"),   # fine
-    ])
-
-    got = _run_to_memory(
-        streaming_monotonic(
-            _stream_one_file_per_batch(spark, p), ["conv_id"], "turn_idx", "ts"
-        ),
-        "sm_viol",
-    ).collect()
-    assert [(r.conv_id, r.turn_idx) for r in got] == [("c1", 2)]
-    assert str(got[0].prev_ts) == "2025-01-01 00:00:20"
-
-
 def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     """North-rule launch mode: the package shipped as a zip via
     `spark-submit --py-files xpshacl_spark.zip runner.py ...` in a fresh
@@ -407,50 +320,6 @@ def test_runner_cli_csv_and_jsonl_inputs(spark, tmp_path):
     assert rc == 3
     v2 = spark.read.option("recursiveFileLookup", "true").parquet(f"{out2}/violations")
     assert [r.id for r in v2.collect()] == [2]
-
-
-def test_windowed_drift_matches_psi_statistic(spark):
-    """windowed_drift's in-plan PSI must agree with the driver-side
-    operators.drift.psi_statistic on the same bins — run in batch mode
-    (same plan, no trigger) with hand-placed values."""
-    import datetime as dt
-
-    from xpshacl_spark.operators.drift import psi_statistic
-    from xpshacl_spark.streaming import windowed_drift
-
-    day1 = dt.datetime(2024, 1, 1)
-    day2 = dt.datetime(2024, 1, 2)
-    rows = (
-        [(day1, float(v) if v is not None else None)
-         for v in (5, 15, 15, 25, None)]   # d1: bins 0,1,1,2
-        + [(day2, float(v) if v is not None else None) for v in (25, 25, 25, 5)]
-    )
-    df = spark.createDataFrame(
-        [(t, v) for t, v in rows], "ts timestamp, value double"
-    )
-    baseline = [2, 1, 1]
-    out = {
-        r.window_start: r
-        for r in windowed_drift(
-            df, "value", baseline, lo=0.0, width=10.0,
-            window_duration="1 day", watermark="0 seconds",
-        ).collect()
-    }
-    r1 = out[day1]
-    assert r1.n_rows == 4  # null excluded
-    assert r1.psi == round(psi_statistic(baseline, [1, 2, 1]), 6)
-    r2 = out[day2]
-    assert r2.n_rows == 4
-    assert r2.psi == round(psi_statistic(baseline, [1, 0, 3]), 6)
-    # identical distribution to baseline -> PSI ~ 0
-    same = windowed_drift(
-        spark.createDataFrame(
-            [(day1, 5.0), (day1, 5.0), (day1, 15.0), (day1, 25.0)],
-            "ts timestamp, value double",
-        ),
-        "value", [2, 1, 1], lo=0.0, width=10.0,
-    ).collect()
-    assert abs(same[0].psi) < 1e-9
 
 
 def test_runner_input_report_mode(spark, tmp_path, capsys):
@@ -579,51 +448,3 @@ def test_runner_expect_schema_gate(spark, tmp_path, capsys):
         capsys.readouterr()
         assert exc.value.code == 2
         assert not os.path.exists(out2)
-
-
-def test_windowed_drift_null_tail_advances_watermark(spark, tmp_path):
-    """A heartbeat tail of NULL-valued events must still advance the
-    watermark (closing earlier windows) WITHOUT contributing to any
-    bin, and an all-null window must not emit. A pre-agg .where() on
-    the value column cannot guarantee this — Catalyst pushes it below
-    EventTimeWatermark — so nulls are excluded inside the agg."""
-    import datetime as dt
-
-    from xpshacl_spark.streaming import windowed_drift
-
-    day1 = dt.datetime(2024, 1, 1)
-    day3 = dt.datetime(2024, 1, 3)
-    rows = [(day1, 5.0), (day1, 15.0)] + [
-        (day3 + dt.timedelta(hours=h), None) for h in range(26)
-    ]
-    p = str(tmp_path / "drift_null_tail")
-    spark.createDataFrame(rows, "ts timestamp, value double").write.parquet(p)
-    v = windowed_drift(
-        _stream_from_parquet(spark, p), "value", [1, 1, 1],
-        lo=0.0, width=10.0, window_duration="1 day", watermark="1 hour",
-    )
-    got = {r.window_start: r.n_rows for r in _run_to_memory(v, "dnt").collect()}
-    # day1's window closed (watermark advanced by the null tail) and
-    # emitted; the all-null day3 windows never emit
-    assert got == {day1: 2}
-
-
-def test_windowed_counts_respect_shape_target(spark):
-    """Batch/stream parity: windowed_min_count must count only rows
-    matching shape.target (the batch compiler gates with target AND
-    where) — a window full of out-of-target rows is a violation."""
-    import datetime as dt
-
-    from xpshacl_spark.shapes import GroupMinCount
-    from xpshacl_spark.streaming import _windowed_counts
-
-    day1 = dt.datetime(2024, 1, 1)
-    df = spark.createDataFrame(
-        [("c1", day1, "user"), ("c1", day1, "user")],
-        "conv_id string, ts timestamp, role string",
-    )
-    counts = _windowed_counts(
-        df, ["conv_id"], "ts", "1 day", "0 seconds", None,
-        target="role = 'assistant'",
-    ).collect()
-    assert counts[0]["_n"] == 0  # no assistant rows counted

@@ -62,14 +62,7 @@ from xpshacl_spark.shapes import (
 )
 from xpshacl_spark.compiler import ValidationEngine, ValidationReport
 from xpshacl_spark.session import get_spark
-from xpshacl_spark.streaming import (
-    streaming_dedup,
-    streaming_monotonic,
-    validate_stream,
-    windowed_max_count,
-    windowed_min_count,
-    windowed_session_counts,
-)
+from xpshacl_spark.streaming import streaming_dedup, validate_stream
 
 __all__ = [
     "ViolationType",
@@ -82,7 +75,6 @@ __all__ = [
     "ArrayMaxCount",
     "ArrayUnique",
     "ArrayAll",
-    "windowed_session_counts",
     "VIOLATION_COLUMNS",
     "violation_struct_fields",
     "Shape",
@@ -120,10 +112,7 @@ __all__ = [
     "ValidationReport",
     "get_spark",
     "validate_stream",
-    "windowed_min_count",
-    "windowed_max_count",
     "streaming_dedup",
-    "streaming_monotonic",
 ]
 
 __version__ = "0.1.0"

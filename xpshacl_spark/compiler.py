@@ -877,8 +877,9 @@ class ValidationEngine:
                 # when the determinant is not part of key_cols,
                 # _align_keys NULLs the keys and distinct violating
                 # groups would otherwise collapse into
-                # indistinguishable rows (untriageable, and
-                # report_diff would treat them as one violation)
+                # indistinguishable rows (untriageable, and any
+                # cross-run comparison keyed on the violation
+                # identity would treat them as one violation)
                 det_entries = []
                 for d in det:
                     det_entries.append(F.lit(f"det:{d}"))

@@ -1,12 +1,12 @@
 """Distribution-drift statistics over merged histogram bins.
 
 The per-bin counts come from one fused Spark aggregation (the
-compiler's whole-table aggregation, profile's, streaming.windowed_drift's
-and two_sample_drift's), each counted by count_array over a bucket
-column projected before the aggregation, so each row is bucketed once.
-histogram_bucket is the one bucketing of a profile histogram and a
-Drift check; two_sample_drift and windowed_drift (bin_index) clamp
-in-range values instead. PSI and KS over the counts are Column expressions
+compiler's whole-table aggregation, profile's and two_sample_drift's),
+each counted by count_array over a bucket column projected before the
+aggregation, so each row is bucketed once. histogram_bucket is the one
+bucketing of a profile histogram and a Drift check; two_sample_drift
+is the only bucketing that clamps in-range values into the last bin
+instead. PSI and KS over the counts are Column expressions
 (psi_column / ks_column) in the same plan: no collect, no driver-side
 arithmetic. psi_statistic / ks_statistic are the Python references.
 Deterministic given fixed bins (SURVEY.md §4 custom item 2). The
@@ -177,25 +177,6 @@ def histogram_counts(bucket: str, bins: int) -> Column:
     """The histogram of a projected histogram_bucket column `bucket` as
     one array<bigint> aggregate: [underflow, b0..b(bins-1), overflow]."""
     return count_array(bucket, range(-1, bins + 1))
-
-
-def bin_index(col, lo: float, width: float, nbins: int):
-    """Fixed-bin histogram index as a Spark Column:
-    clamp(floor((col - lo) / width), 0, nbins - 1). This is
-    streaming.windowed_drift's bucketing, a clamped contract unlike
-    histogram_counts': there is no underflow or overflow bucket, values
-    out of range fold into the end bins. The clamp runs on floor's
-    bigint before the cast to int, so a value whose bin lies beyond the
-    int range folds too instead of failing an ANSI cast. A NULL col
-    gets index 0 (greatest/least skip NULLs), so callers exclude NULLs
-    themselves."""
-    return F.least(
-        F.greatest(
-            F.floor((col - F.lit(float(lo))) / F.lit(float(width))),
-            F.lit(0),
-        ),
-        F.lit(nbins - 1),
-    ).cast("int")
 
 
 def two_sample_drift(

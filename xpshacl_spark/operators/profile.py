@@ -126,11 +126,10 @@ def profile_relation(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     count_distinct runs as its OWN single-distinct aggregation attached
     by a 1-row cross-join (the scalar-attach idiom): multiple distinct
     aggregates fused into one agg plan an Expand that replicates every
-    input row (len(columns)+1)x before aggregating (the guide §4.4-class
-    trap suggest._column_stats hit, r6), while a single-distinct agg
-    plans as a plain two-level aggregation with no row replication —
-    and the independent subtrees' stages run concurrently inside the
-    one action. Values are identical either way.
+    input row (len(columns)+1)x before aggregating, while a
+    single-distinct agg plans as a plain two-level aggregation with no
+    row replication — and the independent subtrees' stages run
+    concurrently inside the one action. Values are identical either way.
 
     Cost and caveats of that choice:
 

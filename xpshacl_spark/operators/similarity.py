@@ -206,12 +206,6 @@ def _with_cell(df: DataFrame, vec_col: str, cents: list[list[float]]) -> DataFra
     )
 
 
-def ivf_cell(vec: Column, cents: list[list[float]]) -> Column:
-    """1-based index of the max-cosine centroid (single-expression form;
-    prefer _with_cell in DataFrame plans — see its codegen note)."""
-    return _cell_from_scores(ivf_scores(vec, cents))
-
-
 def ivf_assign(
     emb: DataFrame,
     id_col: str,
