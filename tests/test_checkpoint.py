@@ -727,3 +727,164 @@ def test_incremental_groups_shapes_into_one_write(spark, tmp_path):
         map(repr, full.violations.collect())
     )
     assert n_jobs <= 3, n_jobs
+
+
+# -- the summary a checkpoint write records --------------------------------
+
+
+def _jobs(spark, group, action):
+    """Run `action` in its own job group; its result and the number of
+    jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _grouped_counts(report):
+    """counts() as the groupBy over the violations gives it."""
+    from pyspark.sql import functions as F
+
+    return sorted(
+        tuple(r)
+        for r in report.violations.groupBy(
+            "shape_id", "constraint_component", "violation_type"
+        )
+        .agg(F.count(F.lit(1)).alias("n_violations"))
+        .collect()
+    )
+
+
+def _assert_counts_from_summary(spark, report, group):
+    assert report.summary is not None
+    rows, n_jobs = _jobs(spark, group, report.counts().collect)
+    assert n_jobs == 0
+    assert [tuple(r) for r in rows] == _grouped_counts(report)
+    assert [(f.name, f.dataType) for f in report.counts().schema] == [
+        (f.name, f.dataType)
+        for f in report.violations.groupBy(
+            "shape_id", "constraint_component", "violation_type"
+        )
+        .count()
+        .withColumnRenamed("count", "n_violations")
+        .schema
+    ]
+
+
+def test_counts_from_summary_after_run_and_resume(spark, tdf, tmp_path):
+    """A checkpointed report's counts() is built from what the write
+    observed: no job, the same rows as the groupBy over the
+    violations, after a full run and after a resume that reads the
+    manifests of two runs."""
+    shapes = transcript_shapes()
+    keys = ["conv_id", "turn_idx"]
+    full = CheckpointedRunner(_engine(spark), str(tmp_path / "full")).run(
+        tdf, shapes, keys
+    )
+    _assert_counts_from_summary(spark, full, f"counts-full-{tmp_path.name}")
+
+    out = str(tmp_path / "partial")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        CheckpointedRunner(_engine(spark), out).run(tdf, shapes, keys, fail_after=2)
+    resumed = CheckpointedRunner(_engine(spark), out).run(tdf, shapes, keys)
+    _assert_counts_from_summary(spark, resumed, f"counts-resumed-{tmp_path.name}")
+    assert resumed.summary == full.summary
+
+
+def test_counts_from_summary_after_two_deltas(spark, tmp_path):
+    """run_incremental adds each delta's counts into the manifest's
+    summary and keeps the least representative."""
+    from xpshacl_spark.explain.pipeline import Explainer
+    from xpshacl_spark.shapes import MinInclusive, NotNull, Shape
+
+    inp = str(tmp_path / "in.parquet")
+    out = str(tmp_path / "out")
+    shapes = [Shape("inc_row", (MinInclusive("turn_idx", 0), NotNull("text")))]
+    keys = ["conv_id", "turn_idx"]
+    runner = CheckpointedRunner(ValidationEngine(spark), out)
+    for seed, n_convs in ((1, 30), (2, 20), (3, 10)):
+        transcripts(spark, n_convs=n_convs, seed=seed).coalesce(1).write.mode(
+            "append"
+        ).parquet(inp)
+        rep = (
+            runner.run(spark.read.parquet(inp), shapes, keys)
+            if seed == 1
+            else runner.run_incremental(inp, shapes, keys)
+        )
+    assert len(runner.completed()["inc_row"]["deltas"]) == 2
+    _assert_counts_from_summary(spark, rep, f"counts-deltas-{tmp_path.name}")
+    ex = Explainer(spark)
+    fallback = ValidationEngine(spark).validate(
+        spark.read.parquet(inp), shapes, key_cols=keys
+    )
+    assert sorted(ex.signature_rows(rep), key=lambda r: r["signature_id"]) == sorted(
+        ex.signature_rows(fallback), key=lambda r: r["signature_id"]
+    )
+
+
+def test_manifest_without_summary_reads_the_violations(spark, tdf, tmp_path):
+    """Manifests written before the summary existed still report and
+    explain: counts() and the signature rows fall back to reading the
+    violations, and give the same rows. A delta on such a manifest
+    records no summary, because the earlier counts are unknown."""
+    from xpshacl_spark.explain.pipeline import Explainer
+
+    shapes = transcript_shapes()
+    keys = ["conv_id", "turn_idx"]
+    runner = CheckpointedRunner(_engine(spark), str(tmp_path / "out"))
+    rep = runner.run(tdf, shapes, keys)
+    counts = [tuple(r) for r in rep.counts().collect()]
+    sigs = sorted(Explainer(spark).signature_rows(rep), key=lambda r: r["signature_id"])
+    for fn in os.listdir(runner.manifest_dir):
+        path = os.path.join(runner.manifest_dir, fn)
+        with open(path) as f:
+            rec = json.load(f)
+        del rec["summary"]
+        with open(path, "w") as f:
+            json.dump(rec, f)
+
+    legacy = runner.report(keys)
+    assert legacy.summary is None
+    assert sorted(tuple(r) for r in legacy.counts().collect()) == sorted(counts)
+    assert (
+        sorted(Explainer(spark).signature_rows(legacy), key=lambda r: r["signature_id"])
+        == sigs
+    )
+
+
+class _OffKeyEngine(ValidationEngine):
+    """Relabels one component's rows, as a part that emits a key no
+    constraint declares would."""
+
+    def validate(self, df, shapes, key_cols, **kw):
+        from pyspark.sql import functions as F
+
+        rep = super().validate(df, shapes, key_cols, **kw)
+        comp = F.col("constraint_component")
+        rep.violations = rep.violations.withColumn(
+            "constraint_component",
+            F.when(comp == "MaxLengthConstraintComponent", F.lit("Undeclared"))
+            .otherwise(comp),
+        )
+        return rep
+
+
+def test_summary_not_recorded_when_keys_miss_rows(spark, tdf, tmp_path):
+    """When the rows of the declared keys do not add up to all rows
+    written, no manifest records a summary, and counts() reads the
+    violations, so it still counts the undeclared key."""
+    shapes = transcript_shapes()
+    keys = ["conv_id", "turn_idx"]
+    runner = CheckpointedRunner(
+        _OffKeyEngine(spark, dims={"roles": roles_dim(spark), "tools": tools_dim(spark)}),
+        str(tmp_path / "out"),
+    )
+    rep = runner.run(tdf, shapes, keys)
+    assert all("summary" not in rec for rec in runner.completed().values())
+    assert rep.summary is None
+    counts = sorted(tuple(r) for r in rep.counts().collect())
+    assert counts == _grouped_counts(rep)
+    assert "Undeclared" in {r[1] for r in counts}

@@ -1027,3 +1027,137 @@ def test_llm_ollama_default_address_beats_model_route(mock_llm_server):
         assert calls[-1].endswith("/api/chat")
     finally:
         llm_clients._post_json = orig
+
+
+# ---------------------------------------------------------------------------
+# signature rows from a checkpoint summary, and the fan-out without a join
+# ---------------------------------------------------------------------------
+
+
+def _tied_report(spark, tmp_path):
+    """A checkpointed report where one signature spans two shapes and
+    rows that share a focus node: keyed by conv_id alone, both shapes
+    flag the same two turns of c1 and one of c2."""
+    from xpshacl_spark.checkpoint import CheckpointedRunner
+
+    df = spark.createDataFrame(
+        [("c1", 0, -5), ("c1", 1, -3), ("c2", 0, -2), ("c2", 1, 4)],
+        "conv_id string, turn_idx int, score int",
+    )
+    shapes = [
+        Shape("ex:B", (MinInclusive("score", 0),)),
+        Shape("ex:A", (MinInclusive("score", 0),)),
+    ]
+    rep = CheckpointedRunner(ValidationEngine(spark), str(tmp_path / "ckpt")).run(
+        df, shapes, ["conv_id"]
+    )
+    return df, shapes, rep
+
+
+def _by_sig(rows):
+    return sorted(rows, key=lambda r: r["signature_id"])
+
+
+def test_signature_rows_from_summary_equal_the_groupby(spark, tmp_path):
+    """The summary path merges the shapes' entries into the rows the
+    groupBy gives: counts added, and the representative is the least
+    (focus_node, shape_id, value, message) on both paths, so ties on
+    the focus node no longer depend on the run."""
+    from xpshacl_spark.compiler import ValidationReport
+
+    _, _, rep = _tied_report(spark, tmp_path)
+    assert rep.summary is not None
+    ex = Explainer(spark)
+    from_summary = ex.signature_rows(rep)
+    fallback = ex.signature_rows(ValidationReport(rep.violations, rep.key_cols))
+    assert _by_sig(from_summary) == _by_sig(fallback)
+    (row,) = from_summary
+    assert row["n_instances"] == 6
+    assert (row["shape_id"], row["focus_node"], row["value"]) == ("ex:A", "conv_id=c1", "-3")
+
+
+def _broadcast_fanout(report, expl):
+    """The fan-out as a broadcast left join of the explanations."""
+    from pyspark.sql import functions as F
+
+    v = report.violations.withColumn(
+        "signature_id", F.concat(F.lit(f"{XSH}sig_"), signature_id_col())
+    )
+    cols = [
+        "signature_id",
+        "language",
+        "justification_tree",
+        "retrieved_context",
+        "natural_language_explanation",
+        "correction_suggestions",
+        "provided_by_model",
+    ]
+    return v.join(F.broadcast(expl.select(*cols)), on="signature_id", how="left")
+
+
+def _sorted_rows(df):
+    return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+
+
+class _SkipComponent(Explainer):
+    """Leaves one component's signature without explanation rows."""
+
+    skip = "MinCountConstraintComponent"
+
+    def _explanation_rows(self, *a, **kw):
+        return [r for r in super()._explanation_rows(*a, **kw) if r[2] != self.skip]
+
+
+def test_explain_full_equals_the_broadcast_join(spark, tmp_path):
+    """explain_full's columns, types and rows are those of the broadcast
+    left join it replaces: for a checkpointed report, for a violation
+    whose signature has no explanation row (kept, with NULLs), and for
+    an all-conforming report (no rows, same schema)."""
+    from xpshacl_spark.session import local_relation
+    from xpshacl_spark.explain.pipeline import _EXPL_SCHEMA
+    from xpshacl_spark.shapes import NotNull
+
+    df, shapes, rep = _tied_report(spark, tmp_path)
+    langs = ["en", "de"]
+    ex = Explainer(spark)
+    full = ex.explain_full(rep, shapes, df=df, languages=langs)
+    want = _broadcast_fanout(rep, ex.explain(rep, shapes, df=df, languages=langs))
+    assert full.schema == want.schema
+    assert _sorted_rows(full) == _sorted_rows(want)
+    assert full.count() == 6 * len(langs)
+
+    shapes = [Shape("ex:S", (MinInclusive("score", 0), NotNull("turn_idx")))]
+    missing = spark.createDataFrame(
+        [("c1", None, -5), ("c2", 0, 1)], "conv_id string, turn_idx int, score int"
+    )
+    rep = ValidationEngine(spark).validate(missing, shapes, ["conv_id"])
+    skip = _SkipComponent(spark)
+    full = skip.explain_full(rep, shapes, df=missing, languages=["en"])
+    rows = skip._explanation_rows(rep, shapes, missing, ["en"], True)
+    want = _broadcast_fanout(rep, local_relation(spark, rows, _EXPL_SCHEMA))
+    assert full.schema == want.schema
+    assert _sorted_rows(full) == _sorted_rows(want)
+    unexplained = full.where("language IS NULL").collect()
+    assert [r["constraint_component"] for r in unexplained] == [skip.skip]
+
+    clean = spark.createDataFrame([("c1", 0, 1)], "conv_id string, turn_idx int, score int")
+    rep = ValidationEngine(spark).validate(clean, shapes, ["conv_id"])
+    full = ex.explain_full(rep, shapes, df=clean, languages=langs)
+    want = _broadcast_fanout(rep, ex.explain(rep, shapes, df=clean, languages=langs))
+    assert full.schema == want.schema
+    assert full.collect() == []
+
+
+def test_fanout_write_runs_one_job(spark, tmp_path):
+    """The explanations ride in the plan, so writing the fan-out is the
+    write's one job: no broadcast collects them first."""
+    df, shapes, rep = _tied_report(spark, tmp_path)
+    full = Explainer(spark).explain_full(rep, shapes, df=df, languages=["en", "de"])
+    sc = spark.sparkContext
+    group = f"fanout-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        full.write.parquet(str(tmp_path / "explained"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

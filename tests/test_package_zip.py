@@ -28,7 +28,7 @@ def test_zip_contents_and_determinism(tmp_path):
     # no stale copy of a removed module is packaged
     for gone in (
         "sample", "sessions", "packing", "ranges", "bucketing", "multimodal",
-        "anomaly",
+        "anomaly", "jpeg",
     ):
         assert f"xpshacl_spark/operators/{gone}.py" not in names, gone
     for gone in ("suggest", "report_diff"):

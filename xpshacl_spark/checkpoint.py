@@ -18,6 +18,16 @@ again) or with a complete entry (it is skipped). Per-entry metrics
 record input lineage (source files), partition count, violation count,
 the violations schema and `wall_sec`, the wall time of the shared
 compile-and-write the shape rode in.
+
+The same Observation also gives each entry a `summary`: for every
+(shape_id, constraint_component, violation_type, property_path) of the
+shape with rows, their count and one representative violation (see
+model.REPRESENTATIVE_ORDER). `report()` hands the summaries to the
+report, so its `counts()` and the explainer's signatures need no job.
+The keys come from the constraints; when their rows do not add up to
+all rows written, no entry records a summary. Deltas add their counts
+into it. Entries without one (written before it existed, or after such
+a write) make `report()` read the violations instead.
 """
 
 from __future__ import annotations
@@ -37,7 +47,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xpshacl_spark.compiler import ValidationEngine, ValidationReport
+from xpshacl_spark.model import (
+    REPRESENTATIVE_FIELDS,
+    REPRESENTATIVE_ORDER,
+    SUMMARY_KEY,
+    merge_summary,
+)
 from xpshacl_spark.shapes import Shape
+from xpshacl_spark.sqltext import quote_ident, string_literal
 
 
 def _sanitize(shape_id: str) -> str:
@@ -60,6 +77,41 @@ def _token(shape_id: str) -> str:
     if safe != shape_id:
         safe = f"{safe}_{hashlib.md5(shape_id.encode()).hexdigest()[:8]}"
     return safe
+
+
+# the columns _write_buckets projects once per row for the summary
+# aggregates, and drops again before the write
+_KEY, _REP, _ORD = "__summary_key", "__summary_rep", "__summary_order"
+
+
+def _summary_terms(keys: Sequence[tuple]) -> tuple[list, list]:
+    """The columns and observed aggregates of a summary of `keys`
+    (values of model.SUMMARY_KEY). The columns give each row the index
+    of its key (NULL for none), its REPRESENTATIVE_FIELDS struct and its
+    REPRESENTATIVE_ORDER struct, so a row's key is matched once, not in
+    every aggregate. Per key j, `k<j>` counts its rows and `r<j>` is its
+    least representative. Built as SQL text, one parse each."""
+
+    def struct(fields):
+        return "named_struct(" + ", ".join(f"'{f}', {quote_ident(f)}" for f in fields) + ")"
+
+    hits = (
+        " AND ".join(f"{quote_ident(f)} <=> {string_literal(v)}" for f, v in zip(SUMMARY_KEY, key))
+        for key in keys
+    )
+    index = " ".join(f"WHEN {hit} THEN {j}" for j, hit in enumerate(hits))
+    columns = [
+        F.expr(f"CASE {index} END" if keys else "CAST(NULL AS INT)").alias(_KEY),
+        F.expr(struct(REPRESENTATIVE_FIELDS)).alias(_REP),
+        F.expr(struct(REPRESENTATIVE_ORDER)).alias(_ORD),
+    ]
+    terms = []
+    for j in range(len(keys)):
+        terms.append(F.expr(f"count_if({_KEY} = {j})").alias(f"k{j}"))
+        terms.append(
+            F.expr(f"min_by({_REP}, CASE WHEN {_KEY} = {j} THEN {_ORD} END)").alias(f"r{j}")
+        )
+    return columns, terms
 
 
 class CheckpointedRunner:
@@ -153,11 +205,21 @@ class CheckpointedRunner:
     # -- the one write path ----------------------------------------------
 
     def _write_buckets(
-        self, violations: DataFrame, tokens: dict[str, str], dest: str
-    ) -> dict[str, int]:
+        self,
+        violations: DataFrame,
+        shapes: Sequence[Shape],
+        tokens: dict[str, str],
+        dest: str,
+        cluster: bool,
+    ) -> tuple[dict[str, int], Optional[dict[str, list[dict]]]]:
         """Write `violations` once, partitioned as
-        `<dest>/shape_bucket=<tokens[shape_id]>/`, and return the
-        per-shape row counts observed on that write (no read-back job).
+        `<dest>/shape_bucket=<tokens[shape_id]>/`, and return what an
+        Observation on that write saw (no read-back job): the row count
+        of each shape, and each shape's summary entries (see
+        `_summary_terms`), or None for the summaries when the rows of the
+        shapes' keys do not add up to all rows written. `cluster` gathers
+        each bucket's rows into as few files as their size allows, at
+        the cost of one more job.
 
         Dynamic partition overwrite replaces only the buckets this write
         produces and stages its files under a per-job `.spark-staging-*`
@@ -166,19 +228,37 @@ class CheckpointedRunner:
         partition from the writer; its bucket is created empty here so
         every shape has one."""
         sids = list(tokens)
+        keys = list(
+            dict.fromkeys(
+                (s.shape_id, c.component(), c.violation_type(), c.property_path())
+                for s in shapes
+                for c in s.constraints
+            )
+        )
         obs = Observation(f"checkpoint_{uuid.uuid4().hex}")
         bucket = F.create_map(*(F.lit(x) for x in chain(*tokens.items())))[
             F.col("shape_id")
         ]
+        out = violations.withColumn("shape_bucket", bucket)
+        if cluster:
+            # one shuffle, split and coalesced by AQE, instead of one
+            # file per (scan task, bucket); repartition would put a huge
+            # shape's rows in one task. The observation sits above it:
+            # below, AQE drops an empty shuffle's metrics with the stage
+            out = out.hint("rebalance", "shape_bucket")
+        columns, terms = _summary_terms(keys)
         (
-            violations.observe(
+            out.select("*", *columns)
+            .observe(
                 obs,
                 *(
                     F.count_if(F.col("shape_id") == sid).alias(f"n{i}")
                     for i, sid in enumerate(sids)
                 ),
+                *terms,
+                F.count(F.lit(1)).alias("n"),
             )
-            .withColumn("shape_bucket", bucket)
+            .drop(_KEY, _REP, _ORD)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("shape_bucket")
@@ -187,7 +267,23 @@ class CheckpointedRunner:
         observed = obs.get
         for token in tokens.values():
             os.makedirs(os.path.join(dest, f"shape_bucket={token}"), exist_ok=True)
-        return {sid: int(observed[f"n{i}"]) for i, sid in enumerate(sids)}
+        counts = {sid: int(observed[f"n{i}"]) for i, sid in enumerate(sids)}
+        n_keyed = [int(observed[f"k{j}"]) for j in range(len(keys))]
+        if sum(n_keyed) != observed["n"]:
+            # a part emitted a key no constraint declares: counts from
+            # the declared keys would be short, so record none
+            return counts, None
+        summaries: dict[str, list[dict]] = {sid: [] for sid in sids}
+        for j, (key, n) in enumerate(zip(keys, n_keyed)):
+            if n:
+                summaries[key[0]].append(
+                    {
+                        **dict(zip(SUMMARY_KEY, key)),
+                        "n_violations": n,
+                        "representative": observed[f"r{j}"].asDict(),
+                    }
+                )
+        return counts, summaries
 
     # -- run/resume --------------------------------------------------------
 
@@ -251,7 +347,9 @@ class CheckpointedRunner:
         # the write is the checkpoint: resume-level determinism is at
         # the RELATION level (same rows), not file bytes — asserted by
         # the kill/resume pytest invariant
-        counts = self._write_buckets(rep.violations, tokens, self.violations_dir)
+        counts, summaries = self._write_buckets(
+            rep.violations, pending, tokens, self.violations_dir, cluster=True
+        )
         wall = round(time.monotonic() - t0, 3)
         n_input_parts = df.rdd.getNumPartitions()
         schema = rep.violations.schema.json()
@@ -262,21 +360,21 @@ class CheckpointedRunner:
 
         _maybe_fail(0)
         for published, (sid, token) in enumerate(tokens.items(), 1):
-            self._write_manifest(
-                {
-                    "run_id": self.run_id,
-                    "shape_id": sid,
-                    "status": "completed",
-                    "n_violations": counts[sid],
-                    "n_input_partitions": n_input_parts,
-                    "input_files": lineage,
-                    "schema": schema,
-                    "wall_sec": wall,
-                    "output_path": self._bucket(token),
-                    "finished_unix": time.time(),
-                },
-                token=token,
-            )
+            entry = {
+                "run_id": self.run_id,
+                "shape_id": sid,
+                "status": "completed",
+                "n_violations": counts[sid],
+                "n_input_partitions": n_input_parts,
+                "input_files": lineage,
+                "schema": schema,
+                "wall_sec": wall,
+                "output_path": self._bucket(token),
+                "finished_unix": time.time(),
+            }
+            if summaries is not None:
+                entry["summary"] = summaries[sid]
+            self._write_manifest(entry, token=token)
             _maybe_fail(published)
 
         return self.report(key_cols)
@@ -364,7 +462,10 @@ class CheckpointedRunner:
             # a killed run may have left buckets here, and a shape with
             # no rows this time gets no partition that would replace its
             shutil.rmtree(staging, ignore_errors=True)
-            counts = self._write_buckets(rep.violations, tokens, staging)
+            # a delta is small, and its write stays one job
+            counts, summaries = self._write_buckets(
+                rep.violations, group, tokens, staging, cluster=False
+            )
             for token in tokens.values():
                 # plain subdir name (no '='): the shape bucket must not
                 # look like a partitioned layout — report() reads it with
@@ -388,28 +489,31 @@ class CheckpointedRunner:
                         "wall_sec": round(wall, 3),
                     }
                 ]
-                self._write_manifest(
-                    {
-                        "run_id": self.run_id,
-                        "shape_id": sid,
-                        "status": "completed",
-                        "n_violations": (rec["n_violations"] if rec else 0) + n,
-                        "n_input_partitions": n_input_parts,
-                        "input_files": sorted(
-                            set(rec["input_files"] if rec else ()) | set(new)
-                        ),
-                        "deltas": deltas,
-                        "schema": schema,
-                        # cumulative across deltas (per-delta time is in
-                        # the deltas list), plus the initial full run if any
-                        "wall_sec": round(
-                            (rec.get("wall_sec", 0.0) if rec else 0.0) + wall, 3
-                        ),
-                        "output_path": self._bucket(token),
-                        "finished_unix": time.time(),
-                    },
-                    token=token,
-                )
+                entry = {
+                    "run_id": self.run_id,
+                    "shape_id": sid,
+                    "status": "completed",
+                    "n_violations": (rec["n_violations"] if rec else 0) + n,
+                    "n_input_partitions": n_input_parts,
+                    "input_files": sorted(
+                        set(rec["input_files"] if rec else ()) | set(new)
+                    ),
+                    "deltas": deltas,
+                    "schema": schema,
+                    # cumulative across deltas (per-delta time is in
+                    # the deltas list), plus the initial full run if any
+                    "wall_sec": round(
+                        (rec.get("wall_sec", 0.0) if rec else 0.0) + wall, 3
+                    ),
+                    "output_path": self._bucket(token),
+                    "finished_unix": time.time(),
+                }
+                # an earlier part without a summary (a legacy manifest)
+                # leaves the sum unknown, so the entry records none
+                before = rec.get("summary") if rec else []
+                if summaries is not None and before is not None:
+                    entry["summary"] = merge_summary(before + summaries[sid])
+                self._write_manifest(entry, token=token)
         shutil.rmtree(staging, ignore_errors=True)
         return self.report(key_cols)
 
@@ -420,7 +524,8 @@ class CheckpointedRunner:
         read, so buckets of conforming shapes (empty directories) need no
         file to infer it from and the read runs no inference job.
         Manifests written before the schema was recorded fall back to
-        inference."""
+        inference. When every entry has a summary whose counts add up to
+        its n_violations, the report carries them all."""
         done = self.completed()
         if not done:
             raise RuntimeError("no completed shapes in checkpoint")
@@ -439,4 +544,11 @@ class CheckpointedRunner:
             "n_shapes_completed": len(done),
             "total_violations": sum(r["n_violations"] for r in done.values()),
         }
-        return ValidationReport(df, list(key_cols), metrics)
+        summary: Optional[list[dict]] = []
+        for rec in done.values():
+            part = rec.get("summary")
+            if part is None or sum(e["n_violations"] for e in part) != rec["n_violations"]:
+                summary = None
+                break
+            summary.extend(part)
+        return ValidationReport(df, list(key_cols), metrics, summary)

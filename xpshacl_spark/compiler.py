@@ -35,7 +35,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from xpshacl_spark.model import VIOLATION_COLUMNS, ViolationType
+from xpshacl_spark.model import VIOLATION_COLUMNS, ViolationType, merge_summary
 from xpshacl_spark.operators.drift import (
     check_bins,
     histogram_bucket,
@@ -62,7 +62,7 @@ from xpshacl_spark.shapes import (
     Transition,
     Unique,
 )
-from xpshacl_spark.sqltext import double_literal, quote_string
+from xpshacl_spark.sqltext import double_literal, quote_string, string_literal
 
 _CTX_TYPE = "map<string,string>"
 
@@ -86,10 +86,7 @@ def _violation_struct(
         "message": message or shape.default_message(constraint),
         "severity": shape.severity,
     }
-    sql = ", ".join(
-        f"'{k}', " + ("CAST(NULL AS STRING)" if v is None else quote_string(v))
-        for k, v in fields.items()
-    )
+    sql = ", ".join(f"'{k}', {string_literal(v)}" for k, v in fields.items())
     struct = F.expr(f"named_struct({sql}, 'context', CAST(NULL AS {_CTX_TYPE}))")
     struct = struct.withField("value", value.cast("string"))
     return struct if context is None else struct.withField("context", context)
@@ -121,10 +118,21 @@ class ValidationReport:
     explanation stages (main.py:128-136).
     """
 
-    def __init__(self, violations: DataFrame, key_cols: Sequence[str], metrics=None):
+    def __init__(
+        self,
+        violations: DataFrame,
+        key_cols: Sequence[str],
+        metrics=None,
+        summary: Optional[list[dict]] = None,
+    ):
         self.violations = violations
         self.key_cols = list(key_cols)
         self.metrics = metrics or {}
+        #: what a checkpoint's write observed of `violations`: one entry
+        #: per model.SUMMARY_KEY with its n_violations and representative
+        #: violation, keys without rows left out. None when nothing
+        #: recorded it; the methods below then read the violations.
+        self.summary = summary
 
     @property
     def conforms(self) -> bool:
@@ -137,6 +145,22 @@ class ValidationReport:
         )
 
     def counts(self) -> DataFrame:
+        """Violations per (shape_id, constraint_component,
+        violation_type), in (shape_id, constraint_component) order; no
+        row for a key without violations. From a summary it is a local
+        relation, and collecting it runs no job."""
+        if self.summary is not None:
+            key = ("shape_id", "constraint_component", "violation_type")
+            rows = sorted(
+                tuple(e[f] for f in (*key, "n_violations"))
+                for e in merge_summary(self.summary, key)
+            )
+            return local_relation(
+                self.violations.sparkSession,
+                rows,
+                "shape_id string, constraint_component string, "
+                "violation_type string, n_violations bigint not null",
+            )
         return (
             self.violations.groupBy(
                 "shape_id", "constraint_component", "violation_type"

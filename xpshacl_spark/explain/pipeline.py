@@ -3,15 +3,19 @@
 Reproduces the reference main-loop dataflow (/root/reference/src/main.py:139-248)
 Spark-first:
 
-1. signature dedup: dropDuplicates over (constraint_component,
-   property_path, violation_type) — "perform expensive operations ONCE
-   per signature" (main.py:159-172), the reference's single most
-   important dataflow idea (README.md:280-291 quantifies 65.8s -> 20.9s);
+1. signature dedup: one row per (constraint_component, property_path,
+   violation_type) with its count and a representative violation —
+   "perform expensive operations ONCE per signature" (main.py:159-172),
+   the reference's single most important dataflow idea
+   (README.md:280-291 quantifies 65.8s -> 20.9s). A checkpointed report
+   carries them from its write's summary; otherwise one groupBy job;
 2. per-signature justification tree + context + explanation text,
    rendered on the DRIVER (the signature set is tiny by construction)
    with cache probe/write (main.py:179-216);
-3. fan-out: broadcast join of explanations back onto every violation
-   instance (main.py:218-248) — the signature join.
+3. fan-out: the explanations go back onto every violation instance
+   (main.py:218-248) by a lookup in a literal map from signature id to
+   the per-language explanations, inside the violations plan, so the
+   fan-out adds no job and no join.
 """
 
 from __future__ import annotations
@@ -37,8 +41,14 @@ from xpshacl_spark.explain.signature import (
     signature_to_uri,
 )
 from xpshacl_spark.explain.tree import build_justification_tree
-from xpshacl_spark.model import ViolationType
+from xpshacl_spark.model import (
+    REPRESENTATIVE_FIELDS,
+    REPRESENTATIVE_ORDER,
+    ViolationType,
+    merge_summary,
+)
 from xpshacl_spark.session import local_relation
+from xpshacl_spark.sqltext import quote_string, string_literal
 
 _EXPL_SCHEMA = T.StructType(
     [
@@ -55,6 +65,29 @@ _EXPL_SCHEMA = T.StructType(
         T.StructField("provided_by_model", T.StringType()),
     ]
 )
+
+
+# the explanation columns explain_full appends to each violation: the
+# _EXPL_SCHEMA fields from `language` on
+_FANOUT_START = _EXPL_SCHEMA.fieldNames().index("language")
+_FANOUT_FIELDS = _EXPL_SCHEMA.fieldNames()[_FANOUT_START:]
+_FANOUT_TYPE = (
+    "map<string, array<struct<"
+    + ", ".join(f"{f}: string" for f in _FANOUT_FIELDS)
+    + ">>>"
+)
+
+
+def _signature(rec: dict) -> ViolationSignature:
+    return ViolationSignature(
+        constraint_id=rec["constraint_component"],
+        property_path=rec["property_path"],
+        # runtime parity: the reference hashes str(ViolationType.X)
+        violation_type=ViolationType.ENUM_REPR.get(
+            rec["violation_type"], rec["violation_type"]
+        ),
+        constraint_params={},
+    )
 
 
 def _shape_constraint_params(shapes, shape_id: str, component: str, path):
@@ -97,13 +130,12 @@ class Explainer:
     # ------------------------------------------------------------------
 
     def signatures(self, violations: DataFrame) -> DataFrame:
-        """Distinct violation signatures with one deterministic
-        representative violation each (min focus_node)."""
+        """Distinct violation signatures, each with its violation count
+        and one representative violation: the least under
+        model.REPRESENTATIVE_ORDER, so the choice is the same on every
+        run."""
         rep = F.min_by(
-            F.struct(
-                "shape_id", "focus_node", "value", "message", "severity", "context"
-            ),
-            F.col("focus_node"),
+            F.struct(*REPRESENTATIVE_FIELDS), F.struct(*REPRESENTATIVE_ORDER)
         ).alias("_rep")
         return (
             violations.groupBy(
@@ -117,15 +149,28 @@ class Explainer:
                 "constraint_component",
                 "property_path",
                 "violation_type",
-                F.col("_rep.shape_id").alias("shape_id"),
-                F.col("_rep.focus_node").alias("focus_node"),
-                F.col("_rep.value").alias("value"),
-                F.col("_rep.message").alias("message"),
-                F.col("_rep.severity").alias("severity"),
-                F.col("_rep.context").alias("context"),
+                *(F.col(f"_rep.{f}").alias(f) for f in REPRESENTATIVE_FIELDS),
                 "n_instances",
             )
         )
+
+    def signature_rows(self, report: ValidationReport) -> list[dict]:
+        """The rows of `signatures(report.violations)` as dicts. A report
+        that carries a checkpoint summary gives them without a job: its
+        entries are merged by signature, adding the counts and keeping
+        the least representative."""
+        if report.summary is None:
+            return [r.asDict() for r in self.signatures(report.violations).collect()]
+        sig_key = ("constraint_component", "property_path", "violation_type")
+        return [
+            {
+                "signature_id": signature_to_uri(_signature(e)),
+                **{f: e[f] for f in sig_key},
+                **e["representative"],
+                "n_instances": e["n_violations"],
+            }
+            for e in merge_summary(report.summary, sig_key)
+        ]
 
     def explain(
         self,
@@ -137,20 +182,21 @@ class Explainer:
     ) -> DataFrame:
         """Produce the explanations relation (§1.3 schema): one row per
         distinct signature x language."""
-        # early exit when no violations (main.py:128-136)
-        sig_rows = self.signatures(report.violations).collect()
+        rows = self._explanation_rows(report, shapes, df, languages, with_context)
+        return local_relation(self.spark, rows, _EXPL_SCHEMA)
+
+    def _explanation_rows(
+        self,
+        report: ValidationReport,
+        shapes: Sequence,
+        df: Optional[DataFrame],
+        languages: Sequence[str],
+        with_context: bool,
+    ) -> list[tuple]:
+        """`explain`'s rows as tuples in _EXPL_SCHEMA's field order."""
         prepared = []
-        for r in sig_rows:
-            rec = r.asDict()
-            sig = ViolationSignature(
-                constraint_id=rec["constraint_component"],
-                property_path=rec["property_path"],
-                # runtime parity: the reference hashes str(ViolationType.X)
-                violation_type=ViolationType.ENUM_REPR.get(
-                    rec["violation_type"], rec["violation_type"]
-                ),
-                constraint_params={},
-            )
+        for rec in self.signature_rows(report):
+            sig = _signature(rec)
             shape, params, cv = _shape_constraint_params(
                 shapes, rec["shape_id"], rec["constraint_component"], rec["property_path"]
             )
@@ -256,7 +302,7 @@ class Explainer:
         if new_cache_entries and self.cache.path:
             # one save per run (main.py:213-216)
             self.cache.save()
-        return local_relation(self.spark, out_rows, _EXPL_SCHEMA)
+        return out_rows
 
     def explain_full(
         self,
@@ -266,28 +312,35 @@ class Explainer:
         languages: Sequence[str] = ("en",),
         with_context: bool = True,
     ) -> DataFrame:
-        """Fan explanations back out to every violation instance via a
-        broadcast signature join (main.py:218-248)."""
-        expl = self.explain(report, shapes, df, languages, with_context)
+        """Fan explanations back out to every violation instance
+        (main.py:218-248): `signature_id`, the violation columns, then
+        one row per explanation language of the violation's signature,
+        as a left join on `signature_id` would give. The explanations
+        ride in the plan as a literal map from signature id to an array
+        of per-language structs, and `inline_outer` of the lookup keeps
+        a violation whose signature has no explanation, with NULLs. A
+        broadcast join would collect its small side through a job."""
+        rows = self._explanation_rows(report, shapes, df, languages, with_context)
+        by_sig: dict[str, list[str]] = {}
+        for r in rows:
+            fields = zip(_FANOUT_FIELDS, r[_FANOUT_START:])
+            by_sig.setdefault(r[0], []).append(
+                "named_struct("
+                + ", ".join(f"'{f}', {string_literal(v)}" for f, v in fields)
+                + ")"
+            )
+        entries = ", ".join(
+            f"{quote_string(sid)}, array({', '.join(structs)})"
+            for sid, structs in by_sig.items()
+        )
+        lookup = F.expr(
+            f"inline_outer(try_element_at(CAST(map({entries}) AS "
+            f"{_FANOUT_TYPE}), signature_id))"
+        )
         v = report.violations.withColumn(
-            "signature_id",
-            F.concat(F.lit(f"{XSH}sig_"), signature_id_col()),
+            "signature_id", F.concat(F.lit(f"{XSH}sig_"), signature_id_col())
         )
-        return v.join(
-            F.broadcast(
-                expl.select(
-                    "signature_id",
-                    "language",
-                    "justification_tree",
-                    "retrieved_context",
-                    "natural_language_explanation",
-                    "correction_suggestions",
-                    "provided_by_model",
-                )
-            ),
-            on="signature_id",
-            how="left",
-        )
+        return v.select("signature_id", *report.violations.columns, lookup)
 
     def to_json_report(self, full: DataFrame) -> DataFrame:
         """One JSON document per violation instance

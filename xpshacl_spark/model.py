@@ -9,6 +9,8 @@ being re-parsed out of a SHACL report graph
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import types as T
 
 
@@ -155,6 +157,46 @@ def violation_struct_fields() -> list[T.StructField]:
             "context", T.MapType(T.StringType(), T.StringType()), True
         ),
     ]
+
+
+#: The fields a violation summary keeps of one representative violation,
+#: and the struct that picks it: the least (focus_node, shape_id, value,
+#: message) under Spark's struct ordering, so rows that share a focus
+#: node still give one answer on every run.
+REPRESENTATIVE_FIELDS = ("shape_id", "focus_node", "value", "message", "severity", "context")
+REPRESENTATIVE_ORDER = ("focus_node", "shape_id", "value", "message")
+
+#: The key of a summary entry. `compiler._violation_struct` fills all
+#: four from the shape and constraint, so a suite's keys are known
+#: before it runs.
+SUMMARY_KEY = ("shape_id", "constraint_component", "violation_type", "property_path")
+
+
+def _representative_order(rep: dict) -> tuple:
+    """Sort key of a representative under REPRESENTATIVE_ORDER, as Spark
+    orders the struct: NULL first, strings by code point."""
+    return tuple((rep[f] is not None, rep[f] or "") for f in REPRESENTATIVE_ORDER)
+
+
+def merge_summary(entries, key: Sequence[str] = SUMMARY_KEY) -> list[dict]:
+    """Fold summary entries that agree on the `key` fields into one: the
+    counts are added and the least representative is kept. Each entry
+    is a dict of the SUMMARY_KEY fields, `n_violations` and
+    `representative`; the result keeps the first entry's other fields,
+    in first-seen order."""
+    out: dict[tuple, dict] = {}
+    for e in entries:
+        k = tuple(e[f] for f in key)
+        have = out.get(k)
+        if have is None:
+            out[k] = dict(e)
+            continue
+        have["n_violations"] += e["n_violations"]
+        if _representative_order(e["representative"]) < _representative_order(
+            have["representative"]
+        ):
+            have["representative"] = e["representative"]
+    return list(out.values())
 
 
 def classify(component: str) -> str:

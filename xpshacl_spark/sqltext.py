@@ -6,6 +6,7 @@ method."""
 from __future__ import annotations
 
 import math
+from typing import Optional
 
 
 def quote_ident(name: str) -> str:
@@ -23,6 +24,11 @@ def quote_string(s: str) -> str:
         + s.replace("\\", "\\\\").replace("'", "\\'").replace("{", "\\{")
         + "'"
     )
+
+
+def string_literal(s: Optional[str]) -> str:
+    """`s` as a STRING literal; None is a typed NULL."""
+    return "CAST(NULL AS STRING)" if s is None else quote_string(s)
 
 
 def double_literal(x: float) -> str:
