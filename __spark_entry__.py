@@ -760,59 +760,6 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused single-pass column profiler (relation form, exact distinct
-    for oracle parity; the engine's dict form uses HLL sketches)."""
-    from xpshacl_spark.operators.profile import profile_relation
-
-    li = _load(spark, sf_dir, "lineitem")
-    return profile_relation(li, ["l_quantity", "l_extendedprice", "l_discount"])
-
-
-def q_entropy_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-distribution entropy + distinctness per column (Deequ's
-    Entropy/Distinctness analyzers — per-VALUE counts, which the fused
-    min/max/HLL profiler can't express). One stacked scan, one
-    (column, value) hash agg, per-column rollup over the
-    cardinality-sized distinct relation; entropy rounded to 6 decimals
-    on BOTH engines (FP-order-dependent sum, unigram_logprob
-    precedent); distinctness divides exact longs."""
-    from xpshacl_spark.operators.profile import entropy_relation
-
-    d = _load(spark, sf_dir, "documents")
-    return entropy_relation(d, ["lang", "source"])
-
-
-def q_corr_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation per column pair (Deequ's Correlation
-    analyzer): ONE fused agg of five sums per pair, r assembled with
-    the textbook formula on BOTH engines (never the built-in corr(),
-    whose accumulation differs) and rounded to 6 decimals. One scan,
-    1-row result at any row count."""
-    from xpshacl_spark.operators.profile import correlation_relation
-
-    li = _load(spark, sf_dir, "lineitem")
-    return correlation_relation(
-        li,
-        [
-            ("l_quantity", "l_extendedprice"),
-            ("l_discount", "l_tax"),
-        ],
-    )
-
-
-def q_mi_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mutual information between two categorical columns (Deequ's
-    MutualInformation analyzer): one (x,y) hash agg over the fact
-    table, both marginals and the total derived from the
-    pair-cardinality-sized relation itself (fact scanned ONCE),
-    broadcast joins, term sum rounded to 6dp on both engines."""
-    from xpshacl_spark.operators.profile import mutual_information_relation
-
-    d = _load(spark, sf_dir, "documents")
-    return mutual_information_relation(d, "lang", "source")
-
-
 def q_signature_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explanation pipeline stage 1: violation signature dedup + md5
     signature ids (byte-parity with reference violation_kg.py:88-102)."""
@@ -1095,43 +1042,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("doc_id", "source")
 
 
-def q_salted_skew_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """salt_partitions='auto' end-to-end on a DELIBERATELY skewed group
-    key: ~70% of lineitem rows collapse onto one hot key (-1). The skew
-    probe (compiler._auto_salt, 1% row sample) must decide to salt —
-    guarded at runtime so the driver row is red if the probe ever stops
-    firing — and the salted two-phase count is algebraic, so the result
-    is value-identical to the oracle's plain GROUP BY ... HAVING."""
-    from xpshacl_spark.shapes import GroupMaxCount
-
-    li = _load(spark, sf_dir, "lineitem")
-    # keep row-distinguishing columns: the probe samples on a FULL-ROW
-    # hash, so a frame reduced to the group key alone would sample hot
-    # groups all-or-nothing
-    skewed = li.select(
-        F.when(F.pmod("l_orderkey", F.lit(10)) < 7, F.lit(-1))
-        .otherwise(F.col("l_orderkey"))
-        .cast("long")
-        .alias("gkey"),
-        "l_orderkey",
-        "l_linenumber",
-    )
-    shape = Shape("skewed_card_shape", (GroupMaxCount(("gkey",), 5, column="gkey"),))
-    engine = ValidationEngine(spark)
-    rep = engine.validate(
-        skewed, [shape], key_cols=["gkey"], salt_partitions="auto"
-    )
-    decided = rep.metrics.get("auto_salt", {}).get("gkey", 0)
-    if not decided or decided <= 0:
-        raise AssertionError(
-            f"skew probe failed to salt a 70%-hot key (auto_salt={rep.metrics.get('auto_salt')})"
-        )
-    return rep.violations.select(
-        "gkey",
-        F.element_at(F.col("context"), "actualCount").cast("int").alias("n_rows"),
-    )
-
-
 def q_sqlcheck_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sh:sparql analog — the SQL escape hatch (SURVEY.md §2A #21):
     one row-level SELECT and one GROUP BY/HAVING SELECT (the
@@ -1194,29 +1104,6 @@ def q_drift_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "property_path",
         F.col("value").cast("double").alias("stat_value"),
     )
-
-
-#: fixed two-sample drift spec shared by the Spark query and its oracle
-_DRIFT2 = {"lo": 0.0, "hi": 200.0, "bins": 8,
-           "side_a": "purchase", "side_b": "error"}
-
-
-def q_drift_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-vs-prod drift without a stored baseline: PSI + KS between
-    the `value` distributions of two event populations (purchase vs
-    error), both histograms from ONE tag-union global hash agg
-    (operators.drift.two_sample_drift), statistics in-plan. The oracle
-    recomputes the identical eps-floored double arithmetic from two
-    FILTER-count CTEs."""
-    from xpshacl_spark.operators.drift import two_sample_drift
-
-    ev = _load(spark, sf_dir, "events")
-    d = _DRIFT2
-    a = ev.where(F.col("event_type") == d["side_a"])
-    b = ev.where(F.col("event_type") == d["side_b"])
-    # raw doubles, no rounding: the two engines execute the identical
-    # operation sequence, so the bits match (q_drift_stats precedent)
-    return two_sample_drift(a, b, "value", d["lo"], d["hi"], bins=d["bins"])
 
 
 def q_setpair_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1363,18 +1250,6 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated quantiles per column, all computed in ONE
-    fused aggregation pass (operators.profile.quantiles_relation; the
-    100 TB path swaps in approx_percentile sketches, same plan shape)."""
-    from xpshacl_spark.operators.profile import quantiles_relation
-
-    li = _load(spark, sf_dir, "lineitem")
-    return quantiles_relation(
-        li, ["l_quantity", "l_extendedprice", "l_discount"], (0.25, 0.5, 0.75)
-    )
-
-
 def q_schema_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Physical-schema validation (north-rule "schema + constraint
     validation"): expected columns/types vs the documents table, with a
@@ -1395,27 +1270,6 @@ def q_schema_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         ColumnSpec("author", "string"),
     ]
     return schema_violations(spark, d, specs)
-
-
-def q_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documented 100 TB quantile swap, driver-proven: ONE fused
-    aggregation computes per column the exact percentile over a
-    [q-m, q, q+m] grid AND the approx_percentile sketch (accuracy
-    10^4, rank error 1e-4), and the sketch's rank guarantee is emitted
-    as a CHECKED relation — within_bound = exact(q-m) <= approx(q) <=
-    exact(q+m), m = 0.01 (100x slack). The oracle recomputes exact_q
-    via quantile_cont and asserts within_bound literally TRUE, so this
-    row goes red if the sketch ever violates its bound."""
-    from xpshacl_spark.operators.profile import quantiles_error_bound_relation
-
-    li = _load(spark, sf_dir, "lineitem")
-    return quantiles_error_bound_relation(
-        li,
-        ["l_quantity", "l_extendedprice", "l_discount"],
-        (0.25, 0.5, 0.75),
-        accuracy=10_000,
-        rank_margin=0.01,
-    )
 
 
 def q_skew_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1500,16 +1354,6 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_merge_candidates(d, "text", k=50)
 
 
-def q_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy hitters per column (operators.profile.top_values): grouped
-    count per column (map-side combine absorbs hot keys) + rank window
-    over the tiny aggregated relation."""
-    from xpshacl_spark.operators.profile import top_values
-
-    d = _load(spark, sf_dir, "documents")
-    return top_values(d, ["lang", "source"], k=5)
-
-
 def q_explanations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full explanation pipeline (SURVEY.md §2C): signature dedup ->
     justification trees + context -> deterministic template explanation
@@ -1554,15 +1398,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_ann_ivf_multiprobe": q_ann_ivf_multiprobe,
         "q_ann_lsh_topk": q_ann_lsh_topk,
         "q_unigram_external": q_unigram_external,
-        "q_salted_skew_validation": q_salted_skew_validation,
         "q_dup_span_stats": q_dup_span_stats,
         "q_dedup_incremental": q_dedup_incremental,
         "q_path_value_orders": q_path_value_orders,
         "q_violation_rollup": q_violation_rollup,
         "q_vocabulary": q_vocabulary,
         "q_ann_ivf_topk": q_ann_ivf_topk,
-        "q_quantiles_lineitem": q_quantiles_lineitem,
-        "q_topk_documents": q_topk_documents,
         "q_range_lineitem_qty": q_range_lineitem_qty,
         "q_range_customer_acctbal": q_range_customer_acctbal,
         "q_pattern_part_name": q_pattern_part_name,
@@ -1594,22 +1435,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_fd_orders": q_fd_orders,
         "q_dataset_metrics_documents": q_dataset_metrics_documents,
         "q_conv_conformance": q_conv_conformance,
-        "q_entropy_documents": q_entropy_documents,
-        "q_corr_lineitem": q_corr_lineitem,
-        "q_mi_documents": q_mi_documents,
         "q_transition_events": q_transition_events,
         "q_dense_turns_events": q_dense_turns_events,
         "q_stream_dedup_docs": q_stream_dedup_docs,
         "q_schema_documents": q_schema_documents,
-        "q_quantiles_approx": q_quantiles_approx,
         "q_skew_join_orders": q_skew_join_orders,
-        "q_drift_two_sample": q_drift_two_sample,
         "q_text_parity": q_text_parity,
         "q_bpe_pairs": q_bpe_pairs,
         "q_embed_near_dup": q_embed_near_dup,
         "q_ann_cosine_topk": q_ann_cosine_topk,
         "q_ann_lsh_buckets": q_ann_lsh_buckets,
-        "q_profile_stats": q_profile_stats,
         "q_signature_dedup": q_signature_dedup,
         "q_datatype_events": q_datatype_events,
         "q_bounds_events": q_bounds_events,
@@ -1679,7 +1514,8 @@ _SPAN_CTES = (
 )
 
 
-# double-precision cosine, same op order as operators.dedup.cosine
+# double-precision cosine, same op order as the Spark side: the
+# operators.dedup._dot of the pair over the product of the two norms
 def _cos_sql(a: str, b: str) -> str:
     return (
         f"list_inner_product({a}, {b}) / "
@@ -1940,107 +1776,6 @@ def _ivf_multiprobe_sql(
     )
 
 
-def _quantiles_sql() -> str:
-    cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    qs = [0.25, 0.5, 0.75]
-    return " UNION ALL ".join(
-        f"SELECT '{c}' AS \"column\", CAST({q} AS DOUBLE) AS q, "
-        f"CAST(quantile_cont(CAST({c} AS DOUBLE), {q}) AS DOUBLE) AS quantile "
-        "FROM lineitem"
-        for c in cols
-        for q in qs
-    )
-
-
-def _two_sample_drift_sql() -> str:
-    """Mirror of operators.drift.two_sample_drift: per-bucket FILTER
-    counts for each side, then PSI / KS with the identical eps-floored
-    double arithmetic and term order (left-associative sums, ln of
-    double ratios), so the raw doubles hash-match."""
-    d = _DRIFT2
-    lo, hi, bins = d["lo"], d["hi"], d["bins"]
-    width = (hi - lo) / bins
-    eps = 1e-6
-    v = "CAST(value AS DOUBLE)"
-    # in-range floor clamped to bins-1, mirroring two_sample_drift (an
-    # inexact width can push a value just under hi to floor == bins)
-    conds = [f"({v} < {lo})"]
-    for b in range(bins):
-        conds.append(
-            f"({v} >= {lo} AND {v} < {hi} AND "
-            f"least(CAST(floor(({v} - {lo}) / {width}) AS INT), {bins - 1})"
-            f" = {b})"
-        )
-    conds.append(f"({v} >= {hi})")
-    n = len(conds)
-
-    def _side(tag, etype):
-        cnt = ", ".join(
-            f"count(*) FILTER (WHERE {c}) AS {tag}{j}"
-            for j, c in enumerate(conds)
-        )
-        return (
-            f"{tag} AS (SELECT {cnt} FROM events "
-            f"WHERE event_type = '{etype}' AND value IS NOT NULL)"
-        )
-
-    ta = " + ".join(f"a{j}" for j in range(n))
-    tb = " + ".join(f"b{j}" for j in range(n))
-
-    def _prop(tag, total, j):
-        return (
-            f"(CASE WHEN ({total}) > 0 THEN greatest("
-            f"CAST({tag}{j} AS DOUBLE) / CAST({total} AS DOUBLE), {eps}) "
-            f"ELSE {eps} END)"
-        )
-
-    psi_terms = " + ".join(
-        f"(({_prop('b', tb, j)} - {_prop('a', ta, j)}) * "
-        f"ln({_prop('b', tb, j)} / {_prop('a', ta, j)}))"
-        for j in range(n)
-    )
-    ta_d = f"(CASE WHEN ({ta}) > 0 THEN CAST({ta} AS DOUBLE) ELSE 1.0 END)"
-    tb_d = f"(CASE WHEN ({tb}) > 0 THEN CAST({tb} AS DOUBLE) ELSE 1.0 END)"
-    gaps = []
-    for j in range(n):
-        ca = " + ".join(f"CAST(a{k} AS DOUBLE) / {ta_d}" for k in range(j + 1))
-        cb = " + ".join(f"CAST(b{k} AS DOUBLE) / {tb_d}" for k in range(j + 1))
-        gaps.append(f"abs(({cb}) - ({ca}))")
-    ks = f"greatest({', '.join(gaps)})"
-    return (
-        f"WITH {_side('a', d['side_a'])}, {_side('b', d['side_b'])}, "
-        "j AS (SELECT * FROM a, b) "
-        f"SELECT 'psi' AS stat, ({psi_terms}) AS value FROM j "
-        f"UNION ALL SELECT 'ks', ({ks}) FROM j"
-    )
-
-
-def _quantiles_approx_sql() -> str:
-    # exact_q via quantile_cont; within_bound asserted literally TRUE —
-    # the Spark side computes the sketch-vs-exact bound, so a sketch
-    # guarantee violation turns this driver row red
-    cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    qs = [0.25, 0.5, 0.75]
-    return " UNION ALL ".join(
-        f"SELECT '{c}' AS \"column\", CAST({q} AS DOUBLE) AS q, "
-        f"CAST(quantile_cont(CAST({c} AS DOUBLE), {q}) AS DOUBLE) AS exact_q, "
-        "TRUE AS within_bound FROM lineitem"
-        for c in cols
-        for q in qs
-    )
-
-
-def _topk_sql(k: int = 5) -> str:
-    branches = " UNION ALL ".join(
-        f"SELECT '{c}' AS \"column\", CAST({c} AS VARCHAR) AS value, "
-        "count(*) AS n, CAST(row_number() OVER "
-        f"(ORDER BY count(*) DESC, CAST({c} AS VARCHAR) ASC) AS INT) AS \"rank\" "
-        f"FROM documents WHERE {c} IS NOT NULL GROUP BY {c}"
-        for c in ["lang", "source"]
-    )
-    return f'SELECT * FROM ({branches}) WHERE "rank" <= {k}'
-
-
 def _explanations_sql() -> str:
     """Full value oracle for the explanation pipeline: the deterministic
     template text, signature URI (md5, reference violation_kg.py:88-102
@@ -2200,74 +1935,6 @@ def oracle_sql() -> dict[str, str]:
             "UNION ALL SELECT 'mean', mean_nc FROM m "
             "WHERE mean_nc IS NULL OR mean_nc < 1.0 OR mean_nc > 1e9 "
             "UNION ALL SELECT 'row_count', CAST(rc AS DOUBLE) FROM m WHERE rc < 1"
-        ),
-        "q_mi_documents": (
-            "WITH p AS (SELECT lang AS x, source AS y, count(*) AS cxy "
-            "FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL "
-            "GROUP BY lang, source), "
-            "mx AS (SELECT x, sum(cxy) AS cx FROM p GROUP BY x), "
-            "my AS (SELECT y, sum(cxy) AS cy FROM p GROUP BY y), "
-            "t AS (SELECT sum(cxy) AS n FROM p) "
-            "SELECT 'lang' AS x, 'source' AS y, "
-            "CAST(sum(cxy) AS BIGINT) AS n_pairs, "
-            "round(sum((CAST(cxy AS DOUBLE) / CAST(n AS DOUBLE)) * "
-            "ln(CAST(n AS DOUBLE) * CAST(cxy AS DOUBLE) / "
-            "(CAST(cx AS DOUBLE) * CAST(cy AS DOUBLE)))), 6) AS mi "
-            "FROM p JOIN mx USING (x) JOIN my USING (y) CROSS JOIN t"
-        ),
-        "q_corr_lineitem": (
-            "WITH s AS (SELECT "
-            "count(*) FILTER (WHERE w1) AS n1, "
-            "sum(CASE WHEN w1 THEN CAST(l_quantity AS DOUBLE) END) AS sx1, "
-            "sum(CASE WHEN w1 THEN CAST(l_extendedprice AS DOUBLE) END) AS sy1, "
-            "sum(CASE WHEN w1 THEN CAST(l_quantity AS DOUBLE) * "
-            "CAST(l_extendedprice AS DOUBLE) END) AS sxy1, "
-            "sum(CASE WHEN w1 THEN CAST(l_quantity AS DOUBLE) * "
-            "CAST(l_quantity AS DOUBLE) END) AS sxx1, "
-            "sum(CASE WHEN w1 THEN CAST(l_extendedprice AS DOUBLE) * "
-            "CAST(l_extendedprice AS DOUBLE) END) AS syy1, "
-            "count(*) FILTER (WHERE w2) AS n2, "
-            "sum(CASE WHEN w2 THEN CAST(l_discount AS DOUBLE) END) AS sx2, "
-            "sum(CASE WHEN w2 THEN CAST(l_tax AS DOUBLE) END) AS sy2, "
-            "sum(CASE WHEN w2 THEN CAST(l_discount AS DOUBLE) * "
-            "CAST(l_tax AS DOUBLE) END) AS sxy2, "
-            "sum(CASE WHEN w2 THEN CAST(l_discount AS DOUBLE) * "
-            "CAST(l_discount AS DOUBLE) END) AS sxx2, "
-            "sum(CASE WHEN w2 THEN CAST(l_tax AS DOUBLE) * "
-            "CAST(l_tax AS DOUBLE) END) AS syy2 "
-            "FROM (SELECT *, "
-            "(l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL) AS w1, "
-            "(l_discount IS NOT NULL AND l_tax IS NOT NULL) AS w2 "
-            "FROM lineitem)) "
-            "SELECT 'l_quantity' AS x, 'l_extendedprice' AS y, n1 AS n_pairs, "
-            "CASE WHEN n1 >= 2 AND n1*sxx1 - sx1*sx1 > 0 "
-            "AND n1*syy1 - sy1*sy1 > 0 THEN "
-            "round((n1*sxy1 - sx1*sy1) / "
-            "sqrt((n1*sxx1 - sx1*sx1) * (n1*syy1 - sy1*sy1)), 6) END AS corr "
-            "FROM s "
-            "UNION ALL SELECT 'l_discount', 'l_tax', n2, "
-            "CASE WHEN n2 >= 2 AND n2*sxx2 - sx2*sx2 > 0 "
-            "AND n2*syy2 - sy2*sy2 > 0 THEN "
-            "round((n2*sxy2 - sx2*sy2) / "
-            "sqrt((n2*sxx2 - sx2*sx2) * (n2*syy2 - sy2*sy2)), 6) END AS corr "
-            "FROM s"
-        ),
-        "q_entropy_documents": (
-            "WITH s AS ("
-            "SELECT 'lang' AS col_name, lang AS value FROM documents "
-            "WHERE lang IS NOT NULL "
-            "UNION ALL SELECT 'source', source FROM documents "
-            "WHERE source IS NOT NULL), "
-            "vc AS (SELECT col_name, value, count(*) AS c FROM s "
-            "GROUP BY col_name, value) "
-            "SELECT col_name, CAST(sum(c) AS BIGINT) AS n_values, "
-            "count(*) AS n_distinct, "
-            "CAST(count(*) AS DOUBLE) / CAST(sum(c) AS DOUBLE) "
-            "AS distinctness, "
-            "round(ln(CAST(sum(c) AS DOUBLE)) - "
-            "sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) / "
-            "CAST(sum(c) AS DOUBLE), 6) AS entropy "
-            "FROM vc GROUP BY col_name"
         ),
         "q_conv_conformance": (
             "WITH viol AS ("
@@ -2493,16 +2160,6 @@ def oracle_sql() -> dict[str, str]:
             "(PARTITION BY query_id ORDER BY cos DESC, vec_id) <= 10"
         ),
         "q_ann_lsh_buckets": _lsh_buckets_sql(),
-        "q_profile_stats": (
-            " UNION ALL ".join(
-                f"SELECT '{c}' AS \"column\", count(*) AS n_rows, "
-                f"count(*) - count({c}) AS n_nulls, "
-                f"CAST(min({c}) AS DOUBLE) AS min_value, "
-                f"CAST(max({c}) AS DOUBLE) AS max_value, "
-                f"count(DISTINCT {c}) AS n_distinct FROM lineitem"
-                for c in ["l_quantity", "l_extendedprice", "l_discount"]
-            )
-        ),
         "q_signature_dedup": _signature_sql(),
         "q_datatype_events": (
             "SELECT event_id, props, 'value_type' AS violation_type "
@@ -2645,12 +2302,6 @@ def oracle_sql() -> dict[str, str]:
             "round(n_dup_spans / CAST(n_spans AS DOUBLE), 6) AS dup_ratio "
             "FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id"
         ),
-        "q_salted_skew_validation": (
-            "SELECT gkey, CAST(count(*) AS INT) AS n_rows FROM "
-            "(SELECT CASE WHEN l_orderkey % 10 < 7 THEN -1 "
-            "ELSE l_orderkey END AS gkey FROM lineitem) "
-            "GROUP BY gkey HAVING count(*) > 5"
-        ),
         "q_group_maxcount_clicks": (
             "SELECT user_id, CAST(count(*) AS INT) AS n_clicks FROM events "
             "WHERE event_type = 'click' GROUP BY 1 HAVING count(*) > 15"
@@ -2720,7 +2371,6 @@ def oracle_sql() -> dict[str, str]:
         "q_ann_ivf_topk": _ivf_topk_sql(),
         "q_ann_ivf_multiprobe": _ivf_multiprobe_sql(),
         "q_ann_lsh_topk": _lsh_topk_sql(),
-        "q_quantiles_lineitem": _quantiles_sql(),
         "q_stream_dedup_docs": (
             f"SELECT doc_id, CAST(rn - 1 AS BIGINT) AS n_prior FROM "
             f"(SELECT doc_id, row_number() OVER (PARTITION BY md5({_NORM}) "
@@ -2753,8 +2403,6 @@ def oracle_sql() -> dict[str, str]:
             "a.dtype FROM actual a "
             "WHERE a.name NOT IN (SELECT name FROM spec)"
         ),
-        "q_quantiles_approx": _quantiles_approx_sql(),
-        "q_drift_two_sample": _two_sample_drift_sql(),
         "q_skew_join_orders": (
             "WITH sk AS (SELECT CASE WHEN o_orderkey % 10 < 7 THEN 1 "
             "ELSE o_custkey END AS custkey FROM orders) "
@@ -2763,7 +2411,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM sk JOIN customer ON custkey = c_custkey "
             "GROUP BY c_mktsegment"
         ),
-        "q_topk_documents": _topk_sql(),
         "q_text_parity": (
             # identical deterministic perturbation + FULL OUTER JOIN;
             # IS DISTINCT FROM == Spark's ~eqNullSafe. Classification

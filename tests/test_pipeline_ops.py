@@ -21,7 +21,6 @@ from xpshacl_spark.operators.dedup import (
     simhash,
     simhash_pairs,
 )
-from xpshacl_spark.operators.profile import profile_relation
 from xpshacl_spark.operators.similarity import (
     cosine_topk,
     hyperplanes,
@@ -260,21 +259,6 @@ def test_shingle_fingerprint_short_doc_null(spark):
 
 
 # ---------------------------------------------------------------------------
-# column profiling
-# ---------------------------------------------------------------------------
-
-
-def test_profile_relation(spark):
-    df = spark.createDataFrame(
-        [(1.0,), (2.0,), (None,), (2.0,)], "x double"
-    )
-    r = profile_relation(df, ["x"]).collect()[0]
-    assert (r.n_rows, r.n_nulls, r.min_value, r.max_value, r.n_distinct) == (
-        4, 1, 1.0, 2.0, 2,
-    )
-
-
-# ---------------------------------------------------------------------------
 # deterministic sampling
 # ---------------------------------------------------------------------------
 
@@ -316,30 +300,6 @@ def test_ivf_ann_subset_and_nprobe_monotone(spark, vecs):
     assert got1 <= got3              # more probes never lose candidates
     assert got3 == exact             # nprobe = n_cells degrades to brute force
     assert any(v == 1 for _, v in got1)  # near-dup shares the query's cell
-
-
-# ---------------------------------------------------------------------------
-# heavy hitters + quantiles
-# ---------------------------------------------------------------------------
-
-
-def test_top_values(spark):
-    from xpshacl_spark.operators.profile import top_values
-
-    df = spark.createDataFrame(
-        [("x",)] * 5 + [("y",)] * 3 + [("z",)] * 3 + [(None,)],
-        "c string",
-    )
-    rows = sorted(top_values(df, ["c"], k=2).collect(), key=lambda r: r.rank)
-    assert [(r.value, r.n, r.rank) for r in rows] == [("x", 5, 1), ("y", 3, 2)]
-
-
-def test_quantiles_relation_exact(spark):
-    from xpshacl_spark.operators.profile import quantiles_relation
-
-    df = spark.createDataFrame([(float(x),) for x in range(1, 6)], "x double")
-    got = {r.q: r.quantile for r in quantiles_relation(df, ["x"], (0.25, 0.5)).collect()}
-    assert got[0.25] == 2.0 and got[0.5] == 3.0
 
 
 def test_duplicate_clusters_transitive(spark):

@@ -1,10 +1,8 @@
-"""Plan-shape regression guards + salted-aggregation equivalence.
+"""Plan-shape regression guards.
 
 The physical-plan assertions pin the scale-critical properties audited
 in PLANS.md: parquet predicate pushdown from the fused row scan, column
 pruning, broadcast anti-joins for dims, and single shared aggregations.
-The salt test pins that the explicit two-phase salted aggregation
-(hot-key mitigation) is EXACT — same violation rows as the plain path.
 """
 
 import os
@@ -93,28 +91,6 @@ def test_group_checks_share_one_aggregation(spark):
     assert plan.count("Exchange hashpartitioning(conv_id") == 1
 
 
-def test_salted_aggregation_exact(spark):
-    """salt_partitions > 1 (two-phase agg for hot keys) must return the
-    IDENTICAL violation relation — counts are algebraic. The datagen's
-    ~1% hot conversations have ~100x turns, so this exercises real
-    skew, not a degenerate case."""
-    df = transcripts(spark, n_convs=300).localCheckpoint()
-    shapes = [
-        Shape(
-            "card",
-            (GroupMinCount(("conv_id",), 1, where="role = 'assistant'"),),
-        )
-    ]
-    engine = ValidationEngine(spark)
-    plain = engine.validate(df, shapes, key_cols=["conv_id", "turn_idx"])
-    salted = engine.validate(
-        df, shapes, key_cols=["conv_id", "turn_idx"], salt_partitions=8
-    )
-    a = sorted(map(repr, plain.ordered().collect()))
-    b = sorted(map(repr, salted.ordered().collect()))
-    assert a == b and len(a) > 0
-
-
 def test_text_analyze_single_scan_no_shuffle(spark, tmp_path):
     """The fused text profile is one parquet scan that tokenizes once
     (exactly one split(... \\s+ ...) in the plan). The only exchange
@@ -151,36 +127,6 @@ def test_ivf_probe_is_broadcast_hash_join(spark):
     assert "BroadcastHashJoin" in _plan(out)  # equi-join on cell, nprobe=1
 
 
-def test_auto_salt_detects_skew_and_stays_exact(spark):
-    """salt_partitions='auto': a pathological hot key triggers explicit
-    two-phase salting; a uniform key does not; and the salted relation
-    equals the unsalted one either way (counts are algebraic)."""
-    from xpshacl_spark.shapes import GroupMaxCount
-
-    hot = spark.range(20000).selectExpr(
-        "'hot' AS conv_id", "id AS turn_idx"
-    )
-    cold = spark.range(2000).selectExpr(
-        "concat('c', CAST(id % 400 AS STRING)) AS conv_id", "id AS turn_idx"
-    )
-    df = hot.unionByName(cold)
-    shapes = [Shape("g", (GroupMaxCount(("conv_id",), 10, column="conv_id"),))]
-    engine = ValidationEngine(spark)
-
-    rep_auto = engine.validate(df, shapes, key_cols=["turn_idx", "conv_id"],
-                               salt_partitions="auto")
-    assert rep_auto.metrics["auto_salt"]["conv_id"] > 1  # skew detected
-    rep_plain = engine.validate(df, shapes, key_cols=["turn_idx", "conv_id"])
-    assert sorted(map(repr, rep_auto.violations.collect())) == sorted(
-        map(repr, rep_plain.violations.collect())
-    )
-
-    rep_uniform = engine.validate(
-        cold, shapes, key_cols=["turn_idx", "conv_id"], salt_partitions="auto"
-    )
-    assert rep_uniform.metrics["auto_salt"]["conv_id"] == 0  # no salting
-
-
 def test_vocabulary_topk_is_distributed(spark):
     """vocabulary must plan the top-k as TakeOrderedAndProject (per-task
     k-row heaps) — the only unpartitioned Window sorts the <=k-row
@@ -201,23 +147,6 @@ def test_vocabulary_topk_is_distributed(spark):
     below_limit = plan[plan.index("TakeOrderedAndProject"):]
     assert "Window" not in below_limit
     assert "Exchange SinglePartition" not in below_limit
-
-
-def test_top_values_per_column_topk_is_distributed(spark):
-    """top_values must take each column's top-k BEFORE the union (one
-    TakeOrderedAndProject per column); the rank window only ever sees
-    k*|columns| rows, so a high-cardinality column cannot funnel its
-    full distinct-value relation through one window task."""
-    from xpshacl_spark.operators.profile import top_values
-
-    df = spark.createDataFrame(
-        [(i, "the quick brown fox") for i in range(20)],
-        "doc_id long, text string",
-    ).selectExpr("cast(doc_id % 3 as string) AS lang", "text")
-    plan = _plan(top_values(df, ["lang", "text"], k=2))
-    assert plan.count("TakeOrderedAndProject") == 2
-    below_first_limit = plan[plan.index("TakeOrderedAndProject"):]
-    assert "Window" not in below_first_limit
 
 
 def test_repetition_stats_single_scan_no_join(spark, tmp_path):
@@ -674,39 +603,3 @@ def test_unique_rides_window_exchange(spark):
     )
     want = sorted(map(repr, solo.violations.collect()))
     assert uniq_rows == want and len(want) > 0
-
-
-def test_profile_relation_exact_distinct_no_expand(spark):
-    """profile_relation's exact count_distincts must not fuse into one
-    multi-distinct aggregate: that plans an Expand replicating every
-    input row (len(columns)+1)x before aggregating. Each distinct runs
-    as its own single-distinct agg attached by a 1-row cross-join, so
-    the plan must contain no Expand and the values must match the fused
-    form."""
-    from xpshacl_spark.operators.profile import profile_relation
-
-    df = spark.createDataFrame(
-        [(float(i % 7), float(i % 3), None if i % 5 == 0 else float(i))
-         for i in range(200)],
-        "a double, b double, c double",
-    )
-    rel = profile_relation(df, ["a", "b", "c"])
-    plan = _plan(rel)
-    assert "Expand" not in plan, plan
-    got = {r.column: r for r in rel.collect()}
-    fused = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[x for cname in ("a", "b", "c") for x in (
-            F.count(F.col(cname)).alias(f"c_{cname}"),
-            F.min(F.col(cname)).cast("double").alias(f"mn_{cname}"),
-            F.max(F.col(cname)).cast("double").alias(f"mx_{cname}"),
-            F.count_distinct(F.col(cname)).alias(f"d_{cname}"),
-        )],
-    ).collect()[0]
-    for cname in ("a", "b", "c"):
-        r = got[cname]
-        assert (r.n_rows, r.n_nulls, r.min_value, r.max_value,
-                r.n_distinct) == (
-            fused["n"], fused["n"] - fused[f"c_{cname}"],
-            fused[f"mn_{cname}"], fused[f"mx_{cname}"], fused[f"d_{cname}"],
-        )

@@ -253,57 +253,6 @@ def test_simhash_pairs_pigeonhole_recall_exact(spark, docs, h):
 
 
 @given(
-    xs_a=st.lists(
-        st.floats(min_value=-5.0, max_value=15.0, allow_nan=False),
-        min_size=0, max_size=40,
-    ),
-    xs_b=st.lists(
-        st.floats(min_value=-5.0, max_value=15.0, allow_nan=False),
-        min_size=0, max_size=40,
-    ),
-    bins=st.integers(min_value=1, max_value=6),
-)
-@SLOW
-def test_two_sample_drift_matches_reference_stats(spark, xs_a, xs_b, bins):
-    """PROPERTY: for arbitrary value lists (including empties and
-    out-of-range values hitting the underflow/overflow buckets), the
-    in-plan two-sample PSI/KS equal psi_statistic/ks_statistic computed
-    over python-binned counts. Bin edges [0, 10)."""
-    import math
-
-    from xpshacl_spark.operators.drift import (
-        ks_statistic,
-        psi_statistic,
-        two_sample_drift,
-    )
-
-    lo, hi = 0.0, 10.0
-    width = (hi - lo) / bins
-
-    def counts(xs):
-        c = [0] * (bins + 2)
-        for v in xs:
-            if v < lo:
-                c[0] += 1
-            elif v >= hi:
-                c[-1] += 1
-            else:
-                c[1 + min(int(math.floor((v - lo) / width)), bins - 1)] += 1
-        return c
-
-    a = spark.createDataFrame([(float(v),) for v in xs_a], "x double")
-    b = spark.createDataFrame([(float(v),) for v in xs_b], "x double")
-    got = {
-        r.stat: r.value
-        for r in two_sample_drift(a, b, "x", lo, hi, bins=bins).collect()
-    }
-    want_psi = psi_statistic(counts(xs_a), counts(xs_b))
-    want_ks = ks_statistic(counts(xs_a), counts(xs_b))
-    assert abs(got["psi"] - want_psi) < 1e-9
-    assert abs(got["ks"] - want_ks) < 1e-9
-
-
-@given(
     xs=st.lists(
         st.one_of(
             st.none(),

@@ -10,8 +10,8 @@ which violations are *born* structured. Scale design (SURVEY.md §7):
   input, whole-stage codegen, column pruning to the union of referenced
   columns, zero shuffles.
 * Group constraints sharing a group-by key share ONE hash aggregation
-  (map-side partial aggregation makes counts skew-safe; an optional
-  explicit two-phase salted aggregation is provided for extreme keys).
+  (map-side partial aggregation collapses a hot key's rows before the
+  shuffle, so counts need no salting).
 * Ordering constraints sharing (partition, order) share ONE window
   (one shuffle + sort).
 * Referential constraints compile to broadcast LEFT ANTI joins.
@@ -290,40 +290,25 @@ class ValidationEngine:
         df: DataFrame,
         shapes: Sequence[Shape],
         key_cols: Sequence[str],
-        salt_partitions: int | str = 0,
     ) -> ValidationReport:
         """Evaluate all shapes; return the violations relation.
 
-        salt_partitions > 0 enables the explicit two-phase salted
-        aggregation for group counts (hot-key mitigation; counts are
-        algebraic so the two-phase result is exact).
-        salt_partitions="auto" probes a 1% deterministic key sample per
-        group key and salts only when a hot key dominates (see
-        _auto_salt); the decision is recorded in report.metrics.
+        Only the plan is built here: the checks run when the violations
+        are read. The one job this can start is a referential check's
+        first membership probe of a dimension, which the engine
+        memoises.
         """
         key_cols = list(key_cols)
         t0 = time.monotonic()
         # first, so a bad whole-table declaration raises before any
         # probe job runs
         dataset_parts = self._compile_dataset_checks(df, shapes, key_cols)
-        auto_salt: dict[str, int] = {}
-        if salt_partitions == "auto":
-            gkeys = {
-                tuple(c.group_by)
-                for s in shapes
-                for c in s.group_constraints()
-                if isinstance(c, (GroupMinCount, GroupMaxCount))
-            }
-            auto_salt = {
-                ",".join(g): self._auto_salt(df, list(g)) for g in sorted(gkeys)
-            }
-            salt_partitions = max(auto_salt.values(), default=0)
         parts: list[DataFrame] = []
 
         row_df = self._compile_row_checks(df, shapes, key_cols)
         if row_df is not None:
             parts.append(row_df)
-        parts.extend(self._compile_group_checks(df, shapes, key_cols, salt_partitions))
+        parts.extend(self._compile_group_checks(df, shapes, key_cols))
         # a Unique whose columns are exactly a window-family spec's
         # (group key + order col) AND the validation key rides that
         # family's existing exchange+sort instead of its own groupBy
@@ -379,45 +364,7 @@ class ValidationEngine:
             "n_plan_parts": len(parts),
             "compile_sec": time.monotonic() - t0,
         }
-        if auto_salt:
-            metrics["auto_salt"] = auto_salt
         return ValidationReport(violations, key_cols, metrics)
-
-    def _auto_salt(
-        self,
-        df: DataFrame,
-        gkey: list[str],
-        sample_mod: int = 100,
-        skew_factor: float = 8.0,
-        max_salt: int = 64,
-    ) -> int:
-        """Probe group-key skew on a deterministic ~1% ROW sample (hash
-        of the full row — hashing just the key would keep or drop whole
-        groups, making it blind to the very hot key it is looking for)
-        and pick a salt width from the sampled max/mean group-count
-        ratio. One cheap narrow-column job.
-
-        Returns 0 (no explicit salting needed — Spark's map-side combine
-        absorbs ordinary hot keys) unless the sampled max group count
-        exceeds skew_factor x the sampled mean, in which case the salt
-        is the overshoot ratio capped at max_salt. Counts are algebraic,
-        so any salt width is exact — this only tunes the shuffle shape.
-        """
-        row_hash = F.xxhash64(*[F.col(c) for c in df.columns])
-        probe = (
-            df.where(F.pmod(row_hash, F.lit(sample_mod)) == 0)
-            .select(*gkey)
-            .groupBy(*gkey)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .agg(F.max("_n").alias("mx"), F.avg("_n").alias("mean"))
-            .collect()[0]
-        )
-        if probe["mx"] is None or not probe["mean"]:
-            return 0
-        ratio = probe["mx"] / probe["mean"]
-        if ratio < skew_factor:
-            return 0
-        return min(max_salt, int(ratio))
 
     # ------------------------------------------------------------------
     # row-level: ONE fused scan for every row constraint of every shape
@@ -497,7 +444,6 @@ class ValidationEngine:
         df: DataFrame,
         shapes: Sequence[Shape],
         key_cols: list[str],
-        salt_partitions: int,
     ) -> list[DataFrame]:
         # bucket (shape, constraint) pairs by group key tuple
         by_key: dict[tuple, list] = {}
@@ -507,9 +453,7 @@ class ValidationEngine:
                     by_key.setdefault(tuple(c.group_by), []).append((shape, c))
         outs = []
         for gkey, pairs in by_key.items():
-            outs.append(
-                self._group_count_plan(df, list(gkey), pairs, key_cols, salt_partitions)
-            )
+            outs.append(self._group_count_plan(df, list(gkey), pairs, key_cols))
         return outs
 
     def _group_count_plan(
@@ -518,7 +462,6 @@ class ValidationEngine:
         gkey: list[str],
         pairs: list,
         key_cols: list[str],
-        salt_partitions: int,
     ) -> DataFrame:
         aggs = []
         for i, (shape, c) in enumerate(pairs):
@@ -527,25 +470,9 @@ class ValidationEngine:
                 cond = cond & F.coalesce(F.expr(c.where), F.lit(False))
             aggs.append((f"_n{i}", cond))
 
-        if salt_partitions > 1:
-            # explicit two-phase salted aggregation: counts are algebraic,
-            # so groupBy(key, salt) partials then groupBy(key) finals are
-            # exact. Spark's hash-agg partial combine already does this
-            # implicitly; the explicit form guards extreme single-key skew
-            # where one reducer would still receive a monster partition.
-            salt = F.pmod(F.xxhash64(*[F.col(k) for k in df.columns]), F.lit(salt_partitions))
-            partial = (
-                df.withColumn("_salt", salt)
-                .groupBy(*gkey, "_salt")
-                .agg(*[F.count(F.when(cond, 1)).alias(name) for name, cond in aggs])
-            )
-            counts = partial.groupBy(*gkey).agg(
-                *[F.sum(name).alias(name) for name, _ in aggs]
-            )
-        else:
-            counts = df.groupBy(*gkey).agg(
-                *[F.count(F.when(cond, 1)).alias(name) for name, cond in aggs]
-            )
+        counts = df.groupBy(*gkey).agg(
+            *[F.count(F.when(cond, 1)).alias(name) for name, cond in aggs]
+        )
 
         # key-universe join for min-count: a group with ZERO matching rows
         # may be entirely absent from `counts` (or absent from df); join

@@ -962,12 +962,6 @@ def _dot(a: Column, b: Column, dim: Optional[int] = None) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dim: Optional[int] = None) -> Column:
-    return _dot(a, b, dim) / (
-        F.sqrt(_dot(a, a, dim)) * F.sqrt(_dot(b, b, dim))
-    )
-
-
 def _blocked_near_dup_pairs_np(
     emb: DataFrame,
     id_col: str,

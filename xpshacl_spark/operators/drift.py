@@ -1,12 +1,12 @@
 """Distribution-drift statistics over merged histogram bins.
 
 The per-bin counts come from one fused Spark aggregation (the
-compiler's whole-table aggregation, profile's and two_sample_drift's),
-each counted by count_array over a bucket column projected before the
+compiler's whole-table aggregation or profile's), each counted by
+histogram_counts over a bucket column projected before the
 aggregation, so each row is bucketed once. histogram_bucket is the one
-bucketing of a profile histogram and a Drift check; two_sample_drift
-is the only bucketing that clamps in-range values into the last bin
-instead. PSI and KS over the counts are Column expressions
+bucketing of a profile histogram and a Drift check, so a profile
+histogram is a Drift baseline bin for bin.
+PSI and KS over the counts are Column expressions
 (psi_column / ks_column) in the same plan: no collect, no driver-side
 arithmetic. psi_statistic / ks_statistic are the Python references.
 Deterministic given fixed bins (SURVEY.md §4 custom item 2). The
@@ -130,8 +130,8 @@ def ks_column(baseline: str, current: str) -> Column:
 
 def check_bins(lo: float, hi: float, bins: int) -> None:
     """Reject a fixed-bin histogram with a non-finite bound, no bin or
-    an empty range: the one declaration check of profile's HistSpec,
-    the compiler's Drift and two_sample_drift."""
+    an empty range: the one declaration check of profile's HistSpec
+    and the compiler's Drift."""
     if not (math.isfinite(lo) and math.isfinite(hi)):
         raise ValueError(f"histogram needs finite lo and hi, got [{lo}, {hi})")
     if bins < 1 or hi <= lo:
@@ -139,17 +139,6 @@ def check_bins(lo: float, hi: float, bins: int) -> None:
             f"histogram needs bins >= 1 and lo < hi, got bins={bins} "
             f"over [{lo}, {hi})"
         )
-
-
-def count_array(bucket: str, ids: Sequence[int]) -> Column:
-    """One array<bigint> aggregate of per-bucket row counts,
-    array(count(bucket = j) for j in ids), for the SQL expression
-    `bucket`. A row whose bucket is NULL counts nowhere, so callers
-    exclude rows by nulling their bucket; an empty input gives 0s, not
-    NULLs. `bucket` is repeated once per id, so callers pass a column
-    they projected, not the expression that computes it."""
-    counts = ", ".join(f"count(CASE WHEN {bucket} = {j} THEN 1 END)" for j in ids)
-    return F.expr(f"array({counts})")
 
 
 def histogram_bucket(e: str, lo: float, hi: float, bins: int) -> str:
@@ -175,60 +164,12 @@ def histogram_bucket(e: str, lo: float, hi: float, bins: int) -> str:
 
 def histogram_counts(bucket: str, bins: int) -> Column:
     """The histogram of a projected histogram_bucket column `bucket` as
-    one array<bigint> aggregate: [underflow, b0..b(bins-1), overflow]."""
-    return count_array(bucket, range(-1, bins + 1))
-
-
-def two_sample_drift(
-    df_a,
-    df_b,
-    expression: str,
-    lo: float,
-    hi: float,
-    bins: int = 64,
-    eps: float = 1e-6,
-):
-    """Two-sample PSI + KS between the distributions of `expression` in
-    df_a (baseline side, e.g. the training corpus) and df_b (current
-    side, e.g. this week's ingest) over shared fixed equi-width bins
-    with underflow/overflow buckets — the train-vs-prod counterpart of
-    the stored-baseline Drift constraint.
-
-    Plan: tag-union the two (bucket) projections and run ONE global
-    hash aggregation with 2*(bins+2) conditional counts (map-side
-    partials; the shuffle carries one row of ints per map partition) —
-    a single pass over both inputs, no groupBy key, no collect. The
-    one-row result holds the two count arrays; psi_column / ks_column
-    turn them into the two statistics, exactly psi_statistic /
-    ks_statistic's arithmetic, so an ANSI-SQL oracle reproduces the
-    doubles. In-range values are floor-binned with a clamp to bins-1:
-    width = (hi-lo)/bins is inexact in doubles, and an unclamped floor
-    can emit `bins` for a value just under hi. This clamp is a different
-    contract from histogram_counts', which files that value as overflow,
-    so a profile histogram is not this function's bin counts."""
-    check_bins(lo, hi, bins)
-    lo_, hi_ = double_literal(lo), double_literal(hi)
-    width = double_literal((hi - lo) / bins)
-    bucket = (
-        f"CASE WHEN _v < {lo_} THEN -1 WHEN _v >= {hi_} THEN {bins} "
-        f"ELSE least(CAST(floor((_v - {lo_}) / {width}) AS INT), {bins - 1}) END"
+    one array<bigint> aggregate: [underflow, b0..b(bins-1), overflow],
+    array(count(bucket = j) for j in -1..bins). A row whose bucket is
+    NULL counts nowhere; an empty input gives 0s, not NULLs. `bucket`
+    is repeated once per bin, so callers pass a column they projected,
+    not the expression that computes it."""
+    counts = ", ".join(
+        f"count(CASE WHEN {bucket} = {j} THEN 1 END)" for j in range(-1, bins + 1)
     )
-
-    def _bucket(df, tag):
-        proj = df.selectExpr(f"CAST(({expression}) AS DOUBLE) AS _v")
-        return proj.where("_v IS NOT NULL").selectExpr(
-            f"{bucket} AS _b", f"{tag} AS _t"
-        )
-
-    u = _bucket(df_a, 0).unionByName(_bucket(df_b, 1))
-
-    ids = range(-1, bins + 1)  # underflow + bins + overflow
-    row = u.agg(
-        count_array("CASE WHEN _t = 0 THEN _b END", ids).alias("_ca"),
-        count_array("CASE WHEN _t = 1 THEN _b END", ids).alias("_cb"),
-    )
-    structs = F.array(
-        F.struct(F.lit("psi").alias("stat"), psi_column("_ca", "_cb", eps).alias("value")),
-        F.struct(F.lit("ks").alias("stat"), ks_column("_ca", "_cb").alias("value")),
-    )
-    return row.select(F.inline(structs))
+    return F.expr(f"array({counts})")

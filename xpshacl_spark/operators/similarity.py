@@ -28,7 +28,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from xpshacl_spark.operators.dedup import _dot, cosine
+from xpshacl_spark.operators.dedup import _dot
 
 
 def hyperplanes(num_planes: int, dim: int, seed: str = "lsh") -> list[list[int]]:
